@@ -103,9 +103,10 @@ def main() -> None:
         "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
         # Keep collect_list rollups in the object hash map: the default
         # fallback (128 keys/task) degrades to serialize-sort-merge, which
-        # triples the rollup stage's memory traffic (measured in
-        # bench/profile_stages.py). Per-task state here = a partition's
-        # conversations — bounded by input partition sizing.
+        # triples the rollup stage's memory traffic (per-stage numbers:
+        # erbench/run.py --workload transcripts_batch --trace 1). Per-task
+        # state here = a partition's conversations — bounded by input
+        # partition sizing.
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "131072",
     }
     # Shuffle scratch on RAM-disk when available: the sandbox VM's single
@@ -149,9 +150,7 @@ def main() -> None:
         "connected_components",
     ]
     qs = entry_mod.queries()
-    timings: dict[str, float] = {}
     trials: dict[str, list] = {}
-    noisy: list[str] = []
     # Steady-state + interference-robust protocol (round-3 verdict: the
     # old per-query best-of-2 reported phantom regressions that isolated
     # re-runs disproved — a single interference window hit both trials of
@@ -166,8 +165,9 @@ def main() -> None:
     #   cover a whole invocation — interleaving alone can't absorb that.
     # - up to EXTRA_ROUNDS more passes re-run only the queries that have
     #   no quiet trial yet (steal < 1%).
-    # - the per-query headline is the MIN over quiet trials (noise on
-    #   this shared VM is one-sided — it only ever slows a run down); if
+    # - the per-query headline is the MIN over quiet trials, pooled
+    #   across invocations by _pool_headlines (noise on this shared VM
+    #   is one-sided — it only ever slows a run down); if
     #   a query never saw a quiet window, min over all trials, and the
     #   query is listed under "noisy" so the reader knows the number is
     #   an upper bound. Per-trial [sec, steal_pct] pairs are emitted
@@ -188,14 +188,6 @@ def main() -> None:
     def _has_quiet(name: str) -> bool:
         return any(sp < _QUIET_STEAL_PCT for _, sp in trials.get(name, []))
 
-    def _headline(name: str) -> float:
-        ts = trials[name]
-        quiet = [sec for sec, sp in ts if sp < _QUIET_STEAL_PCT]
-        if quiet:
-            return min(quiet)
-        noisy.append(name)
-        return min(sec for sec, _ in ts)
-
     dfs = {n: qs[n](spark, sf_dir) for n in bench_queries if n in qs}
     for rnd in range(TIMED_ROUNDS + 1 + EXTRA_ROUNDS):
         for name, df in dfs.items():
@@ -210,8 +202,6 @@ def main() -> None:
             )
         if rnd >= TIMED_ROUNDS and all(_has_quiet(n) for n in dfs):
             break
-    for name in dfs:
-        timings[name] = _headline(name)
 
     # north-star throughput: transcript ER pipeline, conversations/sec.
     # Input is generated+cached first so the timing covers the PIPELINE
@@ -245,7 +235,6 @@ def main() -> None:
         if i >= TIMED_ROUNDS and _has_quiet("transcripts_match"):
             break
         _timed_trial("transcripts_match", _run_pipeline)
-    timings["transcripts_match"] = _headline("transcripts_match")
 
     # Pairwise quality vs datagen truth (untimed, one extra pipeline run):
     # reported ALONGSIDE throughput so a config-driven cluster-count shift
@@ -271,22 +260,34 @@ def main() -> None:
     if os.path.exists(_HEADLINE_POOL):
         with open(_HEADLINE_POOL) as f:
             hist = json.load(f)
-    sf_entry, pooled, pooled_noisy = _pool_headlines(
-        hist, code_hash, sf, trials
+    _emit_result(
+        hist, code_hash, sf, trials, n_convs, n_clusters, quality,
+        os.path.join(_REPO, "bench", "scaling_results.json"),
     )
     os.makedirs(os.path.dirname(_HEADLINE_POOL), exist_ok=True)
     with open(_HEADLINE_POOL, "w") as f:
         json.dump(hist, f, indent=1)
 
-    # headline = pooled min (this invocation's trials are in the pool)
-    timings = {name: pooled[name] for name in timings}
-    noisy = pooled_noisy
-    convs_per_sec = round(n_convs / timings["transcripts_match"], 1)
 
-    total = round(sum(timings.values()), 3)
+def _emit_result(
+    hist: dict,
+    code_hash: str,
+    sf: str,
+    trials: dict[str, list],
+    n_convs: int,
+    n_clusters: int,
+    quality: dict[str, float],
+    scaling_path: str,
+) -> dict:
+    """Pool this invocation's ``trials`` into ``hist`` (mutated, see
+    :func:`_pool_headlines`), print the ONE JSON result line and return
+    it. Headline per query = pooled min (this invocation's trials are in
+    the pool); ``trials`` must hold ``transcripts_match``."""
+    sf_entry, pooled, noisy = _pool_headlines(hist, code_hash, sf, trials)
+    timings = {name: pooled[name] for name in trials}
     out = {
         "metric": "headline_queries_total_time",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "trials": trials,
@@ -294,13 +295,15 @@ def main() -> None:
         "sf": sf,
         "pooled": {
             "code_hash": code_hash,
-            "invocations": entry["invocations"],
+            "invocations": hist[code_hash]["invocations"],
             "n_trials": {name: len(ts) for name, ts in sf_entry.items()},
         },
         "transcripts": {
             "conversations": n_convs,
             "clusters": n_clusters,
-            "conversations_per_sec": convs_per_sec,
+            "conversations_per_sec": round(
+                n_convs / timings["transcripts_match"], 1
+            ),
             "f1": round(quality["f1"], 5),
             "precision": round(quality["precision"], 5),
             "recall": round(quality["recall"], 5),
@@ -308,12 +311,8 @@ def main() -> None:
     }
     # Surface the recorded N->4N scaling evidence (bench/scaling.py runs,
     # protocol + analysis in BENCH.md) so this one line carries it too.
-    results_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "bench", "scaling_results.json",
-    )
-    if os.path.exists(results_path):
-        with open(results_path) as f:
+    if os.path.exists(scaling_path):
+        with open(scaling_path) as f:
             recorded = json.load(f)
         out["scaling"] = {
             pair: {
@@ -327,6 +326,7 @@ def main() -> None:
             for pair, r in recorded.items()
         }
     print(json.dumps(out))
+    return out
 
 
 if __name__ == "__main__":

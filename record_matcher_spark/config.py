@@ -81,8 +81,8 @@ class MatchConfig:
         Blocking keys ``{y_col: x_col}``: candidate pairs require
         string-equality of every mapped pair (reference records.py:106-132,
         invoked per-x at matcher.py:179-182). Empty => cross join (the
-        reference compares every x against every y; at scale a blocking
-        spec is mandatory — `require_blocking` guards this).
+        reference compares every x against every y), so large inputs
+        need a blocking spec.
     columns_to_get:
         Enrichment projection ``{y_col: x_col_target}``: on a single
         surviving match, copy y values into (possibly new) x columns
@@ -198,10 +198,7 @@ class MatchConfig:
     # -- validation --------------------------------------------------------
 
     def validate(
-        self,
-        x_columns: Iterable[str],
-        y_columns: Iterable[str],
-        require_blocking: bool = False,
+        self, x_columns: Iterable[str], y_columns: Iterable[str]
     ) -> None:
         """Validate against the bound DataFrame schemas.
 
@@ -237,10 +234,3 @@ class MatchConfig:
             raise InvalidConfigError(f"x_id column {self.x_id!r} not in x schema")
         if self.y_id not in ys:
             raise InvalidConfigError(f"y_id column {self.y_id!r} not in y schema")
-        if require_blocking and not self.columns_to_group:
-            raise InvalidConfigError(
-                "Blocking keys required at scale: empty columns_to_group means a "
-                "cross join (reference records.py:123-131 passes all y when the "
-                "map is empty) — supply columns_to_group or set "
-                "require_blocking=False for small inputs"
-            )

@@ -71,7 +71,11 @@ from record_matcher_spark.operators.scoring import (
     score_candidate_pairs,
     uniqueness_by_columns,
 )
-from record_matcher_spark.pipeline import default_transcript_match_config
+from record_matcher_spark.pipeline import (
+    EDGE_MODES,
+    default_transcript_match_config,
+    match_edges,
+)
 
 
 @dataclass
@@ -125,7 +129,6 @@ def match_increment(
     cfg: MatchConfig | None = None,
     *,
     edge_mode: str = "threshold",
-    edge_statuses: tuple[str, ...] = ("matched", "review"),
     uniqueness: Mapping[str, float] | None = None,
     cache: bool = True,
 ) -> IncrementResult:
@@ -138,9 +141,9 @@ def match_increment(
     produced ``base_clusters``); any extra columns are ignored.
     ``base_clusters``: ``[conv_id, cluster_id]`` for every base conv.
 
-    ``edge_mode`` / ``edge_statuses``: as in
-    :func:`pipeline.match_transcripts` (threshold = transitive-closure
-    recall, best_match = reference claim semantics).
+    ``edge_mode``: as in :func:`pipeline.match_transcripts`
+    (threshold = transitive-closure recall, best_match = reference claim
+    semantics).
 
     ``uniqueness``: per-column uniqueness for the scoring weights.
     Default None computes it over base ∪ batch — the same statistic the
@@ -154,7 +157,7 @@ def match_increment(
     merge map. The base assignment table itself is NOT rewritten here —
     apply ``merges`` with :func:`apply_merges`.
     """
-    if edge_mode not in ("best_match", "threshold"):
+    if edge_mode not in EDGE_MODES:
         raise ValueError(f"unknown edge_mode {edge_mode!r}")
     cfg = cfg or default_transcript_match_config()
     persisted: list = []
@@ -217,18 +220,10 @@ def match_increment(
         newc, all_y, cand, cfg, uniqueness=uniqueness
     ).localCheckpoint(eager=True)
 
+    resolved = None
     if edge_mode == "best_match":
         resolved = resolve_matches(newc, all_y, pairs, cfg, keep_debug=True)
-        edges = resolved.where(
-            F.col("__rm_final").isin(*edge_statuses)
-        ).select(
-            F.col(cfg.x_id).alias("src"),
-            F.col("__rm_matched_y").alias("dst"),
-        )
-    else:
-        edges = pairs.where(
-            F.col("row_score") >= F.lit(float(cfg.required_threshold))
-        ).select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
+    edges = match_edges(edge_mode, pairs, resolved, cfg)
 
     # Contract base endpoints to their cluster labels: the base graph's
     # connectivity is fully represented by the labels, so CC below runs on

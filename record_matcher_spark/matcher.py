@@ -23,7 +23,6 @@ from __future__ import annotations
 from typing import Mapping
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
 from record_matcher_spark.operators.resolve import (
@@ -40,8 +39,6 @@ def match_records(
     y_df: DataFrame,
     cfg: MatchConfig,
     *,
-    require_blocking: bool = False,
-    broadcast_y: bool | None = None,
     status_labels: Mapping[str, str] = MATCH_STATUS,
     columns_to_add: Mapping[str, str] = COLUMNS_TO_ADD,
     keep_debug: bool = False,
@@ -51,13 +48,7 @@ def match_records(
     Mirrors ``RecordMatcher.match()`` (reference matcher.py:320-449) minus
     the mutable-object ceremony. Lazy: nothing executes until an action.
     """
-    pairs = score_pairs(
-        x_df,
-        y_df,
-        cfg,
-        require_blocking=require_blocking,
-        broadcast_y=broadcast_y,
-    )
+    pairs = score_pairs(x_df, y_df, cfg)
     return resolve_matches(
         x_df,
         y_df,

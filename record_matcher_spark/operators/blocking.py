@@ -31,19 +31,18 @@ from pyspark.sql.types import ArrayType, LongType, StringType
 class BlockingKey:
     """One blocking-key family.
 
-    ``expr`` maps a conversation-record DataFrame to a key Column —
-    a string/long scalar, or an array of keys when ``explode=True``
-    (e.g. MinHash bands: a record belongs to several blocks).
+    ``expr`` maps a conversation-record DataFrame to a scalar key Column
+    (string or long).
     ``keyed`` (alternative to expr): full control — maps (df, id_col) to a
     DataFrame[_id, _k] directly, for keys that are cheaper as a
-    relational plan than as one row expression (MinHash signatures).
+    relational plan than as one row expression, or where a record belongs
+    to several blocks (MinHash bands).
     ``max_block_size``: drop keys whose block exceeds this many rows on
     either side (None = uncapped).
     """
 
     name: str
     expr: Callable[[DataFrame], Column] | None = None
-    explode: bool = False
     max_block_size: int | None = None
     keyed: Callable[[DataFrame, str], DataFrame] | None = None
 
@@ -67,13 +66,6 @@ def role_seq_key(
     content-based keys (token prefix / MinHash bands)."""
     return BlockingKey("role_seq", lambda df: F.col(column),
                        max_block_size=max_block_size)
-
-
-def nturns_bucket_key(column: str = "n_turns", width: int = 4) -> BlockingKey:
-    """Length bucket (joins conversations of similar turn count)."""
-    return BlockingKey(
-        f"nturns{width}", lambda df: F.floor(F.col(column) / width).cast("string")
-    )
 
 
 def token_prefix_key(column: str, k: int = 3) -> BlockingKey:
@@ -128,8 +120,8 @@ def minhash_band_keys(
     ~0.62 case-folded at the default 16x4 geometry (per-band collision
     probability is 1-(1-s^4)^4 and case flips crater the case-sensitive
     Jaccard s), and even with the other two families covering, the full
-    default keyset loses ~8pp of pairs (tests/test_blocking.py pins
-    this). Applies to both paths, so keys are identical with or without
+    default keyset loses ~8pp of pairs (tests/test_blocking_recall.py
+    pins this). Applies to both paths, so keys are identical with or without
     the precomputed column.
 
     ``hashes_column``: when the input ALREADY carries the distinct token
@@ -226,10 +218,6 @@ def _keyed(df: DataFrame, id_col: str, key: BlockingKey) -> DataFrame:
     """→ DataFrame[_id, _k] for one family (blanks dropped, no capping)."""
     if key.keyed is not None:
         out = key.keyed(df, id_col)
-    elif key.explode:
-        out = df.select(
-            F.col(id_col).alias("_id"), F.explode(key.expr(df)).alias("_k")
-        )
     else:
         out = df.select(F.col(id_col).alias("_id"), key.expr(df).alias("_k"))
     blank = F.col("_k").isNull()

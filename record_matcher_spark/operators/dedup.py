@@ -67,22 +67,6 @@ def exact_dedup(
 # --------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """[id, mh0..mh{n-1}] — MinHash signature over word k-shingles.
-
-    Documents with an empty token set are excluded (no shingles => no
-    signature, mirroring blocking.py's blanks-never-block rule).
-    """
-    base = _shingled(df, id_col, text_col, shingle_k)
-    return base.select("_id", *TH.minhash_sig_exprs(F.col("_sh"), num_hashes))
-
-
 def _shingled(
     df: DataFrame, id_col: str, text_col: str, shingle_k: int
 ) -> DataFrame:

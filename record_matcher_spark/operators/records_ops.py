@@ -1,15 +1,13 @@
-"""Standalone record utilities (reference O1, O4-standalone, O5).
+"""Standalone record utilities (reference O1, O5).
 
-The reference ships three helpers outside the matcher loop
-(/root/reference/record_matcher/records.py); here they are as DataFrame
-transformations.
+Helpers the reference ships outside the matcher loop (its records.py),
+as DataFrame transformations. Its standalone group-by-values filter (O4)
+is the blocking equi-join inside operators/scoring.score_pairs.
 """
 
 from __future__ import annotations
 
-from typing import Mapping
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.functions.scorers import blank_coalesce
@@ -18,15 +16,6 @@ from record_matcher_spark.functions.scorers import blank_coalesce
 def column_names(df: DataFrame) -> set[str]:
     """O1 (records.py:33-46): free in Spark — the schema is fixed at ingest."""
     return set(df.columns)
-
-
-def group_by_values(df: DataFrame, column_values: Mapping[str, object]) -> DataFrame:
-    """O4 standalone (records.py:106-132): rows where every mapped column
-    string-equals the given value (missing ≡ '')."""
-    out = df
-    for column, value in column_values.items():
-        out = out.where(blank_coalesce(F.col(column)) == F.lit("" if value is None else str(value)))
-    return out
 
 
 def duplicated_by_column(df: DataFrame, column: str) -> DataFrame:

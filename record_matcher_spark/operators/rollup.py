@@ -7,7 +7,7 @@ match columns, built from the turns table in a single groupBy.
 Pinned invariant (BASELINE.json ``input_hint``): per-turn text equality
 under stable turn ordering — the ``turns`` array is sorted by
 ``(turn_idx, ts)`` and exploding it back yields exactly the input rows
-(tests/test_rollup.py).
+(tests/test_transcripts.py, ``test_rollup_roundtrip_invariant``).
 """
 
 from __future__ import annotations
@@ -53,8 +53,9 @@ def rollup_conversations(
       operators/blocking). Blocking needs case-folded normalization for
       recall — measured on a 30%-case-noised corpus, case-sensitive
       minhash-only candidate recall collapses to ~0.16 vs ~0.62
-      case-folded (tests/test_blocking.py pins the full-keyset recall) —
-      while scoring keeps the scorer's case-sensitive semantics.
+      case-folded (tests/test_blocking_recall.py pins the full-keyset
+      recall) — while scoring keeps the scorer's case-sensitive
+      semantics.
 
     Both are plain projections over ``full_text`` — no extra aggregation,
     no join, the rollup's plan shape is unchanged. Each NORMALIZATION of
@@ -69,7 +70,10 @@ def rollup_conversations(
     The per-conversation turn order is ``sort_array`` over structs keyed
     by (turn_idx, ts) — deterministic, executor-side, no window needed.
 
-    Tuning (measured, bench/profile_stages.py): ``collect_list`` plans as
+    Tuning (measured on the rollup stage of the transcript pipeline;
+    ``python3 erbench/run.py --workload transcripts_batch --seed 1
+    --seconds 15 --trace 1`` reports its per-stage executor CPU, GC and
+    spill): ``collect_list`` plans as
     ObjectHashAggregate, which falls back to serialize-sort-merge past
     ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` (default
     128!) groups per task — at conversation-scale groups that fallback

@@ -10,8 +10,9 @@ Re-expresses the reference's per-x nested loop
                                                            184-200)
 
 Everything except pandas-UDF scorers stays inside whole-stage codegen.
-The only driver-side data is the per-column uniqueness map (one row per
-match column — O(columns), never O(rows)).
+The per-column uniqueness aggregate (one row of O(columns) counts) is a
+scalar subquery inside the plan, so building a scoring plan runs no
+Spark job.
 """
 
 from __future__ import annotations
@@ -22,7 +23,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
-from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.functions.scorers import SCORERS, blank_coalesce
 
 # Internal column prefix — kept out of user schemas.
@@ -85,10 +85,33 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
     return max(1, -(-size // mpb))
 
 
+def _uniqueness_counts(columns: Iterable[str]) -> list[Column]:
+    """The one aggregate behind the uniqueness ratios: total row count
+    plus, per column, the distinct count of its non-blank values.
+
+    Distinct-count over xxhash64(value), not the value: the partial
+    aggregate shuffles 8 bytes/row instead of whole conversation texts.
+    Equal to the exact count unless two distinct values collide at 64
+    bits (~n^2/2^65 — for the reference-parity target that risk is
+    accepted and documented; a collision shifts one weight by <= 1/n).
+    Risk register: README, "64-bit hash-equality risk register".
+    """
+    aggs = [F.count(F.lit(1)).alias("__rm_total")]
+    for c in columns:
+        s = blank_coalesce(F.col(c))
+        aggs.append(
+            F.count_distinct(F.when(s != "", F.xxhash64(s))).alias(
+                f"__rm_ucnt_{c}"
+            )
+        )
+    return aggs
+
+
 def uniqueness_by_columns(
     df: DataFrame, columns: Iterable[str]
 ) -> dict[str, float]:
-    """Distinct-truthy-value ratio per column, in ONE aggregate pass.
+    """Distinct-truthy-value ratio per column, in ONE aggregate pass,
+    collected to the driver.
 
     Reference semantics (records.py:49-67):
     ``len({r[c] for r in records if r[c]}) / len(records)``, 0 for an empty
@@ -103,26 +126,11 @@ def uniqueness_by_columns(
     rows at records.py:66 — documented divergence).
     """
     columns = list(dict.fromkeys(columns))
-    aggs = [F.count(F.lit(1)).alias("__rm_total")]
-    for c in columns:
-        s = blank_coalesce(F.col(c))
-        # distinct-count over xxhash64(value), not the value: the partial
-        # aggregate shuffles 8 bytes/row instead of whole conversation
-        # texts. Equal to the exact count unless two distinct values
-        # collide at 64 bits (~n^2/2^65 — for the reference-parity target
-        # that risk is accepted and documented; a collision shifts one
-        # weight by <= 1/n). Risk register: README, "64-bit
-        # hash-equality risk register".
-        aggs.append(
-            F.count_distinct(F.when(s != "", F.xxhash64(s))).alias(
-                f"__rm_u_{c}"
-            )
-        )
-    row = df.agg(*aggs).first()
+    row = df.agg(*_uniqueness_counts(columns)).first()
     total = row["__rm_total"]
     if total == 0:
         return {c: 0.0 for c in columns}
-    return {c: row[f"__rm_u_{c}"] / total for c in columns}
+    return {c: row[f"__rm_ucnt_{c}"] / total for c in columns}
 
 
 def _rule_score_expr(
@@ -256,44 +264,37 @@ def _y_side(y_df: DataFrame, cfg: MatchConfig, extra: Iterable[str] = ()) -> Dat
     return y_df.select(*y_cols)
 
 
-def _lazy_uniqueness_columns(
+def _planned_uniqueness(
     x_df: DataFrame, columns: list[str]
 ) -> tuple[DataFrame, dict[str, Column]]:
     """Job-free twin of :func:`uniqueness_by_columns`: the same one-pass
-    aggregate stays IN the plan as a one-row relation that is broadcast
-    and cross-joined onto x instead of being collected to the driver.
+    aggregate stays IN the plan as one scalar subquery (a struct of the
+    counts) instead of being collected to the driver.
 
-    Returns (x extended with the ratio columns, {column: ratio Column}).
-    Numerically identical to the eager path: both divide exact integer
-    counts (< 2^53, so the long->double casts are exact) with one
-    correctly-rounded double division — Python's int/int ``/`` and
-    Spark's double division produce the same bits. The empty-table case
-    (total = 0 -> every ratio 0.0) is guarded explicitly, mirroring the
-    eager dict-of-zeros.
+    Returns (x with the counts struct as column ``__rm_ucnt``,
+    {column: ratio Column}). Numerically identical to the
+    collected map: both divide exact integer counts (< 2^53, so the
+    long->double casts are exact) with one correctly-rounded double
+    division — Python's int/int ``/`` and Spark's double division produce
+    the same bits. The empty-table case (total = 0 -> every ratio 0.0) is
+    guarded explicitly, mirroring the collected dict-of-zeros.
 
-    Cost model: the broadcast side is ONE row of O(columns) longs; the
-    cross join is a BroadcastNestedLoopJoin that streams x unchanged
-    (partitioning preserved), so no shuffle is added and plan
-    construction triggers ZERO Spark jobs (pinned in
-    tests/test_transcripts.py).
+    Cost model: Spark runs the subquery once per action, before the
+    stages that read it: its one reference is the ``__rm_ucnt`` column
+    (Catalyst does not copy a subquery into every expression that reads
+    the column, so it is not run once per weight). No join is added to
+    x, so x's partitioning is untouched, and plan construction triggers
+    ZERO Spark jobs (pinned in tests/test_transcripts.py and
+    tests/test_plans.py).
     """
     columns = list(dict.fromkeys(columns))
-    aggs = [F.count(F.lit(1)).alias("__rm_total")]
-    for c in columns:
-        s = blank_coalesce(F.col(c))
-        # same 8-byte-hash distinct count as uniqueness_by_columns
-        aggs.append(
-            F.count_distinct(F.when(s != "", F.xxhash64(s))).alias(
-                f"__rm_ucnt_{c}"
-            )
-        )
-    one = F.broadcast(x_df.agg(*aggs))
-    out = x_df.crossJoin(one)
+    out = x_df.withColumn(
+        "__rm_ucnt", x_df.agg(F.struct(*_uniqueness_counts(columns))).scalar()
+    )
+    total = F.col("__rm_ucnt.__rm_total").cast("double")
     ratios = {
         c: F.when(
-            F.col("__rm_total") > 0,
-            F.col(f"__rm_ucnt_{c}").cast("double")
-            / F.col("__rm_total").cast("double"),
+            total > 0, F.col(f"__rm_ucnt.__rm_ucnt_{c}").cast("double") / total
         ).otherwise(F.lit(0.0))
         for c in columns
     }
@@ -304,7 +305,6 @@ def prepare_x(
     x_df: DataFrame,
     cfg: MatchConfig,
     uniqueness: Mapping[str, float] | None = None,
-    lazy_uniqueness: bool = False,
 ) -> DataFrame:
     """Annotate x with normalized match/group strings, per-row weights and
     the per-row optimal threshold.
@@ -318,23 +318,18 @@ def prepare_x(
     (matcher.py:210-214). Accumulation order = rule order, fixed in both
     engine and oracle so float results agree bitwise.
 
-    ``lazy_uniqueness``: keep the uniqueness aggregate IN the plan
-    (broadcast one-row cross join, :func:`_lazy_uniqueness_columns`)
-    instead of collecting it eagerly — plan construction then triggers no
-    Spark job. Same bits (see the helper's docstring); the pipeline uses
-    this so building the whole transcript DAG is job-free.
+    ``uniqueness``: a precomputed per-column map (e.g. corpus-level values
+    from :func:`uniqueness_by_columns`). Without one, the uniqueness
+    aggregate over ``x_df`` stays in the plan
+    (:func:`_planned_uniqueness`), so building the plan runs no Spark
+    job.
     """
     u_cols: Mapping[str, Column]
     if uniqueness is not None:
         u_cols = {c: F.lit(float(u)) for c, u in uniqueness.items()}
         out = x_df
-    elif lazy_uniqueness:
-        out, u_cols = _lazy_uniqueness_columns(x_df, cfg.x_match_columns)
     else:
-        eager = uniqueness_by_columns(x_df, cfg.x_match_columns)
-        u_cols = {c: F.lit(float(u)) for c, u in eager.items()}
-        out = x_df
-
+        out, u_cols = _planned_uniqueness(x_df, cfg.x_match_columns)
     nonblank: dict[str, Column] = {}
     for rule in cfg.rules:
         xs = blank_coalesce(F.col(rule.x_column))
@@ -377,10 +372,7 @@ def score_pairs(
     y_df: DataFrame,
     cfg: MatchConfig,
     *,
-    require_blocking: bool = False,
-    broadcast_y: bool | None = None,
     keep_column_scores: bool = False,
-    min_parallelism: int | None = None,
 ) -> DataFrame:
     """Candidate generation + weighted scoring → scored-pairs DataFrame.
 
@@ -398,32 +390,15 @@ def score_pairs(
     Blocking (records.py:106-132): string-equality equi-join on
     ``columns_to_group`` pairs with blank coalescing (``y.get(col, '')``).
     Empty spec ⇒ cross join, exactly like the reference scoring all y per x
-    (matcher.py:179) — forbidden at scale via ``require_blocking``.
+    (matcher.py:179). Catalyst + AQE pick the join strategy.
 
-    ``broadcast_y``: force/forbid a broadcast-hash join of the y side;
-    default None lets Catalyst + AQE decide.
-
-    ``min_parallelism``: fan-out floor for the x side (see the inline
-    comment at the probe below). The default estimates the input's scan
-    partition count from OPTIMIZER STATISTICS
-    (:func:`_estimated_scan_partitions`) — plan-build stays job-free: no
-    RDD conversion, no action, no AQE stage materialization (pinned in
-    tests/test_plans.py). Unknown statistics skip the repartition (the
-    scale-safe direction). Pass ``0`` to skip the estimate entirely, or
-    an explicit int to change the floor (the estimate still runs;
-    repartition only happens when below the floor).
-
-    Laziness note: the per-column uniqueness aggregate (O2) runs EAGERLY
-    here — one Spark job over x producing an O(columns) result that is
-    folded into the plan as double literals. The returned DataFrame is
-    otherwise lazy. Pass a precomputed map via :func:`prepare_x` to keep
-    plan construction job-free.
+    Building the plan runs no Spark job: the uniqueness aggregate (O2)
+    stays in the plan (:func:`prepare_x`) and the x-side fan-out floor
+    reads optimizer statistics (pinned in tests/test_plans.py).
     """
-    cfg.validate(x_df.columns, y_df.columns, require_blocking=require_blocking)
+    cfg.validate(x_df.columns, y_df.columns)
 
     x = prepare_x(x_df, cfg)
-    if min_parallelism is None:
-        min_parallelism = x_df.sparkSession.sparkContext.defaultParallelism
     x_cols = _x_side_columns(cfg)
     group_x = sorted(set(cfg.columns_to_group.values()))
     x_cols += [blank_coalesce(F.col(c)).alias(f"__rm_gx_{c}") for c in group_x]
@@ -432,19 +407,18 @@ def score_pairs(
     # Pair scoring parallelism is bounded by the x-side partition count when
     # the y side is broadcast (no shuffle between scan and scoring). A small
     # parquet x (one split) would serialize the whole candidate-pair scoring
-    # onto one core — fan out first. At scale the scan already has >= target
-    # partitions (or opaque stats) and this is a no-op (no shuffle added).
-    # The estimate is pure plan statistics over the RAW input — no job, no
-    # RDD conversion — and never touches the scorer prep / pandas UDF
-    # columns.
-    if min_parallelism:
-        est = _estimated_scan_partitions(x_df)
-        if est is not None and est < min_parallelism:
-            xp = xp.repartition(min_parallelism)
+    # onto one core — fan out to the default parallelism first. At scale
+    # the scan already has >= target partitions and this is a no-op (no
+    # shuffle added). The estimate is pure OPTIMIZER STATISTICS over the
+    # RAW input (:func:`_estimated_scan_partitions`) — no job, no RDD
+    # conversion — and never touches the scorer prep / pandas UDF columns.
+    # Unknown statistics skip the repartition (the scale-safe direction).
+    floor = x_df.sparkSession.sparkContext.defaultParallelism
+    est = _estimated_scan_partitions(x_df)
+    if est is not None and est < floor:
+        xp = xp.repartition(floor)
 
     yp = _y_side(y_df, cfg, extra=cfg.columns_to_group)
-    if broadcast_y:
-        yp = F.broadcast(yp)
 
     if cfg.columns_to_group:
         cond = None
@@ -517,7 +491,6 @@ def score_candidate_pairs(
     *,
     keep_column_scores: bool = False,
     uniqueness: Mapping[str, float] | None = None,
-    lazy_uniqueness: bool = False,
 ) -> DataFrame:
     """Score an explicit candidate-pair set (from operators.blocking)
     instead of deriving candidates from ``cfg.columns_to_group``.
@@ -529,16 +502,11 @@ def score_candidate_pairs(
     the same candidate set.
 
     ``uniqueness``: precomputed per-column uniqueness map for the x-side
-    weights (see :func:`prepare_x`). Default None computes it over
-    ``x_df`` — correct for one-shot batch runs; incremental callers pass
+    weights (see :func:`prepare_x`). Default None keeps the aggregate over
+    ``x_df`` in the plan — correct for one-shot batch runs, and plan
+    construction triggers zero Spark jobs; incremental callers pass
     corpus-level values so a small batch's skewed column statistics don't
-    shift the weights (pipeline match_increment).
-
-    ``lazy_uniqueness``: with ``uniqueness=None``, keep the uniqueness
-    aggregate in the plan (broadcast one-row cross join) instead of
-    collecting it eagerly — plan construction triggers zero Spark jobs
-    and the numbers are bit-identical (see :func:`prepare_x`). The
-    pipeline passes True.
+    shift the weights (incremental.match_increment).
 
     Two shuffle-joins (candidates↔x on x_id, result↔y on y_id), both plain
     equi-joins AQE can re-plan (broadcast when a side is small, skew-split
@@ -546,9 +514,7 @@ def score_candidate_pairs(
     """
     cfg.validate(x_df.columns, y_df.columns)
 
-    x = prepare_x(
-        x_df, cfg, uniqueness=uniqueness, lazy_uniqueness=lazy_uniqueness
-    )
+    x = prepare_x(x_df, cfg, uniqueness=uniqueness)
     xp = x.select(*_x_side_columns(cfg))
     yp = _y_side(y_df, cfg)
 

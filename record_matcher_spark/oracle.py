@@ -259,17 +259,19 @@ def oracle_clusters(
     records: Records,
     cfg: MatchConfig,
     candidates: dict,
-    edge_statuses: tuple[str, ...] = ("matched", "review"),
 ) -> dict:
     """Dedup-mode clustering oracle: reference match semantics (directed,
     incl. duplicate resolution) on the given candidate map, edges from
-    single-survivor claims with final status in ``edge_statuses``,
-    connected components with min-id labels."""
+    single-survivor claims with final status matched or review (the
+    pipeline's ``EDGE_STATUSES``), connected components with min-id
+    labels."""
     _res, final, _fs, _cc, claims = _oracle_match_full(
         records, records, cfg, candidates
     )
     edges = [
-        (xi, yi) for xi, (yi, _s) in claims.items() if final[xi] in edge_statuses
+        (xi, yi)
+        for xi, (yi, _s) in claims.items()
+        if final[xi] in ("matched", "review")
     ]
     return oracle_union_find(list(records), edges)
 

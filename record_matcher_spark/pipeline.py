@@ -76,6 +76,35 @@ def default_transcript_match_config() -> MatchConfig:
     )
 
 
+#: ``edge_mode`` values of the transcript pipelines (see
+#: :func:`match_transcripts`).
+EDGE_MODES = ("best_match", "threshold")
+#: Final statuses whose single-survivor claim becomes a best_match edge.
+EDGE_STATUSES = ("matched", "review")
+
+
+def match_edges(
+    edge_mode: str,
+    pairs: DataFrame,
+    resolved: DataFrame | None,
+    cfg: MatchConfig,
+) -> DataFrame:
+    """Match edges ``[src, dst]`` for connected components.
+
+    ``"best_match"`` reads the claims of ``resolved`` (``resolve_matches``
+    output with ``keep_debug=True``) whose final status is in
+    :data:`EDGE_STATUSES`; ``"threshold"`` takes every scored pair with
+    ``row_score >= required_threshold`` and never reads ``resolved``.
+    """
+    if edge_mode == "best_match":
+        return resolved.where(F.col("__rm_final").isin(*EDGE_STATUSES)).select(
+            F.col(cfg.x_id).alias("src"), F.col("__rm_matched_y").alias("dst")
+        )
+    return pairs.where(
+        F.col("row_score") >= F.lit(float(cfg.required_threshold))
+    ).select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
+
+
 @dataclass
 class TranscriptMatchResult:
     conversations: DataFrame
@@ -113,7 +142,6 @@ def match_transcripts(
     cfg: MatchConfig | None = None,
     keys: Sequence[BlockingKey] = DEFAULT_TRANSCRIPT_KEYS,
     edge_mode: str = "best_match",
-    edge_statuses: tuple[str, ...] = ("matched", "review"),
     cache: bool = True,
     store=None,
     observe: bool = False,
@@ -125,7 +153,7 @@ def match_transcripts(
 
     ``edge_mode``:
     - ``"best_match"`` — edges are single-survivor claims with final status
-      in ``edge_statuses``: faithful to the reference's best-match +
+      in :data:`EDGE_STATUSES`: faithful to the reference's best-match +
       tie-break + duplicate-resolution semantics (the F1-vs-reference
       parity mode). 1:1-biased: ambiguous ties and duplicate-loser resets
       contribute no edge, so transitive recall is structurally limited.
@@ -141,7 +169,7 @@ def match_transcripts(
     ``result.progress()`` after materializing the outputs; pair with
     ``store.log_metrics`` for a durable audit trail.
     """
-    if edge_mode not in ("best_match", "threshold"):
+    if edge_mode not in EDGE_MODES:
         raise ValueError(f"unknown edge_mode {edge_mode!r}")
     cfg = cfg or default_transcript_match_config()
     cfg_key = repr(cfg)
@@ -210,13 +238,12 @@ def match_transcripts(
     pairs = _stage(
         "pairs",
         lambda: _obs(
-            # lazy_uniqueness: the weight statistics stay in the plan as a
-            # broadcast one-row aggregate — constructing the scoring stage
-            # triggers zero Spark jobs (pinned in test_transcripts; the CC
-            # stage still runs its size-gate/convergence actions, which
-            # are inherent to an iterative algorithm, not plan building)
-            score_candidate_pairs(conv, conv, cand, cfg,
-                                  lazy_uniqueness=True),
+            # the weight statistics stay in the plan as a scalar
+            # subquery — constructing the scoring stage triggers zero
+            # Spark jobs (pinned in test_transcripts; the CC stage
+            # still runs its size-gate/convergence actions, which are
+            # inherent to an iterative algorithm, not plan building)
+            score_candidate_pairs(conv, conv, cand, cfg),
             "pairs",
             F.count(F.lit(1)).alias("n_scored_pairs"),
             F.avg("row_score").alias("avg_score"),
@@ -229,17 +256,8 @@ def match_transcripts(
     )
     resolved = resolve_matches(conv, conv, pairs, cfg, keep_debug=True)
 
-    if edge_mode == "best_match":
-        edges = (
-            resolved.where(F.col("__rm_final").isin(*edge_statuses))
-            .select(
-                F.col(cfg.x_id).alias("src"), F.col("__rm_matched_y").alias("dst")
-            )
-        )
-    else:
-        edges = pairs.where(
-            F.col("row_score") >= F.lit(float(cfg.required_threshold))
-        ).select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
+    edges = match_edges(edge_mode, pairs, resolved, cfg)
+
     def _build_clusters() -> DataFrame:
         clusters = connected_components(edges, "src", "dst").select(
             F.col("node").alias("conv_id"),
@@ -259,7 +277,7 @@ def match_transcripts(
         )
 
     all_clusters = _stage(
-        "clusters", _build_clusters, config=[edge_mode, *edge_statuses]
+        "clusters", _build_clusters, config=[edge_mode, *EDGE_STATUSES]
     )
     return TranscriptMatchResult(
         conv, cand, pairs, resolved, edges, all_clusters, persisted,

@@ -139,3 +139,30 @@ def test_headline_pool_never_mixes_code_hashes_or_sfs():
     _, pooled, _ = bench._pool_headlines(hist, "h1", "0.01", {"q1": [[5.0, 0.1]]})
     assert pooled["q1"] == 5.0           # own sf bucket
     assert hist["h1"]["sf"]["0.1"]["q1"] == [[10.0, 0.1]]
+
+
+def test_emit_result_prints_one_parseable_line(capsys, tmp_path):
+    """main()'s result assembly on stubbed timings: one JSON line that
+    parses, headlines pooled, invocation count read from the pool."""
+    import json
+
+    hist = {}
+    trials = {
+        "match_exact": [[1.5, 0.2], [1.2, 3.0]],
+        "transcripts_match": [[8.0, 0.1]],
+    }
+    quality = {"f1": 0.999, "precision": 1.0, "recall": 0.998}
+    for invocation in (1, 2):
+        out = bench._emit_result(
+            hist, "h1", "0.1", trials, 2000, 800, quality,
+            str(tmp_path / "no_scaling_results.json"),
+        )
+        lines = capsys.readouterr().out.splitlines()
+        assert len(lines) == 1
+        assert json.loads(lines[0]) == out
+        assert out["pooled"]["invocations"] == invocation
+    assert out["queries"] == {"match_exact": 1.5, "transcripts_match": 8.0}
+    assert out["value"] == 9.5
+    assert out["transcripts"]["conversations_per_sec"] == 250.0
+    assert out["pooled"]["n_trials"] == {"match_exact": 4, "transcripts_match": 2}
+    assert "scaling" not in out

@@ -186,3 +186,62 @@ def test_score_pairs_build_no_rdd_conversion(spark, monkeypatch):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" in plan, plan
     assert out.limit(5).count() > 0
+
+
+def test_score_pairs_build_is_job_free_and_exact(spark):
+    """Building score_pairs runs ZERO Spark jobs (the uniqueness
+    aggregate stays in the plan), and its rows equal, bit for bit, the
+    rows scored with the collected ``uniqueness_by_columns`` map over the
+    same blocked candidates."""
+    from record_matcher_spark.config import ColumnRule, MatchConfig
+    from record_matcher_spark.operators.scoring import (
+        score_candidate_pairs,
+        score_pairs,
+        uniqueness_by_columns,
+    )
+
+    cust = spark.read.parquet(os.path.join(SF_DIR, "customer.parquet"))
+    y = cust.selectExpr(
+        "c_custkey as row_id", "c_name as name", "c_mktsegment as seg",
+        "cast(c_acctbal as string) as bal", "c_nationkey as nk",
+    )
+    # perturb every third name and blank every fifth balance so the
+    # per-row weights and scores vary
+    x = y.select(
+        "row_id",
+        F.when(F.col("row_id") % 3 == 0, F.concat("name", F.lit("~X")))
+        .otherwise(F.col("name")).alias("name"),
+        "seg",
+        F.when(F.col("row_id") % 5 != 0, F.col("bal")).alias("bal"),
+        "nk",
+    )
+    cfg = MatchConfig(
+        rules=(
+            ColumnRule("name", ("name",), scorer="levenshtein_ratio"),
+            ColumnRule("seg", ("seg",)),
+            ColumnRule("bal", ("bal",)),
+        ),
+        columns_to_group={"nk": "nk"},
+        required_threshold=0.0,
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("rm-score-pairs-build", "plan construction runs no jobs")
+    try:
+        planned = score_pairs(x, y, cfg)
+        jobs = sc.statusTracker().getJobIdsForGroup("rm-score-pairs-build")
+        assert list(jobs) == [], f"plan construction ran jobs: {jobs}"
+    finally:
+        sc.setJobGroup("", "")
+
+    cand = x.select(F.col("row_id").alias("x_id"), "nk").join(
+        y.select(F.col("row_id").alias("y_id"), "nk"), "nk"
+    ).select("x_id", "y_id")
+    collected = score_candidate_pairs(
+        x, y, cand, cfg,
+        uniqueness=uniqueness_by_columns(x, cfg.x_match_columns),
+    )
+    pl = sorted(map(tuple, planned.collect()))
+    co = sorted(map(tuple, collected.collect()))
+    assert len(pl) == len(co) > 0
+    assert pl == co  # bitwise: float equality, not tolerance

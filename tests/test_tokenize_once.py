@@ -239,7 +239,7 @@ def test_prepped_scoring_plan_has_no_tokenization(spark):
         conv.select(F.col("conv_id").alias("y_id"))
     ).limit(100)
     cfg = default_transcript_match_config()
-    out = score_candidate_pairs(conv, conv, cand, cfg, lazy_uniqueness=True)
+    out = score_candidate_pairs(conv, conv, cand, cfg)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # conv is cached, so its rollup-side split lives only in the
     # InMemoryRelation descriptor; the scoring operators above the scans

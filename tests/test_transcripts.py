@@ -4,11 +4,15 @@ with the reference-semantics oracle, pairwise F1."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from record_matcher_spark.datagen import generate_transcripts
+from record_matcher_spark.operators import cluster
 from record_matcher_spark.operators.blocking import (
     DEFAULT_TRANSCRIPT_KEYS,
     candidate_pairs,
@@ -89,6 +93,23 @@ def test_connected_components_vs_union_find(spark):
         assert got == exp, f"trial {trial}"
 
 
+def _cc_dict(edf, **consts):
+    """connected_components as {node: component}, with the given
+    operators.cluster constants patched for the call (e.g.
+    ``LOCAL_CC_MAX_EDGES=0`` closes the single-task gate so the star
+    rounds run)."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in consts.items():
+            mp.setattr(cluster, name, value)
+        return {
+            r["node"]: r["component"]
+            for r in connected_components(edf, "src", "dst").collect()
+        }
+
+
+STAR = {"LOCAL_CC_MAX_EDGES": 0}
+
+
 def test_connected_components_local_equals_distributed(spark):
     """The size-gated single-task kernel and the star-round path label
     identically (incl. self-loops, isolated-by-self-loop nodes, and a
@@ -100,69 +121,66 @@ def test_connected_components_local_equals_distributed(spark):
     chain = [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(40)]
     edges += chain + [("loop", "loop")]
     edf = spark.createDataFrame(edges, "src string, dst string")
-    local = {
-        r["node"]: r["component"]
-        for r in connected_components(edf, "src", "dst").collect()
-    }
-    dist = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edf, "src", "dst", local_max_edges=0
-        ).collect()
-    }
+    local = _cc_dict(edf)
+    dist = _cc_dict(edf, **STAR)
     assert local == dist
     assert local["loop"] == "loop"  # self-loop node = own component
     assert {local[f"c{i:03d}"] for i in range(41)} == {"c000"}
 
 
-def test_min_id_per_component_kernel():
-    """Sort/reduceat representative restore == per-group Python min,
-    for string ids (U-dtype fast path), ids with embedded NULs (object
-    fallback — numpy U storage truncates at NUL, so 'a\\x00z' must still
-    order as Python compares it), and integer ids."""
-    import numpy as np
+@pytest.mark.parametrize("id_type", ["decimal", "date", "nul_string", "int"])
+def test_connected_components_id_types_vs_union_find(spark, id_type):
+    """Non-string, non-integral ids (decimal, date) are hash-encoded like
+    strings and labeled with the minimum ORIGINAL id on both strategies;
+    strings with embedded NULs order as Python compares them; int ids
+    keep their type."""
+    rng = random.Random(13)
+    make, sql_type = {
+        "decimal": (lambda i: decimal.Decimal(f"{i}.{i % 7}"),
+                    "decimal(10,1)"),
+        "date": (lambda i: datetime.date(2020, 1, 1)
+                 + datetime.timedelta(days=i), "date"),
+        "nul_string": (lambda i: "a\x00" * (i % 3) + f"{i:03d}", "string"),
+        "int": (lambda i: 1000 - i, "int"),
+    }[id_type]
+    ids = [make(i) for i in range(50)]
+    edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(40)]
+    edges += [(ids[i], ids[i + 1]) for i in range(30, 45)]  # a chain
+    edf = spark.createDataFrame(edges, f"src {sql_type}, dst {sql_type}")
+    edge_nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
+    exp = oracle_union_find(edge_nodes, edges)
+    assert _cc_dict(edf) == exp
+    assert _cc_dict(edf, **STAR) == exp
+    out = connected_components(edf, "src", "dst")
+    assert out.schema["node"].dataType == edf.schema["src"].dataType
+    assert out.schema["component"].dataType == edf.schema["src"].dataType
 
-    from record_matcher_spark.operators.cluster import _min_id_per_component
 
-    cases = [
-        np.array(["b", "a", "c", "z", "m"], dtype=object),
-        np.array(["a\x00z", "a", "a\x00a", "b"], dtype=object),
-        np.array([7, 3, 9, 1, 5], dtype=np.int64),
-    ]
-    rng = random.Random(5)
-    for u in cases:
-        label = np.array([rng.randrange(2) for _ in u], dtype=np.int64)
-        got = _min_id_per_component(u, label)
-        exp = [min(u[j] for j in range(len(u)) if label[j] == label[i])
-               for i in range(len(u))]
-        assert list(got) == exp, u
-    assert len(_min_id_per_component(np.array([], dtype=object),
-                                     np.array([], dtype=np.int64))) == 0
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """Reaching the star-round cap raises instead of returning
+    unconverged labels."""
+    chain = [(i, i + 1) for i in range(20)]
+    edf = spark.createDataFrame(chain, "src long, dst long")
+    monkeypatch.setattr(cluster, "LOCAL_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(cluster, "MAX_STAR_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edf, "src", "dst")
 
 
 def test_connected_components_dense_id_escalation(spark):
-    """Above dense_id_threshold the encode path switches from 64-bit
-    hashes to exact order-preserving dense ids automatically; labels must
-    be identical to the hash path (threshold forced low to drive the
-    escalated branch through a real graph: random edges + a chain)."""
+    """Above DENSE_ID_NODE_THRESHOLD the star-round path switches from
+    64-bit hashes to exact order-preserving dense ids automatically;
+    labels must be identical to the hash path (threshold forced low to
+    drive the escalated branch through a real graph: random edges + a
+    chain)."""
     rng = random.Random(7)
     nodes = [f"n{i:03d}" for i in range(70)]
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(80)]
     edges += [(f"c{i:03d}", f"c{i + 1:03d}") for i in range(30)]
     edges = [(a, b) for a, b in edges if a != b]
     edf = spark.createDataFrame(edges, "src string, dst string")
-    dense = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edf, "src", "dst", local_max_edges=0, dense_id_threshold=10
-        ).collect()
-    }
-    hashed = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edf, "src", "dst", local_max_edges=0, dense_id_threshold=None
-        ).collect()
-    }
+    dense = _cc_dict(edf, **STAR, DENSE_ID_NODE_THRESHOLD=10)
+    hashed = _cc_dict(edf, **STAR)
     assert dense == hashed
     edge_nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
     assert dense == oracle_union_find(edge_nodes, edges)
@@ -171,13 +189,9 @@ def test_connected_components_dense_id_escalation(spark):
 def test_connected_components_null_endpoints_ignored(spark):
     edges = [("a", "b"), (None, "b"), ("c", None)]
     edf = spark.createDataFrame(edges, "src string, dst string")
-    for kw in ({}, {"local_max_edges": 0}):
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(edf, "src", "dst", **kw).collect()
-        }
+    for consts in ({}, STAR):
         # edges with a NULL endpoint vanish entirely (c had only one)
-        assert got == {"a": "a", "b": "a"}
+        assert _cc_dict(edf, **consts) == {"a": "a", "b": "a"}
 
 
 def test_blocking_recall_and_determinism(spark):
@@ -315,13 +329,16 @@ def test_observation_progress_metrics(spark):
 
 def test_scoring_stage_build_is_job_free_and_exact(spark):
     """Constructing the pipeline's scoring stage must trigger NO Spark job:
-    with lazy_uniqueness the weight statistics ride the plan as a
-    broadcast one-row aggregate (scoring._lazy_uniqueness_columns)
-    instead of an eager collect — and the resulting scores must be
-    BIT-identical to the eager path (both divide the same exact integer
-    counts with one correctly-rounded double division)."""
+    the weight statistics ride the plan as a scalar subquery
+    (scoring._planned_uniqueness) instead of an eager collect — and the
+    resulting scores must be BIT-identical to scoring with the collected
+    map (both divide the same exact integer counts with one
+    correctly-rounded double division)."""
     from record_matcher_spark.operators.blocking import candidate_pairs
-    from record_matcher_spark.operators.scoring import score_candidate_pairs
+    from record_matcher_spark.operators.scoring import (
+        score_candidate_pairs,
+        uniqueness_by_columns,
+    )
     from record_matcher_spark.pipeline import default_transcript_match_config
 
     t, _ = _corpus(spark)
@@ -335,17 +352,18 @@ def test_scoring_stage_build_is_job_free_and_exact(spark):
     sc = spark.sparkContext
     sc.setJobGroup("rm-build-probe", "plan construction must run no jobs")
     try:
-        lazy = score_candidate_pairs(conv, conv, cand, cfg,
-                                     lazy_uniqueness=True)
+        planned = score_candidate_pairs(conv, conv, cand, cfg)
         jobs = sc.statusTracker().getJobIdsForGroup("rm-build-probe")
         assert list(jobs) == [], f"plan construction ran jobs: {jobs}"
     finally:
         sc.setJobGroup("", "")
 
-    eager = score_candidate_pairs(conv, conv, cand, cfg)
-    key = lambda r: (r["x_id"], r["y_id"])  # noqa: E731
-    lz = sorted(map(tuple, lazy.collect()), key=lambda r: (r[0], r[1]))
-    eg = sorted(map(tuple, eager.collect()), key=lambda r: (r[0], r[1]))
-    assert len(lz) == len(eg) > 0
-    assert lz == eg  # bitwise: float equality, not tolerance
+    collected = score_candidate_pairs(
+        conv, conv, cand, cfg,
+        uniqueness=uniqueness_by_columns(conv, cfg.x_match_columns),
+    )
+    pl = sorted(map(tuple, planned.collect()), key=lambda r: (r[0], r[1]))
+    co = sorted(map(tuple, collected.collect()), key=lambda r: (r[0], r[1]))
+    assert len(pl) == len(co) > 0
+    assert pl == co  # bitwise: float equality, not tolerance
     conv.unpersist(); cand.unpersist(); t.unpersist()
