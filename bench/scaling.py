@@ -2,27 +2,35 @@
 local[4N] (sandbox proxy for N vs 4N executors — BASELINE.md / the
 north rule's two-cluster-size criterion).
 
-Methodology (this VM's wall-clock is noisy and the noise is one-sided —
-interference only ever slows a run down):
+Methodology (a shared VM's wall-clock is noisy and the noise is
+one-sided — interference only ever slows a run down):
 
-- each measurement is an isolated subprocess (fresh JVM, no shared
-  JIT/heap state);
-- one warm-up run is discarded (first-JVM jar loading + VM page-faulting
-  measured up to 5x slower than steady state);
-- inside every JVM the worker first executes the full pipeline once on a
-  small corpus, untimed, so whole-stage-codegen classes are JIT-compiled
-  before the timed run (cold codegen measured ~6x CPU on the scoring
-  stage; a long-lived executor pays it once per job class, so steady
-  state is the comparable quantity);
+- each measurement is an isolated subprocess (this script's ``--worker``
+  mode: fresh JVM, no shared JIT/heap state) pinned to the first
+  ``cores`` CPUs this process may run on. local[N] alone bounds only
+  executor threads while the JVM sizes its GC/JIT pools to every CPU it
+  sees (measured: ParallelGCThreads 23 unpinned vs 2 pinned to 2 CPUs),
+  so an unpinned low-core run would offload GC and compiler work that a
+  real N-core executor pays out of its N cores;
+- one warm-up worker run is discarded (first-JVM jar loading + page
+  faulting measured up to 5x slower than steady state); it also writes
+  the corpus on first use;
+- every worker measures through ``bench.time_transcripts``: one untimed
+  JIT pass, then the timed run;
 - configs alternate (4N, N, 4N, N, ...) so drift hits both equally;
-- per config the BEST of ``trials`` runs is reported (min wall = the run
-  with least interference; medians are also printed for transparency).
+- per config the best trial is ``bench.quiet_min``; up to 2 extra
+  alternating pairs run while either side has no quiet trial (medians
+  are reported too);
+- shuffle partitions are 4 x 4N at both core counts: identical plans and
+  task counts, only thread parallelism varies.
 
-Efficiency = (throughput@4N / throughput@N) / 4.
-Writes/updates BENCH.md.
+Efficiency = (throughput@4N / throughput@N) / 4. The record lands in
+bench/scaling_results.json (BENCH.md quotes it).
 
 Usage: python bench/scaling.py [n_entities] [n_cores] [trials]
-  defaults: 20000 entities, N=2 (so 4N=8), 3 trials
+  defaults: 20000 entities, N = a quarter of the available CPUs, 3 trials.
+  A pair whose 4N exceeds the available CPUs is refused before any Spark
+  start: it would time 4N threads on fewer cores.
 """
 
 from __future__ import annotations
@@ -36,6 +44,9 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RESULTS_PATH = os.path.join(REPO, "bench", "scaling_results.json")
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402  (bench.py, the shared harness)
 
 
 def _datagen_version() -> str:
@@ -46,239 +57,176 @@ def _datagen_version() -> str:
         return hashlib.sha256(f.read()).hexdigest()[:10]
 
 
-def _code_version() -> str:
-    """Content hash of the measured library — trials may only be POOLED
-    across invocations when they measured identical pipeline code (and an
-    identical protocol config; see the merge in main()). Pooling across a
-    code change would mix two different pipelines into one best-of."""
-    h = hashlib.sha256()
-    pkg = os.path.join(REPO, "record_matcher_spark")
-    for root, _dirs, files in sorted(os.walk(pkg)):
-        for name in sorted(files):
-            if name.endswith(".py"):
-                with open(os.path.join(root, name), "rb") as f:
-                    h.update(name.encode())
-                    h.update(f.read())
-    return h.hexdigest()[:10]
-
-
 def _cpu_topology() -> str:
-    """Host CPU topology summary for the report: pinning to cpu ids
-    0..N-1 is only a faithful N-core proxy when those ids are distinct
-    physical cores (SMT siblings would halve the low-core baseline)."""
+    """Host CPU topology summary for the report: pinning to N cpus is
+    only a faithful N-core proxy when those are distinct physical cores
+    (SMT siblings would halve the low-core baseline)."""
     try:
-        pairs = set()
-        cpus = set()
-        with subprocess.Popen(
-            ["lscpu", "-p=CPU,CORE"], stdout=subprocess.PIPE, text=True
-        ) as p:
-            for line in p.stdout:
-                if line.startswith("#"):
-                    continue
-                cpu, core = line.strip().split(",")[:2]
-                cpus.add(cpu)
-                pairs.add((cpu, core))
-        n_cpus = len(cpus)
-        n_cores = len({c for _, c in pairs})
-        smt = "no SMT (cpu id == physical core)" if n_cpus == n_cores else (
-            f"SMT: {n_cpus} cpus on {n_cores} cores — pinned ranges may "
-            "share physical cores"
-        )
-        return f"{n_cpus} cpus / {n_cores} cores, {smt}"
-    except Exception:
+        out = subprocess.run(
+            ["lscpu", "-p=CPU,CORE"], capture_output=True, text=True, check=True
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
         return "topology unavailable"
+    pairs = {
+        tuple(line.split(",")[:2])
+        for line in out.splitlines()
+        if line and not line.startswith("#")
+    }
+    n_cpus, n_cores = len(pairs), len({c for _, c in pairs})
+    smt = "no SMT (cpu id == physical core)" if n_cpus == n_cores else (
+        f"SMT: {n_cpus} cpus on {n_cores} cores — pinned sets may share "
+        "physical cores"
+    )
+    return f"{n_cpus} cpus / {n_cores} cores, {smt}"
 
 
-def write_corpus(n_entities: int, out_dir: str) -> None:
-    """Generate the trial corpus ONCE (unpinned, local[32]) and park it as
-    parquet; every trial JVM then reads identical bytes. Input handling is
-    untimed in the worker either way — this removes per-trial datagen
-    overhead and a variance source."""
-    code = f"""
-import sys; sys.path.insert(0, {REPO!r})
-from record_matcher_spark.datagen import generate_transcripts
-from record_matcher_spark.session import get_spark
-spark = get_spark(app_name="rm-corpus", master="local[32]",
-                  shuffle_partitions=32,
-                  extra_conf={{"spark.ui.enabled": "false",
-                              "spark.driver.memory": "48g",
-                              "spark.local.dir": "/dev/shm/rm-spark-local"}})
-spark.sparkContext.setLogLevel("ERROR")
-t, truth = generate_transcripts(spark, {n_entities}, seed=42,
-                                num_partitions=32)
-t.write.mode("overwrite").parquet({out_dir!r} + "/transcripts")
-truth.write.mode("overwrite").parquet({out_dir!r} + "/truth")
-"""
-    subprocess.run([sys.executable, "-c", code], check=True)
+def worker(cores: int, partitions: int, n_entities: int, corpus_dir: str) -> None:
+    """One measurement: pin, start Spark, write the corpus if it has no
+    committed copy, time the pipeline over it, print one JSON line."""
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cores])
+    spark = bench.session(cores, partitions)
+    paths = {t: os.path.join(corpus_dir, t) for t in ("transcripts", "truth")}
+    # reused only when BOTH writes committed — a crashed mid-write run
+    # leaves no _SUCCESS marker and is regenerated
+    if not all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths.values()):
+        from record_matcher_spark.datagen import generate_transcripts
+
+        t, truth = generate_transcripts(
+            spark, n_entities, seed=42, num_partitions=partitions
+        )
+        t.write.mode("overwrite").parquet(paths["transcripts"])
+        truth.write.mode("overwrite").parquet(paths["truth"])
+    run = bench.time_transcripts(
+        spark.read.parquet(paths["transcripts"]),
+        spark.read.parquet(paths["truth"]),
+        rounds=1,
+    )
+    sec, steal = run["trials"][0]
+    print(json.dumps({
+        "convs": run["convs"],
+        "sec": sec,
+        # host-steal share of machine capacity during the timed window:
+        # <1% = quiet VM; larger = an upper bound on the true wall time
+        "steal_pct": steal,
+        "f1": round(run["quality"]["f1"], 5),
+    }))
 
 
-def run(cores: int, n_entities: int, use_corpus: bool = True) -> dict:
-    env = dict(os.environ)
-    if not use_corpus:
-        env.pop("RM_INPUT_PARQUET", None)
-    cmd = [sys.executable, os.path.join(REPO, "bench", "scaling_worker.py"),
-           str(cores), str(n_entities)]
-    if os.environ.get("RM_TASKSET", "1") != "0":
-        # Pin the whole worker (JVM + Python workers) to exactly `cores`
-        # host CPUs. local[N] alone only bounds EXECUTOR threads — the JVM
-        # still detects all host CPUs and sizes GC/JIT pools to them
-        # (measured here: ParallelGCThreads=23 unpinned vs 2 under
-        # `taskset -c 0-1`), so an unpinned "2-core" run offloads GC and
-        # compiler work to ~30 spare cores. A real N-core executor pays
-        # GC/JIT out of its N cores; pinning makes the proxy faithful on
-        # both sides of the ratio. HotSpot reads sched_getaffinity, so
-        # thread pools size themselves correctly with no extra flags.
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    out = subprocess.run(cmd, capture_output=True, text=True, env=env)
+def run(cores: int, partitions: int, n_entities: int, corpus_dir: str) -> dict:
+    cmd = [sys.executable, os.path.abspath(__file__), "--worker",
+           str(cores), str(partitions), str(n_entities), corpus_dir]
+    out = subprocess.run(cmd, capture_output=True, text=True, cwd=REPO)
     if out.returncode != 0:
-        # surface the worker's stderr — a swallowed CalledProcessError cost
-        # a full round-2 measurement run
+        # surface the worker's output — a swallowed CalledProcessError
+        # once cost a full measurement run
         sys.stderr.write(out.stdout[-4000:] + "\n" + out.stderr[-8000:] + "\n")
         raise RuntimeError(
-            f"scaling_worker cores={cores} n={n_entities} exited "
-            f"{out.returncode} (stderr above)"
+            f"scaling worker cores={cores} n={n_entities} exited "
+            f"{out.returncode} (output above)"
         )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def main() -> None:
-    n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
-    n_lo = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    trials = int(sys.argv[3]) if len(sys.argv) > 3 else 3
+def main(argv: list[str]) -> None:
+    available = len(os.sched_getaffinity(0))
+    n_entities = int(argv[0]) if argv else 20000
+    n_lo = int(argv[1]) if len(argv) > 1 else max(available // 4, 1)
+    trials = int(argv[2]) if len(argv) > 2 else 3
     n_hi = n_lo * 4
-
-    # Corpus cache keyed on the generator's content hash (a datagen change
-    # invalidates it) and reused only when BOTH writes committed — a
-    # crashed mid-write run leaves no _SUCCESS marker and is regenerated.
-    corpus_dir = os.environ.get(
-        "RM_CORPUS_DIR",
-        f"/dev/shm/rm-corpus-{n_entities}-{_datagen_version()}",
+    if n_hi > available:
+        raise SystemExit(
+            f"refused: local[{n_hi}] needs {n_hi} CPUs but this process may "
+            f"run on {available}; pick N <= {available // 4} (4N threads on "
+            "fewer cores would be timed as if they had a core each)"
+        )
+    partitions = 4 * n_hi
+    corpus_dir = os.path.join(
+        bench.local_dir(), f"corpus-{n_entities}-{_datagen_version()}"
     )
-    if not (
-        os.path.exists(os.path.join(corpus_dir, "truth", "_SUCCESS"))
-        and os.path.exists(os.path.join(corpus_dir, "transcripts", "_SUCCESS"))
-    ):
-        write_corpus(n_entities, corpus_dir)
-    os.environ["RM_INPUT_PARQUET"] = corpus_dir
-    # Throughput GC for the measurement JVMs (both core counts
-    # identically): G1's write barriers + refinement were measured to
-    # double the candidates stage's CPU on this allocation-heavy
-    # workload (bench notes in BENCH.md); production Spark executors
-    # routinely run ParallelGC for batch throughput.
-    os.environ.setdefault("RM_JAVA_OPTS", "-XX:+UseParallelGC")
-    # 128 shuffle partitions at EVERY core count (identical plans/task
-    # counts; only thread parallelism varies): 2-16 task waves per core,
-    # the standard production sizing. Measured vs 32 partitions at 480k
-    # entities: 8-core 277.6s -> 256.7s, 32-core 157.3s -> 143.2s — more
-    # waves load-balance stragglers at high parallelism and cost the
-    # low-core side nothing.
-    os.environ.setdefault("RM_SHUFFLE_PARTITIONS", "128")
-    # Keep the rollup's collect_list in the object hash map (the default
-    # 128-key fallback degrades to serialize-sort-merge; measured 331.5s
-    # -> 278.6s on the 8-core worker). Applied identically to both
-    # configs.
-    os.environ.setdefault(
-        "RM_SPARK_CONF",
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold=131072",
-    )
+    lo_runs: list[dict] = []
+    hi_runs: list[dict] = []
 
-    # warm-up, discarded (JVM jar loading + page cache; a small corpus
-    # suffices — the effect being flushed is per-process, not per-size)
-    run(n_hi, min(n_entities, 20000), use_corpus=False)
-    lo_runs, hi_runs = [], []
+    def _pair() -> None:
+        hi_runs.append(run(n_hi, partitions, n_entities, corpus_dir))
+        lo_runs.append(run(n_lo, partitions, n_entities, corpus_dir))
+
+    run(n_hi, partitions, n_entities, corpus_dir)  # warm-up, discarded
     for _ in range(trials):
-        hi_runs.append(run(n_hi, n_entities))
-        lo_runs.append(run(n_lo, n_entities))
+        _pair()
+    for _ in range(2):
+        if all(
+            any(bench.is_quiet(r["steal_pct"]) for r in rs)
+            for rs in (lo_runs, hi_runs)
+        ):
+            break
+        _pair()
 
-    # The efficiency ratio needs BOTH sides measured on a quiet VM: each
-    # worker reports the host-steal share of its timed window
-    # (scaling_worker._stat_sample), "best" prefers quiet trials
-    # (steal < 1%), and up to 2 extra alternating trial pairs run if
-    # either side never saw a quiet window (cross-VM interference is
-    # sustained, not just transient — best-of over a fixed count can sit
-    # entirely inside a noise window).
-    def _quiet(r: dict) -> bool:
-        return r.get("steal_pct", 0.0) < 1.0
-
-    extra = 0
-    while extra < 2 and not (
-        any(_quiet(r) for r in lo_runs) and any(_quiet(r) for r in hi_runs)
-    ):
-        extra += 1
-        hi_runs.append(run(n_hi, n_entities))
-        lo_runs.append(run(n_lo, n_entities))
-
-    def _best(runs: list[dict]) -> dict:
-        quiet = [r for r in runs if _quiet(r)]
-        return min(quiet or runs, key=lambda r: r["sec"])
-
-    lo = _best(lo_runs)
-    hi = _best(hi_runs)
-    lo_med = statistics.median(r["sec"] for r in lo_runs)
-    hi_med = statistics.median(r["sec"] for r in hi_runs)
-    eff = (hi["convs_per_sec"] / lo["convs_per_sec"]) / 4
-    eff_med = (
-        (lo["convs"] / hi_med) / (lo["convs"] / lo_med)
-    ) / 4
-    # The EFFECTIVE run configuration, captured from the environment the
-    # workers actually saw — the report embeds this instead of hardcoded
-    # prose, so an RM_TASKSET=0 / RM_JAVA_OPTS / RM_SPARK_CONF override
-    # can't ship under a description of a different protocol.
     config = {
-        "taskset_pinning": os.environ.get("RM_TASKSET", "1") != "0",
         "cpu_topology": _cpu_topology(),
-        "java_opts": os.environ.get("RM_JAVA_OPTS", ""),
-        "spark_conf": os.environ.get("RM_SPARK_CONF", ""),
-        "aqe": os.environ.get("RM_AQE", "0") != "0",
-        "local_dir": os.environ.get("RM_LOCAL_DIR", "/dev/shm/rm-spark-local"),
-        "shuffle_partitions": os.environ.get("RM_SHUFFLE_PARTITIONS", "32"),
+        "cpus_available": available,
+        "shuffle_partitions": partitions,
         "corpus_dir": corpus_dir,
-        "code_hash": _code_version(),
+        "code_hash": bench._code_version(),
         "trials": trials,
     }
     result = {
         "n_entities": n_entities,
         "n_lo": n_lo, "n_hi": n_hi,
-        f"local{n_lo}": lo, f"local{n_hi}": hi,
-        f"local{n_lo}_all_sec": [r["sec"] for r in lo_runs],
-        f"local{n_hi}_all_sec": [r["sec"] for r in hi_runs],
-        f"local{n_lo}_all_steal_pct": [r.get("steal_pct") for r in lo_runs],
-        f"local{n_hi}_all_steal_pct": [r.get("steal_pct") for r in hi_runs],
-        "best_both_quiet": _quiet(lo) and _quiet(hi),
-        "scaling_efficiency_best": round(eff, 3),
-        "scaling_efficiency_median": round(eff_med, 3),
+        "f1": lo_runs[0]["f1"],
         "config": config,
     }
+    for n, rs in ((n_lo, lo_runs), (n_hi, hi_runs)):
+        result[f"local{n}_all_sec"] = [r["sec"] for r in rs]
+        result[f"local{n}_all_steal_pct"] = [r["steal_pct"] for r in rs]
+    _summarize(result, lo_runs[0]["convs"])
 
-    # Merge into the per-pair results file, then regenerate BENCH.md from
-    # every recorded pair (so 2->8 and 8->32 evidence coexist). If the
-    # file already holds this pair measured under the IDENTICAL protocol
-    # config AND identical library code (code_hash), the trials are
-    # POOLED: co-tenant memory-bandwidth noise on this VM is one-sided
-    # and arrives in multi-minute windows (SCALING_NOTES.md §4), so the
-    # min over a larger sample is a strictly tighter upper bound on the
-    # quiet-machine time, and every trial stays visible in the report.
-    # Any config or code difference replaces the entry instead.
+    # Merge into the per-pair results file. If it already holds this pair
+    # measured under the IDENTICAL config AND library code hash, the
+    # trials are POOLED (noise is one-sided, so the min over a larger
+    # sample is a tighter upper bound on quiet-machine time, and every
+    # trial stays visible). Any config or code difference replaces it.
     all_results: dict[str, dict] = {}
     if os.path.exists(RESULTS_PATH):
         with open(RESULTS_PATH) as f:
             all_results = json.load(f)
-    # Key includes the library code hash: measurements of DIFFERENT
-    # pipeline code are different records and must coexist in the report
-    # (a round's code change would otherwise silently discard the prior
-    # round's pooled evidence instead of standing next to it).
     key = f"{n_lo}->{n_hi}@{n_entities}@{config['code_hash'][:8]}"
     prior = all_results.get(key)
-    if prior is not None and prior.get("config") == config | {
-        "trials": prior.get("config", {}).get("trials")
-    }:
+    if prior is not None and _poolable(prior.get("config", {}), config):
         result = _pool(prior, result, n_lo, n_hi)
     print(json.dumps(result))
     all_results[key] = result
     with open(RESULTS_PATH, "w") as f:
         json.dump(all_results, f, indent=1)
-    write_bench_md(all_results)
+
+
+def _poolable(prior_cfg: dict, cfg: dict) -> bool:
+    """Same protocol config and library code, trial count aside."""
+    return prior_cfg == cfg | {"trials": prior_cfg.get("trials")}
+
+
+def _summarize(rec: dict, convs: int) -> dict:
+    """Fill ``rec``'s best run per side, both-quiet flag, efficiencies and
+    trial count from its ``local{n}_all_*`` lists (mutated and returned)."""
+    n_lo, n_hi = rec["n_lo"], rec["n_hi"]
+    for n in (n_lo, n_hi):
+        sec, steal = bench.quiet_min(
+            list(zip(rec[f"local{n}_all_sec"], rec[f"local{n}_all_steal_pct"]))
+        )
+        rec[f"local{n}"] = {"cores": n, "convs": convs, "sec": sec,
+                            "convs_per_sec": round(convs / sec, 1),
+                            "steal_pct": steal}
+    lo, hi = rec[f"local{n_lo}"], rec[f"local{n_hi}"]
+    rec["best_both_quiet"] = all(
+        bench.is_quiet(r["steal_pct"]) for r in (lo, hi)
+    )
+    rec["scaling_efficiency_best"] = round(
+        (hi["convs_per_sec"] / lo["convs_per_sec"]) / 4, 3
+    )
+    lo_med = statistics.median(rec[f"local{n_lo}_all_sec"])
+    hi_med = statistics.median(rec[f"local{n_hi}_all_sec"])
+    rec["scaling_efficiency_median"] = round((lo_med / hi_med) / 4, 3)
+    rec["config"]["trials"] = len(rec[f"local{n_lo}_all_sec"])
+    return rec
 
 
 def _pool(prior: dict, new: dict, n_lo: int, n_hi: int) -> dict:
@@ -287,124 +235,15 @@ def _pool(prior: dict, new: dict, n_lo: int, n_hi: int) -> dict:
     union (quiet-preferred best, exactly as within one run)."""
     out = dict(new)
     for n in (n_lo, n_hi):
-        secs = prior[f"local{n}_all_sec"] + new[f"local{n}_all_sec"]
-        steals = (
-            prior[f"local{n}_all_steal_pct"] + new[f"local{n}_all_steal_pct"]
-        )
-        convs = new[f"local{n}"]["convs"]
-        runs = [
-            {"cores": n, "convs": convs, "sec": s,
-             "convs_per_sec": round(convs / s, 1), "steal_pct": st}
-            for s, st in zip(secs, steals)
-        ]
-        quiet = [r for r in runs if (r["steal_pct"] or 0.0) < 1.0]
-        out[f"local{n}"] = min(quiet or runs, key=lambda r: r["sec"])
-        out[f"local{n}_all_sec"] = secs
-        out[f"local{n}_all_steal_pct"] = steals
-    lo, hi = out[f"local{n_lo}"], out[f"local{n_hi}"]
-    out["best_both_quiet"] = (
-        (lo["steal_pct"] or 0.0) < 1.0 and (hi["steal_pct"] or 0.0) < 1.0
-    )
-    out["scaling_efficiency_best"] = round(
-        (hi["convs_per_sec"] / lo["convs_per_sec"]) / 4, 3
-    )
-    lo_med = statistics.median(out[f"local{n_lo}_all_sec"])
-    hi_med = statistics.median(out[f"local{n_hi}_all_sec"])
-    out["scaling_efficiency_median"] = round((lo_med / hi_med) / 4, 3)
-    out["config"]["trials"] = len(out[f"local{n_lo}_all_sec"])
-    return out
-
-
-def write_bench_md(all_results: dict[str, dict]) -> None:
-    sections = []
-    for key in sorted(all_results):
-        r = all_results[key]
-        n_lo, n_hi, n_entities = r["n_lo"], r["n_hi"], r["n_entities"]
-        lo, hi = r[f"local{n_lo}"], r[f"local{n_hi}"]
-        cfg = r["config"]
-        pin = (
-            f"taskset-pinned to cpu ids 0..N-1 ({cfg['cpu_topology']})"
-            if cfg["taskset_pinning"]
-            else "NOT pinned (RM_TASKSET=0 override was in effect)"
-        )
-        sections.append(f"""## {n_lo} → {n_hi} cores, {n_entities} entities
-
-| cores | conversations | wall sec (best) | all trials (sec) | trial steal % | convs/sec |
-|---|---|---|---|---|---|
-| {n_lo} | {lo["convs"]} | {lo["sec"]} | {r[f"local{n_lo}_all_sec"]} | {r.get(f"local{n_lo}_all_steal_pct")} | {lo["convs_per_sec"]} |
-| {n_hi} | {hi["convs"]} | {hi["sec"]} | {r[f"local{n_hi}_all_sec"]} | {r.get(f"local{n_hi}_all_steal_pct")} | {hi["convs_per_sec"]} |
-
-Trial steal % = host-steal share of machine capacity during each timed
-window (/proc/stat) — <1% marks a quiet VM; "best" prefers quiet trials
-(this pair's best trials: {"both quiet" if r.get("best_both_quiet") else
-"NOT both quiet — treat the ratio as a lower bound on true efficiency"}).
-
-**Scaling efficiency ({n_lo} → {n_hi} cores) =
-{r["scaling_efficiency_best"]:.3f}** (best-of-{cfg["trials"]};
-median-based: {r["scaling_efficiency_median"]:.3f})
-(= (convs/sec @{n_hi} / convs/sec @{n_lo}) / 4)
-
-Effective config (captured from the run, not assumed): {pin};
-JVM opts `{cfg["java_opts"] or "(none)"}`; Spark conf
-`{cfg["spark_conf"] or "(none)"}`; AQE {"on" if cfg["aqe"] else "off"};
-shuffle partitions {cfg["shuffle_partitions"]} at both core counts;
-shuffle scratch `{cfg["local_dir"]}`; corpus `{cfg["corpus_dir"]}`
-(content-hash keyed, _SUCCESS-checked); library code hash
-`{cfg.get("code_hash", "unknown")}` (pooling requires an exact match,
-so every trial in this section measured identical pipeline code).
-
-Reproduce: `python bench/scaling.py {n_entities} {n_lo} {cfg["trials"]}`
-""")
-    body = "\n".join(sections)
-    md = f"""# BENCH — transcript ER pipeline scaling evidence
-
-North rule: throughput scaling efficiency >= 0.8 from N to 4N executors.
-Sandbox proxy (BASELINE.md): the same pipeline on the same cached input
-at `local[N]` vs `local[4N]`, shuffle partitions fixed so plan shape and
-task count are identical — only executor-thread parallelism varies.
-Protocol (bench/scaling.py): each worker is pinned (`taskset`) to
-exactly its core count — local[N] alone bounds only executor threads,
-while the JVM sizes GC/JIT pools to all host CPUs (ParallelGCThreads
-measured 23 unpinned vs 2 pinned), so an unpinned low-core run offloads
-GC/compiler work to spare cores, help a real N-core executor never
-gets. Isolated JVM per run; 1 warm-up run discarded; inside each JVM
-one untimed small-corpus pipeline execution JIT-compiles the codegen
-classes before the timed run (cold codegen measured ~6x CPU on the
-scoring stage — steady state is what a long-lived executor sees);
-alternating trials (hi, lo, hi, lo, ...) so drift hits both configs;
-best-of-N per config (noise on this shared VM is one-sided — it only
-slows runs down). Two sandbox-only confounders are removed so the
-measurement reflects executor parallelism (bench/scaling_worker.py
-documents both; neither applies to a real cluster): shuffle scratch on
-tmpfs (the VM's single shared block device serializes concurrent
-shuffle writes; real executors have local NVMe) and AQE off for this
-microbench only (its per-query-stage driver round-trips dominate at
-second-scale stages; library defaults keep AQE ON). The corpus is
-generated once, parked as parquet, and cached clustered by conv_id —
-the Iceberg bucket layout a production transcript corpus uses — so the
-turn payload is shuffled zero times inside the timed pipeline.
-
-Workload: deterministic synthetic corpus (record_matcher_spark.datagen,
-seed 42), pipeline = rollup -> blocking (role-seq cap 64 / token-prefix
-/ minhash 16x4 bands) -> vectorized scoring -> threshold-mode match
-edges -> connected components on dictionary-encoded long ids
-(edge_mode="threshold": the measured DAG clusters all pairs at
-required_threshold; the reference-semantics resolve stage is exercised
-by bench.py's tabular match_* queries and the driver correctness rows).
-Timing excludes input generation (cached + counted before the timer).
-Each section below embeds the EFFECTIVE config its runs used.
-
-{body}"""
-    # Measured analysis (per-stage decomposition, hardware-ceiling
-    # evidence) maintained by hand in bench/SCALING_NOTES.md — appended
-    # verbatim so regeneration never drops it.
-    notes = os.path.join(REPO, "bench", "SCALING_NOTES.md")
-    if os.path.exists(notes):
-        with open(notes) as f:
-            md += "\n" + f.read()
-    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
-        f.write(md)
+        for field in ("sec", "steal_pct"):
+            k = f"local{n}_all_{field}"
+            out[k] = prior[k] + new[k]
+    return _summarize(out, new[f"local{n_lo}"]["convs"])
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--worker"]:
+        c, p, n, d = sys.argv[2:6]
+        worker(int(c), int(p), int(n), d)
+    else:
+        main(sys.argv[1:])

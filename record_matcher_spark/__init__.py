@@ -17,7 +17,7 @@ No per-row Python anywhere in the hot path.
 
 from record_matcher_spark.config import ColumnRule, MatchConfig
 from record_matcher_spark.incremental import apply_merges, match_increment
-from record_matcher_spark.matcher import RecordMatcher, match_records
+from record_matcher_spark.matcher import match_records
 from record_matcher_spark.operators.scoring import score_pairs, uniqueness_by_columns
 from record_matcher_spark.streaming import TranscriptStreamMatcher
 
@@ -26,7 +26,6 @@ __version__ = "0.3.0"
 __all__ = [
     "ColumnRule",
     "MatchConfig",
-    "RecordMatcher",
     "TranscriptStreamMatcher",
     "apply_merges",
     "match_increment",

@@ -41,10 +41,9 @@ honored; the duplicate-loser reset clears the actually-pulled columns.
 from __future__ import annotations
 
 from collections import Counter
-from typing import Callable, Mapping, Sequence
+from typing import Callable
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from record_matcher_spark import config as cfgmod

@@ -22,7 +22,6 @@ from datetime import datetime, timedelta
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,

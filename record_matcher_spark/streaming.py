@@ -52,8 +52,7 @@ micro-batch, and a conv_id never re-appears in a later batch (the
 upstream writer emits complete conversations — e.g. files partitioned by
 conversation; this is the same contract match_increment states).
 ``process_batch`` enforces it by anti-joining the batch's conv_ids
-against the corpus and raising on overlap (``check_disjoint=False``
-skips the scan when the upstream provably guarantees it).
+against the corpus and raising on overlap.
 
 This parquet store addresses the state through the DRIVER's filesystem
 (markers + listings are plain ``os`` calls) — the sandbox stand-in. In
@@ -261,8 +260,6 @@ class TranscriptStreamMatcher:
         self,
         batch_df: DataFrame,
         batch_id: int,
-        *,
-        check_disjoint: bool = True,
     ) -> None:
         """The foreachBatch sink: fold one micro-batch into the corpus.
 
@@ -270,13 +267,12 @@ class TranscriptStreamMatcher:
         committed one is skipped (Structured Streaming re-delivers the
         failed batch with the same id after restart).
 
-        ``check_disjoint``: enforce the ingest contract (module docstring)
-        — a conv_id already in the corpus means this batch carries a
+        The ingest contract (module docstring) is enforced on every batch:
+        a conv_id already in the corpus means this batch carries a
         PARTIAL conversation (its turns straddled a batch boundary) and
         folding it would commit a second, conflicting rollup; refuse
         loudly instead. The check is one semi-join of the batch's ids
-        against the slim conversation log; disable only when the upstream
-        writer provably emits whole conversations exactly once.
+        against the slim conversation log.
         """
         batch_id = int(batch_id)
         cur = self.state()
@@ -288,7 +284,7 @@ class TranscriptStreamMatcher:
 
         base_conv = self.conversations()
         base_cl = self.clusters()
-        if check_disjoint and cur is not None:
+        if cur is not None:
             # no broadcast hint: the batch id-set is usually small but not
             # bounded; AQE picks broadcast when it fits (cf. the blocking
             # cap's anti-join, operators/blocking.py)
@@ -304,9 +300,7 @@ class TranscriptStreamMatcher:
                     f"batch {batch_id} re-delivers conversation(s) already "
                     f"in the corpus ({ids}, ...): a conversation's turns "
                     "must arrive whole within one micro-batch. Fix the "
-                    "upstream batching (files partitioned by conversation) "
-                    "or pass check_disjoint=False if this id reuse is "
-                    "intentional."
+                    "upstream batching (files partitioned by conversation)."
                 )
         inc = match_increment(
             batch_df, base_conv, base_cl, self.keys, self.cfg,
@@ -414,7 +408,6 @@ class TranscriptStreamMatcher:
         available_now: bool = True,
         processing_time: str | None = None,
         rebind_checkpoint: bool = False,
-        check_disjoint: bool = True,
     ):
         """Launch the stream: parquet file source → foreachBatch sink.
 
@@ -428,8 +421,8 @@ class TranscriptStreamMatcher:
         ``rebind_checkpoint``: allow a NEW checkpoint dir against existing
         state (see :meth:`_bind_checkpoint` — batch numbering continues,
         nothing is dropped). The input files visible to the new checkpoint
-        are all reprocessed; ``check_disjoint`` (forwarded to the sink)
-        then rejects re-delivered conversations, so rebinding is for NEW
+        are all reprocessed; the sink's disjointness check then rejects
+        re-delivered conversations, so rebinding is for NEW
         input paths, not for re-draining the old one.
         """
         if rebind_checkpoint:
@@ -449,9 +442,7 @@ class TranscriptStreamMatcher:
         stream = reader.parquet(input_path)
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            self.process_batch(
-                batch_df, int(batch_id) + offset, check_disjoint=check_disjoint
-            )
+            self.process_batch(batch_df, int(batch_id) + offset)
 
         writer = (
             stream.writeStream.foreachBatch(_sink)

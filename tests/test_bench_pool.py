@@ -1,4 +1,5 @@
-"""Unit tests for bench/scaling.py's cross-invocation trial pooling.
+"""Unit tests for the bench harness: bench/scaling.py's cross-invocation
+trial pooling and over-subscription refusal, bench.py's headline pool.
 
 Pooling exists because interference noise on this VM is one-sided and
 arrives in multi-minute windows (BENCH.md protocol): the min over a
@@ -90,22 +91,42 @@ def test_pool_falls_back_to_noisy_min_when_no_quiet_trial():
 def test_config_gate_blocks_pooling_on_code_or_config_change():
     # the merge gate in main(): pool only when prior.config equals the
     # new config with `trials` neutralized
-    new_cfg = {"code_hash": "abc", "taskset_pinning": True, "trials": 3}
+    new_cfg = {"code_hash": "abc", "shuffle_partitions": 16, "trials": 3}
 
     def gate(prior_cfg):
-        return prior_cfg == new_cfg | {"trials": prior_cfg.get("trials")}
+        return scaling._poolable(prior_cfg, new_cfg)
 
-    assert gate({"code_hash": "abc", "taskset_pinning": True, "trials": 6})
+    assert gate({"code_hash": "abc", "shuffle_partitions": 16, "trials": 6})
     # different library code -> replace, never pool
-    assert not gate({"code_hash": "zzz", "taskset_pinning": True, "trials": 6})
+    assert not gate({"code_hash": "zzz", "shuffle_partitions": 16, "trials": 6})
     # different protocol -> replace, never pool
-    assert not gate({"code_hash": "abc", "taskset_pinning": False, "trials": 6})
+    assert not gate({"code_hash": "abc", "shuffle_partitions": 64, "trials": 6})
     # legacy entry without code_hash -> replace, never pool
-    assert not gate({"taskset_pinning": True, "trials": 6})
+    assert not gate({"shuffle_partitions": 16, "trials": 6})
+
+
+def test_scaling_refuses_oversubscribed_pair_before_any_worker(monkeypatch):
+    """A pair whose 4N exceeds the CPUs this process may run on would time
+    4N threads on fewer cores; main() refuses before starting a worker
+    (so before any Spark start), explicit N and default N alike."""
+    import pytest
+
+    def no_worker(*args):
+        raise AssertionError("a worker was started")
+
+    monkeypatch.setattr(scaling, "run", no_worker)
+    available = len(os.sched_getaffinity(0))
+    with pytest.raises(SystemExit, match=rf"local\[{4 * available}\] needs"):
+        scaling.main(["2000", str(available), "2"])
+    # default N = a quarter of the CPUs, at least 1: refused below 4 CPUs
+    monkeypatch.setattr(scaling.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    with pytest.raises(SystemExit, match=r"local\[4\] needs 4 CPUs .* on 3"):
+        scaling.main(["2000"])
 
 
 # ---------------------------------------------------------------------------
-# bench.py headline pooling (cross-invocation, keyed by code hash + sf)
+# bench.py headline pooling (cross-invocation, keyed by code hash, core
+# count and sf)
 # ---------------------------------------------------------------------------
 
 bench_spec = importlib.util.spec_from_file_location(
@@ -119,31 +140,47 @@ bench_spec.loader.exec_module(bench)
 def test_headline_pool_merges_same_hash_and_prefers_quiet():
     hist = {}
     t1 = {"q1": [[10.0, 0.1], [30.0, 5.0]], "q2": [[7.0, 9.0]]}
-    _, pooled, noisy = bench._pool_headlines(hist, "h1", "0.1", t1)
+    _, pooled, noisy = bench._pool_headlines(hist, "h1", 4, "0.1", t1)
     assert pooled["q1"] == 10.0          # quiet trial wins
     assert pooled["q2"] == 7.0 and noisy == ["q2"]  # no quiet trial yet
     # second invocation, same code hash: pool tightens
     t2 = {"q1": [[8.0, 0.2]], "q2": [[9.0, 0.0]]}
-    _, pooled, noisy = bench._pool_headlines(hist, "h1", "0.1", t2)
+    _, pooled, noisy = bench._pool_headlines(hist, "h1", 4, "0.1", t2)
     assert pooled["q1"] == 8.0
     assert pooled["q2"] == 9.0 and noisy == []  # quiet 9.0 beats noisy 7.0
-    assert hist["h1"]["invocations"] == 2
-    assert len(hist["h1"]["sf"]["0.1"]["q1"]) == 3
+    assert hist["h1@4"]["invocations"] == 2
+    assert len(hist["h1@4"]["sf"]["0.1"]["q1"]) == 3
 
 
 def test_headline_pool_never_mixes_code_hashes_or_sfs():
     hist = {}
-    bench._pool_headlines(hist, "h1", "0.1", {"q1": [[10.0, 0.1]]})
-    _, pooled, _ = bench._pool_headlines(hist, "h2", "0.1", {"q1": [[20.0, 0.1]]})
+    bench._pool_headlines(hist, "h1", 4, "0.1", {"q1": [[10.0, 0.1]]})
+    _, pooled, _ = bench._pool_headlines(
+        hist, "h2", 4, "0.1", {"q1": [[20.0, 0.1]]}
+    )
     assert pooled["q1"] == 20.0          # h1's faster trial not visible
-    _, pooled, _ = bench._pool_headlines(hist, "h1", "0.01", {"q1": [[5.0, 0.1]]})
+    _, pooled, _ = bench._pool_headlines(
+        hist, "h1", 4, "0.01", {"q1": [[5.0, 0.1]]}
+    )
     assert pooled["q1"] == 5.0           # own sf bucket
-    assert hist["h1"]["sf"]["0.1"]["q1"] == [[10.0, 0.1]]
+    assert hist["h1@4"]["sf"]["0.1"]["q1"] == [[10.0, 0.1]]
 
 
-def test_emit_result_prints_one_parseable_line(capsys, tmp_path):
+def test_headline_pool_never_mixes_core_counts():
+    """Same code hash and sf at another core count is another machine
+    shape: its trials must not enter this count's minimum."""
+    hist = {}
+    bench._pool_headlines(hist, "h1", 32, "0.1", {"q1": [[2.0, 0.1]]})
+    _, pooled, _ = bench._pool_headlines(hist, "h1", 4, "0.1", {"q1": [[9.0, 0.1]]})
+    assert pooled["q1"] == 9.0           # the 32-core trial is not visible
+    assert hist["h1@4"]["invocations"] == 1
+    assert hist["h1@32"]["sf"]["0.1"]["q1"] == [[2.0, 0.1]]
+
+
+def test_emit_result_prints_one_parseable_line(capsys):
     """main()'s result assembly on stubbed timings: one JSON line that
-    parses, headlines pooled, invocation count read from the pool."""
+    parses, carries the core count, headlines pooled, invocation count
+    read from the pool."""
     import json
 
     hist = {}
@@ -154,8 +191,7 @@ def test_emit_result_prints_one_parseable_line(capsys, tmp_path):
     quality = {"f1": 0.999, "precision": 1.0, "recall": 0.998}
     for invocation in (1, 2):
         out = bench._emit_result(
-            hist, "h1", "0.1", trials, 2000, 800, quality,
-            str(tmp_path / "no_scaling_results.json"),
+            hist, "h1", 4, "0.1", trials, 2000, 800, quality
         )
         lines = capsys.readouterr().out.splitlines()
         assert len(lines) == 1
@@ -165,4 +201,5 @@ def test_emit_result_prints_one_parseable_line(capsys, tmp_path):
     assert out["value"] == 9.5
     assert out["transcripts"]["conversations_per_sec"] == 250.0
     assert out["pooled"]["n_trials"] == {"match_exact": 4, "transcripts_match": 2}
+    assert out["cores"] == 4
     assert "scaling" not in out

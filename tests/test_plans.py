@@ -72,7 +72,7 @@ def test_exact_dedup_is_one_aggregate_no_join(spark):
 def test_rollup_reuses_conv_id_clustered_input(spark):
     """rollup over an input already hash-partitioned by conv_id (the
     Iceberg bucket layout of a production transcript corpus, and what
-    bench/scaling_worker.py caches) must add NO Exchange: the aggregate's
+    bench.time_transcripts caches) must add NO Exchange: the aggregate's
     ClusteredDistribution(conv_id) is satisfied by the child partitioning,
     so the 10^12-row turn payload is never shuffled by the rollup."""
     from record_matcher_spark.datagen import generate_transcripts

@@ -4,7 +4,6 @@ batch pipeline, replay idempotency, cross-batch merges, compaction."""
 
 from __future__ import annotations
 
-import datetime
 import os
 
 from pyspark.sql import functions as F
@@ -100,7 +99,7 @@ def test_cross_batch_merge_then_compact(spark, tmp_path):
 def test_partial_conversation_rejected(spark, tmp_path):
     """A conv_id re-appearing in a later batch means its turns straddled a
     micro-batch boundary — folding would commit a second conflicting
-    rollup, so the sink refuses loudly (check_disjoint)."""
+    rollup, so the sink refuses loudly (its disjointness check)."""
     import pytest
 
     from record_matcher_spark.errors import InvalidConfigError
