@@ -313,14 +313,6 @@ class RecordMatcher:
     >>> records_matched, summary = rm.match()
     """
 
-    MATCH_STATUS = {
-        "unmatched": "UNMATCHED",
-        "matched": "MATCHED",
-        "ambiguous": "AMBIGUOUS",
-        "review": "REVIEW",
-        "duplicate": "DUPLICATE",
-    }
-
     def __init__(
         self,
         spark: SparkSession | None = None,

@@ -41,13 +41,6 @@ TRANSCRIPT_SCHEMA = StructType(
     ]
 )
 
-TRUTH_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("entity_id", StringType(), False),
-    ]
-)
-
 _VOCAB = [
     f"{w}{i}"
     for i in range(40)

@@ -15,8 +15,8 @@ increment:
    against the base's keyed relation, which a production deployment keeps
    materialized (bucketed by key) and only APPENDS to per batch;
 3. scores only those candidate pairs (same vectorized scorers, with the
-   corpus-level uniqueness weights so a small batch's skewed column
-   statistics cannot shift row weights — see ``uniqueness``);
+   uniqueness weights of base ∪ batch so a small batch's skewed column
+   statistics cannot shift row weights);
 4. contracts every base endpoint to its cluster label and runs connected
    components on the contracted graph — node count is O(|batch| + touched
    clusters), NOT O(corpus); the base graph is never revisited.
@@ -33,8 +33,8 @@ well below — e.g. the closed-form driver corpus in ``__spark_entry__``),
 incremental and full-batch runs produce the identical partition of
 conversations into clusters; tests/test_incremental.py pins this. With
 thin margins they can differ exactly where any streaming system must:
-uniqueness weights drift as the corpus grows (frozen here by contract)
-and block caps see different block sizes.
+uniqueness weights drift as the corpus grows and block caps see
+different block sizes.
 
 Structured Streaming wrapper: this function is deliberately a pure batch
 operator so it drops into ``foreachBatch`` unchanged::
@@ -53,17 +53,12 @@ batch_id, the standard Spark pattern).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
-from record_matcher_spark.operators.blocking import (
-    DEFAULT_TRANSCRIPT_KEYS,
-    BlockingKey,
-    candidate_pairs,
-)
+from record_matcher_spark.operators.blocking import candidate_pairs
 from record_matcher_spark.operators.cluster import connected_components
 from record_matcher_spark.operators.resolve import resolve_matches
 from record_matcher_spark.operators.rollup import rollup_conversations
@@ -125,12 +120,9 @@ def match_increment(
     new_transcripts: DataFrame,
     base_conversations: DataFrame,
     base_clusters: DataFrame,
-    keys: Sequence[BlockingKey] = DEFAULT_TRANSCRIPT_KEYS,
     cfg: MatchConfig | None = None,
     *,
     edge_mode: str = "threshold",
-    uniqueness: Mapping[str, float] | None = None,
-    cache: bool = True,
 ) -> IncrementResult:
     """Match a batch of transcripts against a clustered base corpus.
 
@@ -145,12 +137,10 @@ def match_increment(
     (threshold = transitive-closure recall, best_match = reference claim
     semantics).
 
-    ``uniqueness``: per-column uniqueness for the scoring weights.
-    Default None computes it over base ∪ batch — the same statistic the
-    full-batch pipeline would use, so shared pairs score identically.
-    Production deployments freeze a corpus-level map instead (one
-    aggregate over the base, reused every batch) — weights then cannot
-    drift between batches.
+    Candidates come from the default blocking families. The scoring
+    weights use the per-column uniqueness of base ∪ batch — the same
+    statistic the full-batch pipeline would use, so shared pairs score
+    identically; it is collected to the driver once per call.
 
     Returns assignments for the batch's conversations (singletons keep
     their own conv_id, like the batch pipeline) plus the base-cluster
@@ -163,9 +153,8 @@ def match_increment(
     persisted: list = []
 
     def _persist(df: DataFrame) -> DataFrame:
-        if cache:
-            df = df.persist()
-            persisted.append(df)
+        df = df.persist()
+        persisted.append(df)
         return df
 
     newc = _persist(
@@ -195,8 +184,7 @@ def match_increment(
         base_conversations.select(*y_cols).unionByName(newc.select(*y_cols))
     )
 
-    if uniqueness is None:
-        uniqueness = uniqueness_by_columns(all_y, cfg.x_match_columns)
+    uniqueness = uniqueness_by_columns(all_y, cfg.x_match_columns)
 
     # Lineage policy: the batch-sized frames (candidates, scored pairs,
     # the contracted edge set below) are EAGER localCheckpoints, not mere
@@ -213,8 +201,7 @@ def match_increment(
     # construction — never O(corpus) — so both the job and the
     # checkpoint storage are bounded.
     cand = candidate_pairs(
-        newc, all_y, keys, x_id=cfg.x_id, y_id=cfg.y_id,
-        cache=cache, persisted=persisted,
+        newc, all_y, x_id=cfg.x_id, y_id=cfg.y_id, persisted=persisted,
     ).where(F.col("x_id") != F.col("y_id")).localCheckpoint(eager=True)
     pairs = score_candidate_pairs(
         newc, all_y, cand, cfg, uniqueness=uniqueness

@@ -18,16 +18,10 @@ Differences from the reference, all documented where implemented:
 
 from __future__ import annotations
 
-from typing import Mapping
-
 from pyspark.sql import DataFrame
 
 from record_matcher_spark.config import MatchConfig
-from record_matcher_spark.operators.resolve import (
-    COLUMNS_TO_ADD,
-    MATCH_STATUS,
-    resolve_matches,
-)
+from record_matcher_spark.operators.resolve import resolve_matches
 from record_matcher_spark.operators.scoring import score_pairs
 
 
@@ -36,8 +30,6 @@ def match_records(
     y_df: DataFrame,
     cfg: MatchConfig,
     *,
-    status_labels: Mapping[str, str] = MATCH_STATUS,
-    columns_to_add: Mapping[str, str] = COLUMNS_TO_ADD,
     keep_debug: bool = False,
 ) -> DataFrame:
     """One-shot functional pipeline: annotated x DataFrame.
@@ -48,12 +40,4 @@ def match_records(
     action.
     """
     pairs = score_pairs(x_df, y_df, cfg)
-    return resolve_matches(
-        x_df,
-        y_df,
-        pairs,
-        cfg,
-        status_labels=status_labels,
-        columns_to_add=columns_to_add,
-        keep_debug=keep_debug,
-    )
+    return resolve_matches(x_df, y_df, pairs, cfg, keep_debug=keep_debug)

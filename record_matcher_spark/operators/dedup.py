@@ -2,10 +2,9 @@
 
 Beyond the reference's single-column duplicate finder
 (/root/reference/record_matcher/records.py:135-153), a web-scale corpus
-pipeline needs near-duplicate detection. Five operators, all
+pipeline needs near-duplicate detection. Four operators, all
 DataFrame-native:
 
-- ``exact_dedup``           hash groupBy on normalized text
 - ``minhash_lsh_pairs``     word-shingle MinHash -> banded LSH -> verify
 - ``simhash_pairs``         frequency-weighted SimHash, hamming <= d
 - ``ngram_jaccard_pairs``   character n-gram Jaccard over blocked pairs
@@ -32,34 +31,11 @@ O(n^2/256) candidates).
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.functions import texthash as TH
-
-
-# --------------------------------------------------------------------------
-# exact dedup
-# --------------------------------------------------------------------------
-
-
-def exact_dedup(
-    df: DataFrame, id_col: str, cols: Sequence[str]
-) -> DataFrame:
-    """Exact duplicate groups: one row per distinct value-tuple with the
-    kept (min) id and the number of copies. Single hash-shuffle groupBy
-    with map-side partial aggregation; at 100 TB this is the cheapest
-    possible dedup (no pair materialization)."""
-    return (
-        df.groupBy(*cols)
-        .agg(
-            F.min(id_col).alias(f"kept_{id_col}"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .select(f"kept_{id_col}", "n_copies")
-    )
+from record_matcher_spark.operators.similarity import dot_expr
 
 
 # --------------------------------------------------------------------------
@@ -426,16 +402,6 @@ WHERE (floor((CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
 # --------------------------------------------------------------------------
 
 
-def _dot_expr(a, b):
-    """Sequential-order dot product (index-ascending FP accumulation — the
-    oracle mirrors the same order, see similarity.py)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def embedding_near_dup(
     df: DataFrame,
     id_col: str,
@@ -447,7 +413,7 @@ def embedding_near_dup(
     (e.g. a coarse cluster / SRP bucket) to avoid the full cross join —
     None means brute force (the small-scale baseline; the scale path is
     similarity.srp_lsh_pairs)."""
-    norm = F.sqrt(_dot_expr(F.col(vec_col), F.col(vec_col)))
+    norm = F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col)))
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -463,7 +429,7 @@ def embedding_near_dup(
         F.col("nrm").alias("nb"), *([F.col("blk")] if block_col else []),
     )
     joined = a.join(b, "blk") if block_col else a.crossJoin(b)
-    cos = _dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
         joined.where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", TH.q6_expr(cos).alias("cosine"))

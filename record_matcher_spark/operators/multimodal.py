@@ -2,14 +2,11 @@
 
 Training corpora carry image/audio/video next to text. This module makes
 the SPARK-side plumbing real — schema, Arrow batching, partitioning,
-``mapInPandas`` UDF signatures — while the actual codec step is stubbed
-(no image/audio libraries in this container, mandate says stub the decode
-behind ``NotImplementedError`` or a deterministic fake):
+``mapInPandas`` UDF signatures — while the codec step is a deterministic
+fake (no image/audio decoder is a dependency):
 
 - ``attach_media``            text -> (media binary, media_meta struct);
                               deterministic, so tests/oracles can verify
-- ``decode_media``            REAL decode entrypoint -> NotImplementedError
-                              (documented integration point)
 - ``extract_media_features``  mapInPandas over Arrow batches computing
                               deterministic byte-level features (length,
                               first/last byte, polynomial byte hash) — the
@@ -40,13 +37,6 @@ from pyspark.sql.types import (
 
 from record_matcher_spark.functions.texthash import BASE, P
 
-MEDIA_META = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("id", LongType()),
@@ -69,18 +59,6 @@ def attach_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.lit("fake/text-bytes").alias("kind"),
             F.octet_length(media).cast("long").alias("n_bytes"),
         ).alias("media_meta"),
-    )
-
-
-def decode_media(df: DataFrame, codec: str) -> DataFrame:
-    """Integration point for real codecs (PIL / torchaudio / pyav).
-
-    Not available in this environment — the deterministic byte-level
-    pipeline below exercises the identical plumbing.
-    """
-    raise NotImplementedError(
-        f"no media codec available for {codec!r}; install a decoder and "
-        "register it in _FEATURE_FNS"
     )
 
 

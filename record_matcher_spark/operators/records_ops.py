@@ -1,8 +1,10 @@
-"""Standalone record utilities (reference O1, O5).
+"""Standalone record utility (reference O5).
 
-Helpers the reference ships outside the matcher loop (its records.py),
-as DataFrame transformations. Its standalone group-by-values filter (O4)
-is the blocking equi-join inside operators/scoring.score_pairs.
+A helper the reference ships outside the matcher loop (its records.py),
+as a DataFrame transformation. Its column-set capture (O1) is free in
+Spark, where the schema is fixed at ingest; its standalone
+group-by-values filter (O4) is the blocking equi-join inside
+operators/scoring.score_pairs.
 """
 
 from __future__ import annotations
@@ -11,11 +13,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.functions.scorers import blank_coalesce
-
-
-def column_names(df: DataFrame) -> set[str]:
-    """O1 (records.py:33-46): free in Spark — the schema is fixed at ingest."""
-    return set(df.columns)
 
 
 def duplicated_by_column(df: DataFrame, column: str) -> DataFrame:

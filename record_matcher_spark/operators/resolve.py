@@ -14,14 +14,12 @@ iteration, no driver-side loops:
 
 from __future__ import annotations
 
-from typing import Mapping
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
 
-# Reference display vocabulary (matcher.py:269-275); overridable.
+# Reference display vocabulary (matcher.py:269-275).
 MATCH_STATUS = {
     "unmatched": "UNMATCHED",
     "matched": "MATCHED",
@@ -30,7 +28,7 @@ MATCH_STATUS = {
     "duplicate": "DUPLICATE",
 }
 
-# Reference output column names (matcher.py:277-281); overridable.
+# Reference output column names (matcher.py:277-281).
 COLUMNS_TO_ADD = {
     "match_status": "match_status",
     "matched_with_row": "row(s)_matched",
@@ -72,8 +70,6 @@ def resolve_matches(
     pairs: DataFrame,
     cfg: MatchConfig,
     *,
-    status_labels: Mapping[str, str] = MATCH_STATUS,
-    columns_to_add: Mapping[str, str] = COLUMNS_TO_ADD,
     keep_debug: bool = False,
 ) -> DataFrame:
     """Annotate x with match status / matched rows / scores + pulled columns.
@@ -105,12 +101,12 @@ def resolve_matches(
 
     Output: all x columns (targets overwritten where they pre-exist), pulled
     targets, ``match_status`` / ``row(s)_matched`` / ``match_score``
-    (names per ``columns_to_add``). With ``keep_debug`` the internal
+    (names per ``COLUMNS_TO_ADD``). With ``keep_debug`` the internal
     phase-1 status / claim columns survive for summary computation.
     """
-    st_col = columns_to_add["match_status"]
-    rows_col = columns_to_add["matched_with_row"]
-    score_col = columns_to_add["match_score"]
+    st_col = COLUMNS_TO_ADD["match_status"]
+    rows_col = COLUMNS_TO_ADD["matched_with_row"]
+    score_col = COLUMNS_TO_ADD["match_score"]
 
     agg = tied_best_matches(pairs)
     xr = x_df.join(agg, on=x_df[cfg.x_id] == agg["x_id"], how="left").drop(
@@ -210,7 +206,7 @@ def resolve_matches(
     # status display + loser clearing (duplicates KEEP pulled values and
     # annotations, matcher.py:424-431; losers are cleared, 433-447)
     label = F.col("__rm_final")
-    for key, shown in status_labels.items():
+    for key, shown in MATCH_STATUS.items():
         label = F.when(F.col("__rm_final") == key, F.lit(shown)).otherwise(label)
     xr = xr.withColumn(st_col, label)
     xr = xr.withColumn(rows_col, F.when(loser, F.lit("")).otherwise(F.col(rows_col)))

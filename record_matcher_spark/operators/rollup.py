@@ -15,24 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Derived match columns and what they're for:
-#   full_text        whole-conversation fuzzy similarity (token_set_jaccard)
-#   first_user_text  cheap high-signal fuzzy column (levenshtein/jw)
-#   role_seq         exact/blocking column (conversation shape)
-#   tool_seq         exact column (tool usage fingerprint)
-#   n_turns          blocking bucket
-#   ts_min           time-window blocking if needed
-CONVERSATION_COLUMNS = [
-    "conv_id",
-    "n_turns",
-    "full_text",
-    "first_user_text",
-    "role_seq",
-    "tool_seq",
-    "ts_min",
-    "turns",
-]
-
 
 def rollup_conversations(
     transcripts: DataFrame, tokens: bool = False
@@ -177,15 +159,3 @@ def rollup_sequence(
         F.min(order_cols[0]).alias(f"{order_cols[0]}_min"),
     )
 
-
-def explode_turns(conversations: DataFrame) -> DataFrame:
-    """Inverse of the rollup (for the per-turn-equality invariant test)."""
-    t = F.explode("turns").alias("t")
-    return conversations.select("conv_id", t).select(
-        "conv_id",
-        F.col("t.turn_idx").alias("turn_idx"),
-        F.col("t.role").alias("role"),
-        F.col("t.text").alias("text"),
-        F.col("t.tool").alias("tool"),
-        F.col("t.ts").alias("ts"),
-    )

@@ -35,24 +35,6 @@ OPTIMAL = "optimal_threshold"
 # sentinel (spark.sql.defaultSizeInBytes defaults to Long.MaxValue).
 _UNKNOWN_STATS_BYTES = 1 << 62
 
-_BYTE_UNITS = {
-    "": 1, "b": 1,
-    "k": 1 << 10, "kb": 1 << 10,
-    "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30,
-    "t": 1 << 40, "tb": 1 << 40,
-}
-
-
-def _parse_byte_conf(v: str) -> int:
-    """'128MB' / '134217728' / '4m' → bytes (Spark conf byte syntax)."""
-    s = v.strip().lower()
-    i = len(s)
-    while i > 0 and not s[i - 1].isdigit():
-        i -= 1
-    return int(s[:i]) * _BYTE_UNITS[s[i:].strip()]
-
-
 def _estimated_scan_partitions(df: DataFrame) -> int | None:
     """Scan-task estimate from OPTIMIZER STATISTICS — no Spark job, no
     RDD conversion, no AQE stage materialization.
@@ -73,10 +55,10 @@ def _estimated_scan_partitions(df: DataFrame) -> int | None:
         # py4j converts scala BigInt to int when it fits; fall back to
         # the string form for values past the auto-conversion range
         size = raw if isinstance(raw, int) else int(raw.toString())
-        mpb = _parse_byte_conf(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", "128MB"
-            )
+        # spark.sql.files.maxPartitionBytes, parsed by Spark's own conf
+        mpb = (
+            df.sparkSession._jsparkSession.sessionState()
+            .conf().filesMaxPartitionBytes()
         )
     except Exception:
         return None

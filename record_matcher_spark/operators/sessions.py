@@ -6,7 +6,7 @@ the training-data-pipeline scope: session segmentation is the event-log
 analogue of the turn→conversation rollup, and the standard first step for
 building behavioral / agent-trajectory training corpora.
 
-Three operators over one semantics (a *session* is a maximal run of
+Two operators over one semantics (a *session* is a maximal run of
 events of one user where consecutive event times differ by AT MOST
 ``gap``; a difference strictly greater than gap starts a new session):
 
@@ -15,8 +15,6 @@ events of one user where consecutive event times differ by AT MOST
 - :func:`session_stats`    per-session aggregates via Spark's NATIVE
                            ``F.session_window`` (gap-merged event-time
                            windows)
-- :func:`session_stats_stream`  the same aggregate as a Structured
-                           Streaming query (watermark + session window)
 
 Boundary exactness: Spark's session window for an event at t spans
 [t, t+gap) but MERGES a successor whose start touches the end
@@ -40,9 +38,6 @@ Scale shape (100 TB):
   pass over the tiny per-bucket summary (labels identical to the unsplit
   path — see the parameter docstring; equivalence property-tested in
   tests/test_sessions.py).
-- Streaming: state per OPEN session only; the watermark closes sessions
-  ``delay`` behind max event time, so state is bounded by the active-user
-  set, not history.
 """
 
 from __future__ import annotations
@@ -208,56 +203,3 @@ def session_stats(
         .drop("session_window")
     )
 
-
-def session_stats_stream(
-    stream_df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    watermark_delay: str = "1 hour",
-    type_col: str | None = "event_type",
-    value_col: str | None = "value",
-) -> DataFrame:
-    """Streaming twin of :func:`session_stats` over a ``readStream``
-    DataFrame: watermark + session-window aggregation.
-
-    State holds OPEN sessions only; a session is finalized (emitted in
-    append mode) once the watermark — max event time minus
-    ``watermark_delay`` — passes its close (last event + gap). Late
-    events within the delay extend/merge sessions exactly like batch;
-    events later than the delay are dropped by the watermark, which is
-    the documented divergence from the batch op (batch has no lateness
-    concept). Emitted rows carry the identical schema and values as
-    :func:`session_stats` restricted to finalized sessions.
-    """
-    aggs = [
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(F.unix_timestamp(F.col(ts_col))).alias("session_start_epoch"),
-        F.max(F.unix_timestamp(F.col(ts_col))).alias("session_end_epoch"),
-    ]
-    if type_col:
-        # streaming aggregation: countDistinct is unsupported; an exact
-        # distinct count over the small per-session type alphabet is the
-        # size of the collected set
-        aggs.append(
-            F.size(F.collect_set(F.col(type_col))).alias("n_event_types")
-        )
-    if value_col:
-        aggs.append(
-            F.sum(F.round(F.col(value_col) * 100).cast("long")).alias(
-                "value_cents_sum"
-            )
-        )
-    return (
-        stream_df.where(
-            F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
-        )
-        .withWatermark(ts_col, watermark_delay)
-        .groupBy(
-            F.col(user_col),
-            F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds"),
-        )
-        .agg(*aggs)
-        .drop("session_window")
-    )

@@ -5,7 +5,6 @@ matcher.py:74-89); mandated by the training-data-pipeline scope:
 
 - ``language_id``      stopword/charset n-gram heuristic
 - ``quality_score``    length / punctuation / stopword / digit ratios
-- ``token_stats``      whitespace + BPE-ish regex token counting
 - ``fingerprints``     winnowing-style rolling-hash document fingerprint
 
 All pure Catalyst expressions (whole-stage codegen, no Python), each with
@@ -29,12 +28,6 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "et", "les", "des", "un", "une", "est", "dans"),
     "es": ("el", "los", "de", "las", "y", "que", "en", "un", "una", "por"),
 }
-
-# BPE-ish pretokenizer: word runs OR single non-word non-space marks —
-# approximates byte-pair pretokenization splits (ASCII classes only, so
-# Java and DuckDB regex engines agree).
-BPE_ISH_RE = r"[A-Za-z0-9_]+|[^A-Za-z0-9_\s]"
-
 
 def language_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """-> [id, lang, lang_score]: argmax stopword-hit count, ties broken
@@ -219,31 +212,6 @@ SELECT id, CAST(n_chars AS BIGINT) AS n_chars,
     + 0.2 * (1.0 - least(digit_ratio * 4.0, 1.0))
     + 0.1 * least(stopword_ratio * 5.0, 1.0)))''')} AS quality
 FROM r
-"""
-
-
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """-> [id, n_ws_tokens, n_distinct_tokens, n_bpe_ish_tokens]."""
-    toks = TH.tokens_expr(F.col(text_col))
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.size(toks).cast("long").alias("n_ws_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_distinct_tokens"),
-        F.regexp_count(F.col(text_col), F.lit(BPE_ISH_RE))
-        .cast("long")
-        .alias("n_bpe_ish_tokens"),
-    )
-
-
-def token_stats_oracle_sql(table: str, id_col: str, text_col: str) -> str:
-    toks = TH.tokens_sql(text_col)
-    return f"""
-SELECT {id_col} AS id,
-  CAST(len({toks}) AS BIGINT) AS n_ws_tokens,
-  CAST(len(list_distinct({toks})) AS BIGINT) AS n_distinct_tokens,
-  CAST(len(regexp_extract_all({text_col}, '{BPE_ISH_RE}')) AS BIGINT)
-    AS n_bpe_ish_tokens
-FROM {table}
 """
 
 

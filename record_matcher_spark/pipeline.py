@@ -12,7 +12,6 @@ entity truth *under identical blocking keys* (BASELINE.json).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -20,7 +19,6 @@ from pyspark.sql import functions as F
 from record_matcher_spark.config import ColumnRule, MatchConfig
 from record_matcher_spark.operators.blocking import (
     DEFAULT_TRANSCRIPT_KEYS,
-    BlockingKey,
     candidate_pairs,
 )
 from record_matcher_spark.operators.cluster import connected_components
@@ -140,16 +138,15 @@ class TranscriptMatchResult:
 def match_transcripts(
     transcripts: DataFrame,
     cfg: MatchConfig | None = None,
-    keys: Sequence[BlockingKey] = DEFAULT_TRANSCRIPT_KEYS,
     edge_mode: str = "best_match",
-    cache: bool = True,
     store=None,
     observe: bool = False,
 ) -> TranscriptMatchResult:
     """Dedup-mode pipeline: every conversation is matched against its
     blocked candidates (directed, reference semantics incl. duplicate
     resolution, SURVEY.md §2.5), match edges feed connected components
-    which assign min-conv_id cluster labels.
+    which assign min-conv_id cluster labels. Candidates come from the
+    default blocking families (``DEFAULT_TRANSCRIPT_KEYS``).
 
     ``edge_mode``:
     - ``"best_match"`` — edges are single-survivor claims with final status
@@ -173,7 +170,6 @@ def match_transcripts(
         raise ValueError(f"unknown edge_mode {edge_mode!r}")
     cfg = cfg or default_transcript_match_config()
     cfg_key = repr(cfg)
-    key_names = [k.name for k in keys]
     persisted: list = []
     observations: dict = {}
 
@@ -200,10 +196,8 @@ def match_transcripts(
         every consumer."""
         if store is not None:
             return store.run_stage(name, build, config=config)
-        df = build()
-        if cache:
-            df = df.persist()
-            persisted.append(df)
+        df = build().persist()
+        persisted.append(df)
         return df
 
     # The ordered `turns` array is the heaviest rollup column and no
@@ -227,13 +221,14 @@ def match_transcripts(
         "candidates",
         lambda: _obs(
             candidate_pairs(
-                conv, conv, keys, x_id=cfg.x_id, y_id=cfg.y_id,
-                cache=cache, persisted=persisted,
+                conv, conv, x_id=cfg.x_id, y_id=cfg.y_id, persisted=persisted,
             ).where(F.col("x_id") != F.col("y_id")),
             "candidates",
             F.count(F.lit(1)).alias("n_candidates"),
         ),
-        config=key_names,
+        # lineage config: a store built with other blocking families
+        # is not resumed
+        config=[k.name for k in DEFAULT_TRANSCRIPT_KEYS],
     )
     pairs = _stage(
         "pairs",

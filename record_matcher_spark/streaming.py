@@ -68,17 +68,12 @@ import os
 import re
 import shutil
 from dataclasses import dataclass
-from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
 from record_matcher_spark.config import MatchConfig
 from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.incremental import apply_merges, match_increment
-from record_matcher_spark.operators.blocking import (
-    DEFAULT_TRANSCRIPT_KEYS,
-    BlockingKey,
-)
 from record_matcher_spark.operators.rollup import rollup_conversations
 
 _DIR_RE = re.compile(r"^g(\d{4})_b(\d{8})$")
@@ -107,30 +102,20 @@ class TranscriptStreamMatcher:
     function, and replays are no-ops either way. No bootstrap step: the
     first batch folds into an empty base (equivalent to the batch
     pipeline on that slice — incremental.py's equivalence note). To seed
-    from an existing corpus, process it as batch 0.
-
-    ``uniqueness``: corpus-level per-column uniqueness map, frozen across
-    batches (recommended for production — weights cannot drift; see
-    incremental.match_increment). Default None recomputes per batch over
-    base ∪ batch.
+    from an existing corpus, process it as batch 0. Each fold runs
+    :func:`incremental.match_increment` in its default threshold edge
+    mode.
     """
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
-        keys: Sequence[BlockingKey] = DEFAULT_TRANSCRIPT_KEYS,
         cfg: MatchConfig | None = None,
-        *,
-        edge_mode: str = "threshold",
-        uniqueness: Mapping[str, float] | None = None,
     ) -> None:
         self.spark = spark
         self.state_dir = state_dir
-        self.keys = keys
         self.cfg = cfg
-        self.edge_mode = edge_mode
-        self.uniqueness = uniqueness
 
     # -- log plumbing ---------------------------------------------------
 
@@ -302,10 +287,7 @@ class TranscriptStreamMatcher:
                     "must arrive whole within one micro-batch. Fix the "
                     "upstream batching (files partitioned by conversation)."
                 )
-        inc = match_increment(
-            batch_df, base_conv, base_cl, self.keys, self.cfg,
-            edge_mode=self.edge_mode, uniqueness=self.uniqueness,
-        )
+        inc = match_increment(batch_df, base_conv, base_cl, self.cfg)
         self._commit_segment(
             gen, batch_id, inc.conversations, inc.assignments, inc.merges
         )
@@ -405,18 +387,15 @@ class TranscriptStreamMatcher:
         *,
         schema=None,
         max_files_per_trigger: int | None = None,
-        available_now: bool = True,
-        processing_time: str | None = None,
         rebind_checkpoint: bool = False,
     ):
         """Launch the stream: parquet file source → foreachBatch sink.
 
-        ``available_now=True`` (default) drains everything currently in
-        ``input_path`` and stops — the incremental-backfill mode. Pass
-        ``available_now=False, processing_time='5 minutes'`` for a
-        long-running tailer. Any other source (Kafka, Iceberg CDC) works
-        by building the reader yourself and handing
-        :meth:`process_batch` to ``foreachBatch``.
+        The query runs with the ``availableNow`` trigger: it drains
+        everything currently in ``input_path`` and stops — the
+        incremental-backfill mode. Any other trigger or source (Kafka,
+        Iceberg CDC) works by building the reader and writer yourself and
+        handing :meth:`process_batch` to ``foreachBatch``.
 
         ``rebind_checkpoint``: allow a NEW checkpoint dir against existing
         state (see :meth:`_bind_checkpoint` — batch numbering continues,
@@ -444,12 +423,9 @@ class TranscriptStreamMatcher:
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             self.process_batch(batch_df, int(batch_id) + offset)
 
-        writer = (
+        return (
             stream.writeStream.foreachBatch(_sink)
             .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time is not None:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()

@@ -1,4 +1,4 @@
-"""Vendored pure-Python reference-semantics oracle (tests only).
+"""Vendored pure-Python reference-semantics oracle.
 
 Implements the matching semantics of ``jtai-dev/record_matcher`` over
 dict-of-dicts records, equation-for-equation:

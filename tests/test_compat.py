@@ -133,7 +133,7 @@ def test_populate(cfg):
 
 
 def test_end_to_end_vs_oracle(spark):
-    from record_matcher_spark.oracle import oracle_match
+    from tests.oracle import oracle_match
 
     rm = compat.RecordMatcher(spark)
     rm.x_records = X

@@ -195,16 +195,6 @@ def test_ngram_block_cap_drops_hot_group(spark, duck):
     assert len(want) == len(got) == 1
 
 
-def test_exact_dedup_counts(spark, docs):
-    from pyspark.sql import functions as F
-
-    dup = docs.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
-    both = docs.select("doc_id", "text").unionByName(dup)
-    out = dedup.exact_dedup(both, "doc_id", ["text"]).toPandas()
-    assert (out["n_copies"] >= 2).all()
-    assert out["n_copies"].sum() == 2 * docs.count()
-
-
 def test_cosine_topk(embs, duck):
     got = similarity.cosine_topk(
         embs, embs.where("vec_id < 10"), "vec_id", "embedding", k=5
@@ -384,14 +374,6 @@ def test_quality_score(docs, duck):
     assert_frames_equal(got, want, ["id"])
 
 
-def test_token_stats(docs, duck):
-    got = text_ops.token_stats(docs, "doc_id", "text")
-    want = duck.sql(
-        text_ops.token_stats_oracle_sql("documents", "doc_id", "text")
-    ).df()
-    assert_frames_equal(got, want, ["id"])
-
-
 def test_fingerprints(docs, duck):
     got = text_ops.fingerprints(docs, "doc_id", "text")
     want = duck.sql(
@@ -407,9 +389,3 @@ def test_media_features(docs, duck):
         multimodal.media_features_oracle_sql("documents", "doc_id", "text")
     ).df()
     assert_frames_equal(got, want, ["id"])
-
-
-def test_decode_media_is_stubbed(docs):
-    media = multimodal.attach_media(docs, "doc_id", "text")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_media(media, "image/png")

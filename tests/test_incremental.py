@@ -13,11 +13,7 @@ from pyspark.sql import functions as F
 from record_matcher_spark.config import ColumnRule, MatchConfig
 from record_matcher_spark.incremental import apply_merges, match_increment
 from record_matcher_spark.operators.rollup import rollup_conversations
-from record_matcher_spark.operators.scoring import uniqueness_by_columns
-from record_matcher_spark.pipeline import (
-    default_transcript_match_config,
-    match_transcripts,
-)
+from record_matcher_spark.pipeline import match_transcripts
 
 
 # Closed-form corpus (same construction as __spark_entry__'s driver
@@ -148,34 +144,6 @@ def test_increment_merges_base_clusters(spark):
     base.unpersist(); inc.unpersist()
 
 
-def test_increment_frozen_uniqueness_passthrough(spark):
-    """An explicit corpus-level uniqueness map is honored verbatim (no
-    per-batch recompute): freezing the exact corpus-wide statistic — the
-    map a production deployment computes once over the base and reuses
-    every batch — reproduces the default run bit-for-bit. (A uniform map
-    would NOT: role_seq is identical across all conversations, so giving
-    it non-trivial weight inflates every false pair — the
-    uniqueness-driven weighting is load-bearing, which is exactly why the
-    frozen map must be the corpus statistic.)"""
-    t = _closed_corpus(spark, n=20)
-    v = F.regexp_extract("conv_id", r"_v(\d+)$", 1).cast("long")
-    base_t, new_t = t.where(v == 0), t.where(v > 0)
-    base = match_transcripts(base_t, edge_mode="threshold")
-
-    inc_default = match_increment(new_t, base.conversations, base.clusters)
-    cfg = default_transcript_match_config()
-    corpus = rollup_conversations(t).drop("turns")
-    frozen = uniqueness_by_columns(corpus, cfg.x_match_columns)
-    inc_frozen = match_increment(
-        new_t, base.conversations, base.clusters, uniqueness=frozen
-    )
-    a = {tuple(r) for r in inc_default.assignments.collect()}
-    b = {tuple(r) for r in inc_frozen.assignments.collect()}
-    assert a == b  # identical statistic => identical scores => same edges
-    assert a  # non-empty
-    base.unpersist(); inc_default.unpersist(); inc_frozen.unpersist()
-
-
 def test_increment_via_foreach_batch_stream(spark, tmp_path):
     """The increment is a pure batch operator, so it drops into
     Structured Streaming's foreachBatch unchanged: stream the new batch
@@ -240,3 +208,12 @@ def test_increment_base_column_guard(spark):
     assert _partition(tokenless.assignments) == _partition(full.assignments)
     assert tokenless.assignments.count() == new_t.select("conv_id").distinct().count()
     full.unpersist(); tokenless.unpersist(); base_conv.unpersist(); t.unpersist()
+
+
+def test_unknown_edge_mode_refused():
+    """Both transcript paths refuse an edge_mode they do not know before
+    touching their inputs (no Spark work runs)."""
+    with pytest.raises(ValueError, match="unknown edge_mode 'bogus'"):
+        match_transcripts(None, edge_mode="bogus")
+    with pytest.raises(ValueError, match="unknown edge_mode 'bogus'"):
+        match_increment(None, None, None, edge_mode="bogus")

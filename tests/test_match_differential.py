@@ -13,7 +13,7 @@ from record_matcher_spark.config import ColumnRule, MatchConfig
 from record_matcher_spark.matcher import match_records
 from record_matcher_spark.operators.resolve import match_summary
 from record_matcher_spark.operators.scoring import score_pairs
-from record_matcher_spark.oracle import oracle_match, oracle_score_pairs
+from tests.oracle import oracle_match, oracle_score_pairs
 from tests.helpers import df_to_records, records_to_df, stringify_records
 
 TOL = 1e-9

@@ -18,12 +18,12 @@ def _plan(df) -> str:
 
 
 def test_scan_prunes_columns_and_pushes_filters(spark):
-    """token_stats over a lang-filtered documents scan: the parquet scan
+    """language_id over a lang-filtered documents scan: the parquet scan
     must read ONLY (doc_id, text, lang) and receive the lang predicate."""
-    from record_matcher_spark.operators.text import token_stats
+    from record_matcher_spark.operators.text import language_id
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    out = token_stats(docs.where(F.col("lang") == "en"), "doc_id", "text")
+    out = language_id(docs.where(F.col("lang") == "en"), "doc_id", "text")
     plan = _plan(out)
     scan = next(ln for ln in plan.splitlines() if "FileScan parquet" in ln)
     assert "PushedFilters" in scan and "EqualTo(lang,en)" in scan, scan
@@ -58,11 +58,11 @@ def test_session_stats_single_shuffle_no_window(spark):
 
 
 def test_exact_dedup_is_one_aggregate_no_join(spark):
-    """exact_dedup must stay a pure hash aggregate — no pair join path."""
-    from record_matcher_spark.operators.dedup import exact_dedup
+    """The dedup_exact driver row must stay a pure hash aggregate — no
+    pair join path."""
+    import __spark_entry__ as entry_mod
 
-    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    plan = _plan(exact_dedup(docs, "doc_id", ["text"]))
+    plan = _plan(entry_mod.queries()["dedup_exact"](spark, SF_DIR))
     assert "Join" not in plan, plan
     assert "HashAggregate" in plan or "ObjectHashAggregate" in plan or (
         "SortAggregate" in plan
@@ -131,17 +131,6 @@ def test_ivf_assignment_is_map_side_no_exchange(spark):
     plan = _plan(ivf_assign(embs, "vec_id", "embedding", cents))
     assert "Exchange" not in plan, plan
     assert "Window" not in plan and "Join" not in plan, plan
-
-
-def test_parse_byte_conf():
-    from record_matcher_spark.operators.scoring import _parse_byte_conf
-
-    assert _parse_byte_conf("128MB") == 128 << 20
-    assert _parse_byte_conf("134217728") == 128 << 20
-    assert _parse_byte_conf("4m") == 4 << 20
-    assert _parse_byte_conf(" 1gb ") == 1 << 30
-    assert _parse_byte_conf("512k") == 512 << 10
-    assert _parse_byte_conf("7b") == 7
 
 
 def test_score_pairs_build_no_rdd_conversion(spark, monkeypatch):

@@ -1,7 +1,5 @@
 """Event sessionization (operators.sessions): the two batch formulations
-agree with each other and with an independent DuckDB derivation, and the
-Structured Streaming twin emits exactly the batch sessions once the
-watermark closes them."""
+agree with each other and with an independent DuckDB derivation."""
 
 from __future__ import annotations
 
@@ -11,11 +9,7 @@ import os
 import duckdb
 from pyspark.sql import functions as F
 
-from record_matcher_spark.operators.sessions import (
-    session_stats,
-    session_stats_stream,
-    sessionize,
-)
+from record_matcher_spark.operators.sessions import session_stats, sessionize
 
 GAP_S = 3600  # 1h sessions for the hand-built fixtures
 
@@ -124,52 +118,6 @@ def test_session_stats_duckdb_differential(spark):
         ).fetchall()
     }
     assert s_rows == d_rows and len(s_rows) > 0
-
-
-def test_session_stats_stream_matches_batch(spark, tmp_path):
-    """availableNow drain with 1-file micro-batches: every session the
-    watermark closes is emitted, with values identical to the batch op.
-    The last file carries a far-future sentinel user so the watermark
-    passes every real session's close."""
-    ev = _events(spark)
-    src = os.path.join(str(tmp_path), "incoming")
-    ev.coalesce(1).write.mode("append").parquet(src)
-    sentinel = spark.createDataFrame(
-        [(99, datetime.datetime(2024, 3, 10), 999, "s", 0.0)], _SCHEMA
-    )
-    sentinel.coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(_SCHEMA).option(
-        "maxFilesPerTrigger", 1
-    ).parquet(src)
-    out = session_stats_stream(
-        stream, gap_seconds=GAP_S, watermark_delay="0 seconds"
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["user_id"], r["session_start_epoch"]): (
-            r["n_events"], r["session_end_epoch"], r["n_event_types"],
-            r["value_cents_sum"],
-        )
-        for r in spark.table("sess_stream").collect()
-        if r["user_id"] != 999
-    }
-    want = {
-        (r["user_id"], r["session_start_epoch"]): (
-            r["n_events"], r["session_end_epoch"], r["n_event_types"],
-            r["value_cents_sum"],
-        )
-        for r in session_stats(ev, gap_seconds=GAP_S).collect()
-    }
-    assert got == want
 
 
 def test_sessionize_split_matches_unsplit(spark):

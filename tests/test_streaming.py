@@ -114,6 +114,19 @@ def test_partial_conversation_rejected(spark, tmp_path):
     assert st is not None and st.n_batches == 1  # nothing was committed
 
 
+def test_compact_empty_store_refused(tmp_path):
+    """Compacting a store with no committed batch raises instead of
+    writing an empty snapshot generation."""
+    import pytest
+
+    from record_matcher_spark.errors import InvalidConfigError
+
+    m = TranscriptStreamMatcher(None, os.path.join(str(tmp_path), "state"))
+    with pytest.raises(InvalidConfigError, match="nothing to compact"):
+        m.compact()
+    assert m.state() is None
+
+
 def test_new_checkpoint_refused_then_rebound(spark, tmp_path):
     """Binding a fresh checkpoint to existing state would restart batch
     numbering at 0 and the replay guard would drop everything — start()

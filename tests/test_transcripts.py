@@ -18,16 +18,13 @@ from record_matcher_spark.operators.blocking import (
     candidate_pairs,
 )
 from record_matcher_spark.operators.cluster import connected_components
-from record_matcher_spark.operators.rollup import (
-    explode_turns,
-    rollup_conversations,
-)
-from record_matcher_spark.oracle import oracle_clusters, oracle_union_find
+from record_matcher_spark.operators.rollup import rollup_conversations
 from record_matcher_spark.pipeline import (
     default_transcript_match_config,
     match_transcripts,
     pairwise_f1,
 )
+from tests.oracle import oracle_clusters, oracle_union_find
 
 N_ENTITIES = 60
 SEED = 7
@@ -53,10 +50,12 @@ def test_rollup_roundtrip_invariant(spark):
     """Per-turn text equality under stable turn ordering (input_hint)."""
     t, _ = _corpus(spark)
     conv = rollup_conversations(t)
-    back = explode_turns(conv)
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    back = conv.select("conv_id", F.explode("turns").alias("t")).select(
+        "conv_id", *[F.col(f"t.{c}").alias(c) for c in cols[1:]]
+    )
     a = sorted(map(tuple, t.select(*cols).collect()))
-    b = sorted(map(tuple, back.select(*cols).collect()))
+    b = sorted(map(tuple, back.collect()))
     assert a == b
 
 
@@ -249,7 +248,7 @@ def test_pipeline_threshold_mode_f1(spark):
     """Threshold edge mode: engine clusters equal the threshold-mode oracle
     AND recover the planted entities (F1 vs truth under identical blocking
     keys)."""
-    from record_matcher_spark.oracle import oracle_threshold_clusters
+    from tests.oracle import oracle_threshold_clusters
 
     t, truth = _corpus(spark)
     cfg = default_transcript_match_config()
