@@ -1015,7 +1015,7 @@ def _dataops_oracles() -> dict[str, str]:
             "documents", "doc_id", "text", 3
         ),
         "dedup_ngram_jaccard": dedup.ngram_jaccard_pairs_oracle_sql(
-            "documents", "doc_id", "text", 3, 0.55, "lang",
+            "documents", "doc_id", "text", 0.55, "lang",
             max_block_size=200,
         ),
         "dedup_embedding_cosine": _sql_embedding_near_dup(),

@@ -7,8 +7,8 @@ The reference drives matching from six validated dicts owned by
 cutoff maps seeded with defaults (exact_match / 75.0 / False,
 config.py:349-350, 437, 512).
 
-The Spark build replaces the mutable validated-dict API with an immutable,
-JSON-able declarative config validated against DataFrame schemas at
+The Spark build replaces the mutable validated-dict API with an immutable
+declarative config validated against DataFrame schemas at
 plan-build time — failing loudly where the reference silently ignored
 mismatches (matcher.py:311-318). A reference-compatible mutable facade
 lives in :mod:`record_matcher_spark.compat`.
@@ -16,8 +16,8 @@ lives in :mod:`record_matcher_spark.compat`.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
-from typing import Any, Iterable, Mapping, Sequence
+from dataclasses import dataclass, field
+from typing import Iterable, Mapping
 
 from record_matcher_spark.errors import InvalidConfigError
 
@@ -125,75 +125,11 @@ class MatchConfig:
                 "TBConfigXUniqueConstraint, config.py:249-258)"
             )
 
-    # -- constructors ----------------------------------------------------
-
-    @classmethod
-    def from_dict(cls, d: Mapping[str, Any]) -> "MatchConfig":
-        """Build from a JSON-able dict (inverse of :meth:`to_dict`)."""
-        rules = tuple(
-            ColumnRule(
-                x_column=r["x_column"],
-                y_columns=tuple(r.get("y_columns", (r["x_column"],))),
-                scorer=r.get("scorer", DEFAULT_SCORER),
-                threshold=r.get("threshold", DEFAULT_THRESHOLD),
-                cutoff=r.get("cutoff", DEFAULT_CUTOFF),
-            )
-            for r in d.get("rules", ())
-        )
-        return cls(
-            rules=rules,
-            columns_to_group=dict(d.get("columns_to_group", {})),
-            columns_to_get=dict(d.get("columns_to_get", {})),
-            required_threshold=d.get("required_threshold", DEFAULT_REQUIRED_THRESHOLD),
-            duplicate_threshold=d.get(
-                "duplicate_threshold", DEFAULT_DUPLICATE_THRESHOLD
-            ),
-            x_id=d.get("x_id", "row_id"),
-            y_id=d.get("y_id", "row_id"),
-        )
-
-    def to_dict(self) -> dict[str, Any]:
-        return {
-            "rules": [
-                {
-                    "x_column": r.x_column,
-                    "y_columns": list(r.y_columns),
-                    "scorer": r.scorer,
-                    "threshold": r.threshold,
-                    "cutoff": r.cutoff,
-                }
-                for r in self.rules
-            ],
-            "columns_to_group": dict(self.columns_to_group),
-            "columns_to_get": dict(self.columns_to_get),
-            "required_threshold": self.required_threshold,
-            "duplicate_threshold": self.duplicate_threshold,
-            "x_id": self.x_id,
-            "y_id": self.y_id,
-        }
-
-    @classmethod
-    def populate(
-        cls, x_columns: Iterable[str], y_columns: Iterable[str], **kwargs: Any
-    ) -> "MatchConfig":
-        """Auto-map identically-named columns (reference config.py:96-98)."""
-        common = sorted(set(x_columns) & set(y_columns))
-        return cls(rules=tuple(ColumnRule(c, (c,)) for c in common), **kwargs)
-
-    def with_rules(self, rules: Sequence[ColumnRule]) -> "MatchConfig":
-        return replace(self, rules=tuple(rules))
-
     # -- derived views ----------------------------------------------------
 
     @property
     def x_match_columns(self) -> tuple[str, ...]:
         return tuple(r.x_column for r in self.rules)
-
-    def rule_for(self, x_column: str) -> ColumnRule:
-        for r in self.rules:
-            if r.x_column == x_column:
-                return r
-        raise KeyError(x_column)
 
     # -- validation --------------------------------------------------------
 

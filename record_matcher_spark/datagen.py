@@ -49,13 +49,15 @@ _VOCAB = [
 ]
 _TOOLS = ["", "", "", "search", "calculator", "browser", "python", "sql"]
 _EPOCH = datetime(2025, 1, 1)
+# Share of entities on the one hot 6-turn role sequence (the skew case).
+HOT_FRAC = 0.2
 
 
-def _gen_entity(entity_id: int, seed: int, hot_frac: float = 0.2):
+def _gen_entity(entity_id: int, seed: int):
     """All turn rows for one entity (base + variants). Pure function of
     (entity_id, seed)."""
     rng = np.random.default_rng((seed << 20) ^ entity_id)
-    hot = rng.random() < hot_frac
+    hot = rng.random() < HOT_FRAC
     n_turns = 6 if hot else int(rng.integers(3, 41))
     n_variants = int(rng.integers(0, 4))
     topic = rng.choice(_VOCAB, size=int(rng.integers(5, 16)), replace=False)

@@ -47,9 +47,9 @@ class TBConfigXUniqueConstraint(RecordMatcherError):
     Reference: config.py:252, 258.
     """
 
-    def __init__(self, x_column: object, owner: str = "ColumnsToGet") -> None:
+    def __init__(self, x_column: object) -> None:
         self.x_column = x_column
-        super().__init__(f"{owner}: target column {x_column!r} already mapped")
+        super().__init__(f"ColumnsToGet: target column {x_column!r} already mapped")
 
 
 class TBConfigOverwriteError(RecordMatcherError):

@@ -125,7 +125,12 @@ def _py_jaro(s1: str, s2: str) -> float:
     return (matches / len1 + matches / len2 + (matches - t) / matches) / 3.0
 
 
-def _py_jaro_winkler(x: str, y: str, prefix_weight: float = 0.1) -> float:
+# Winkler's common-prefix scale (prefix capped at 4 characters), shared by
+# the Python twin and the numpy batch kernel.
+JW_PREFIX_WEIGHT = 0.1
+
+
+def _py_jaro_winkler(x: str, y: str) -> float:
     if x == y:
         return 100.0  # includes both-blank => 100 (consistent with exact)
     jaro = _py_jaro(x, y)
@@ -135,7 +140,7 @@ def _py_jaro_winkler(x: str, y: str, prefix_weight: float = 0.1) -> float:
             prefix += 1
         else:
             break
-    return 100.0 * (jaro + prefix * prefix_weight * (1.0 - jaro))
+    return 100.0 * (jaro + prefix * JW_PREFIX_WEIGHT * (1.0 - jaro))
 
 
 # --------------------------------------------------------------------------
@@ -154,7 +159,7 @@ def _code_matrix(strs: np.ndarray, width: int) -> np.ndarray:
 
 
 def _np_jaro_winkler_chunk(
-    xs: np.ndarray, ys: np.ndarray, prefix_weight: float = 0.1
+    xs: np.ndarray, ys: np.ndarray
 ) -> np.ndarray:
     """Vectorized Jaro-Winkler over one chunk of UNEQUAL string pairs.
 
@@ -184,7 +189,7 @@ def _np_jaro_winkler_chunk(
     for s, e in zip(starts, np.r_[starts[1:], n]):
         idx = order[s:e]
         out[idx] = _np_jw_core(
-            xs[idx], ys[idx], l1[idx], l2[idx], int(ws[s]), prefix_weight
+            xs[idx], ys[idx], l1[idx], l2[idx], int(ws[s])
         )
     return out
 
@@ -195,7 +200,6 @@ def _np_jw_core(
     l1: np.ndarray,
     l2: np.ndarray,
     w: int,
-    prefix_weight: float,
 ) -> np.ndarray:
     """Fixed-window Jaro-Winkler core: every row shares window width ``w``,
     so the per-character candidate range is the column slice
@@ -268,7 +272,7 @@ def _np_jw_core(
         ok = alive & (i < l1) & (i < l2) & (A[:, i] == B[:, i])
         pref += ok
         alive = ok
-    return 100.0 * (jaro + (pref * prefix_weight) * (1.0 - jaro))
+    return 100.0 * (jaro + (pref * JW_PREFIX_WEIGHT) * (1.0 - jaro))
 
 
 # Per-chunk cell budget for the O(n * L1 * L2) boolean work. 2^25 cells
@@ -498,7 +502,7 @@ def _jw_upper_bound(x: Column, y: Column) -> Column:
 
     With l1 <= l2, matches m <= l1 and transpositions >= 0 give
     jaro <= (m/l1 + m/l2 + 1)/3 <= (2 + l1/l2)/3, and the Winkler boost
-    (prefix <= 4, weight 0.1) gives jw <= jaro + 0.4*(1 - jaro)
+    (prefix <= 4, weight JW_PREFIX_WEIGHT = 0.1) gives jw <= jaro + 0.4*(1 - jaro)
     = 0.6*jaro + 0.4 <= 0.8 + 0.2*(l1/l2) — i.e. (80 + 20*ratio) on the
     0-100 scale. Equal strings short-circuit to 100 (matching the batch
     kernel). A pair of very different lengths therefore provably cannot

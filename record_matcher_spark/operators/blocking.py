@@ -55,16 +55,16 @@ def _tokens(col: Column, lowercase: bool = True) -> Column:
 
 
 def role_seq_key(
-    column: str = "role_seq", max_block_size: int | None = 64
+    max_block_size: int | None = 64
 ) -> BlockingKey:
-    """Conversation-shape block: exact role sequence.
+    """Conversation-shape block: the rollup's exact ``role_seq``.
 
     Capped by default: role sequences are heavy-tailed (the synthetic
     corpus plants one hot 6-turn pattern on ~20% of conversations; real
     agent traffic behaves the same) and an uncapped hot block of B rows
     costs B² pairs. Recall for hot-shaped conversations comes from the
     content-based keys (token prefix / MinHash bands)."""
-    return BlockingKey("role_seq", lambda df: F.col(column),
+    return BlockingKey("role_seq", lambda df: F.col("role_seq"),
                        max_block_size=max_block_size)
 
 
@@ -310,8 +310,7 @@ def candidate_pairs(
     x_id: str = "conv_id",
     y_id: str = "conv_id",
     dedup_mode: bool = False,
-    cache: bool = True,
-    persisted: list | None = None,
+    persisted: list,
 ) -> DataFrame:
     """Blocked candidate generation, deduped → [x_id, y_id].
 
@@ -325,9 +324,8 @@ def candidate_pairs(
 
     ``dedup_mode`` (y_df=None or y_df is x_df with dedup_mode=True):
     keep x_id < y_id — no identity pairs, each unordered pair once.
-    ``cache``: persist the pre-cap keyed relation(s).
-    ``persisted``: caller-supplied list that receives every DataFrame this
-    call persists — unpersist them once the output is materialized
+    ``persisted``: caller-supplied list that receives the persisted keyed
+    relation(s) — unpersist them once the output is materialized
     (repeated invocations in one session would otherwise accumulate
     storage). :func:`record_matcher_spark.pipeline.match_transcripts`
     threads this through to ``TranscriptMatchResult.unpersist()``.
@@ -338,11 +336,8 @@ def candidate_pairs(
     same_side = y_df is x_df and x_id == y_id
 
     def _keyed_side(df: DataFrame, id_col: str) -> DataFrame:
-        tagged = _tagged_keys(df, id_col, keys)
-        if cache:
-            tagged = tagged.persist()
-            if persisted is not None:
-                persisted.append(tagged)
+        tagged = _tagged_keys(df, id_col, keys).persist()
+        persisted.append(tagged)
         return _cap_blocks(tagged, keys)
 
     kx = _keyed_side(x_df, x_id)

@@ -42,9 +42,15 @@ from record_matcher_spark.operators.similarity import dot_expr
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
+# Word-shingle length, signature width and LSH banding shared by
+# ``minhash_lsh_pairs`` and its DuckDB twin: 16 hashes in 4 bands of 4.
+MINHASH_SHINGLE_K = 3
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+
 
 def _shingled(
-    df: DataFrame, id_col: str, text_col: str, shingle_k: int
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """[_id, _sh] word-shingle hashes; empty-token docs excluded (blanks
     never pair, mirroring blocking.py)."""
@@ -53,7 +59,8 @@ def _shingled(
         F.size("_th") > 0
     )
     return base.select(
-        "_id", TH.shingle_hashes_expr(F.col("_th"), shingle_k).alias("_sh")
+        "_id",
+        TH.shingle_hashes_expr(F.col("_th"), MINHASH_SHINGLE_K).alias("_sh"),
     )
 
 
@@ -61,9 +68,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-duplicate pairs via banded MinHash LSH + exact-Jaccard verify.
@@ -74,20 +78,17 @@ def minhash_lsh_pairs(
     Plan shape: signatures (1 narrow scan) -> explode bands (xB) ->
     self equi-join on (band, key) int keys -> distinct pairs -> verify join
     back to shingle sets. Collision prob for Jaccard s is
-    1 - (1 - s^r)^b, r = num_hashes/bands.
+    1 - (1 - s^r)^b, b = MINHASH_BANDS, r = MINHASH_HASHES / b.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
-    r = num_hashes // bands
-
-    base = _shingled(df, id_col, text_col, shingle_k)
+    r = MINHASH_HASHES // MINHASH_BANDS
+    base = _shingled(df, id_col, text_col)
     sig = base.select(
-        "_id", "_sh", *TH.minhash_sig_exprs(F.col("_sh"), num_hashes)
+        "_id", "_sh", *TH.minhash_sig_exprs(F.col("_sh"), MINHASH_HASHES)
     )
     band_keys = F.array(
         *[
             TH.band_key_expr([F.col(f"mh{i}") for i in range(b * r, (b + 1) * r)])
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
     keyed = sig.select(
@@ -118,22 +119,19 @@ def minhash_lsh_pairs_oracle_sql(
     table: str,
     id_col: str,
     text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
     threshold: float = 0.5,
 ) -> str:
     """DuckDB twin of ``minhash_lsh_pairs`` — same hashes, same bands."""
-    r = num_hashes // bands
+    r = MINHASH_HASHES // MINHASH_BANDS
     th = TH.token_hashes_sql(text_col)
-    sh = TH.shingle_hashes_sql("th", shingle_k)
-    sigs = TH.minhash_sig_sqls("sh", num_hashes)
+    sh = TH.shingle_hashes_sql("th", MINHASH_SHINGLE_K)
+    sigs = TH.minhash_sig_sqls("sh", MINHASH_HASHES)
     sig_cols = ", ".join(f"{s} AS mh{i}" for i, s in enumerate(sigs))
     band_selects = "\n  UNION ALL\n  ".join(
         "SELECT id, {b} AS band, {k} AS key FROM sig".format(
             b=b, k=TH.band_key_sql([f"mh{i}" for i in range(b * r, (b + 1) * r)])
         )
-        for b in range(bands)
+        for b in range(MINHASH_BANDS)
     )
     return f"""
 WITH th AS (
@@ -252,9 +250,13 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 # character n-gram Jaccard
 # --------------------------------------------------------------------------
 
+# Character n-gram length shared by ``ngram_jaccard_pairs`` and its twin.
+NGRAM_N = 3
 
-def _char_ngrams_expr(text, n: int):
+
+def _char_ngrams_expr(text):
     """Distinct character n-gram poly-hashes of lowercase trimmed text."""
+    n = NGRAM_N
     codes = F.transform(
         F.split(F.trim(F.lower(text)), ""), lambda c: F.ascii(c).cast("long")
     )
@@ -271,7 +273,6 @@ def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.6,
     block_col: str | None = None,
     max_block_size: int | None = 10000,
@@ -311,7 +312,7 @@ def ngram_jaccard_pairs(
     blk = F.col(block_col).cast("string") if block_col else F.lit("")
     grams = df.select(
         F.col(id_col).alias("id"),
-        _char_ngrams_expr(F.col(text_col), n).alias("g"),
+        _char_ngrams_expr(F.col(text_col)).alias("g"),
         blk.alias("blk"),
         bucket.alias("bkt"),
     ).where(F.size("g") > 0)
@@ -350,12 +351,12 @@ def ngram_jaccard_pairs_oracle_sql(
     table: str,
     id_col: str,
     text_col: str,
-    n: int = 3,
     threshold: float = 0.6,
     block_col: str | None = None,
     max_block_size: int | None = 10000,
 ) -> str:
     """DuckDB twin of ``ngram_jaccard_pairs`` — same block/bucket/cap."""
+    n = NGRAM_N
     codes = (
         f"list_transform(regexp_split_to_array(trim(lower({text_col})), ''), "
         "c -> CAST(ord(c) AS BIGINT))"
@@ -407,31 +408,27 @@ def embedding_near_dup(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    block_col: str | None = None,
 ) -> DataFrame:
-    """Pairs with cosine >= threshold; optional equality blocking column
-    (e.g. a coarse cluster / SRP bucket) to avoid the full cross join —
-    None means brute force (the small-scale baseline; the scale path is
-    similarity.srp_lsh_pairs)."""
+    """Pairs with cosine >= threshold by brute-force cross join — the
+    small-scale baseline; the scale path is similarity.srp_lsh_pairs."""
     norm = F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col)))
     base = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         norm.alias("nrm"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
     ).where(F.col("nrm") > 0)
     a = base.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"), *([F.col("blk")] if block_col else []),
+        F.col("nrm").alias("na"),
     )
     b = base.select(
         F.col("id").alias("id_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"), *([F.col("blk")] if block_col else []),
+        F.col("nrm").alias("nb"),
     )
-    joined = a.join(b, "blk") if block_col else a.crossJoin(b)
     cos = dot_expr(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        joined.where(F.col("id_a") < F.col("id_b"))
+        a.crossJoin(b)
+        .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", TH.q6_expr(cos).alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
@@ -446,10 +443,9 @@ def near_dup_clusters(
     df: DataFrame,
     id_col: str,
     pairs: DataFrame,
-    pair_a: str = "id_a",
-    pair_b: str = "id_b",
 ) -> DataFrame:
-    """Fold a near-duplicate pair set into dedup clusters:
+    """Fold a near-duplicate pair set ``[id_a, id_b, ...]`` (the output of
+    every pair operator here) into dedup clusters:
     -> [id, cluster_id, is_canonical] — one row per input document.
 
     ``cluster_id`` is the minimum document id of the pair-graph connected
@@ -467,7 +463,7 @@ def near_dup_clusters(
     from record_matcher_spark.operators.cluster import connected_components
 
     labels = connected_components(
-        pairs.select(pair_a, pair_b), pair_a, pair_b
+        pairs.select("id_a", "id_b"), "id_a", "id_b"
     ).withColumnRenamed("node", "id")
     ids = df.select(F.col(id_col).alias("id"))
     out = ids.join(labels, "id", "left").select(

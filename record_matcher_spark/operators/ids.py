@@ -21,13 +21,11 @@ from pyspark.sql import functions as F
 
 
 def dense_ids(
-    df: DataFrame, col: str, out: str = "idx", num_parts: int | None = None
+    df: DataFrame, col: str, out: str = "idx"
 ) -> DataFrame:
     """-> DataFrame[col, out]: distinct keys mapped to dense longs [0, n)
-    in ascending key order."""
-    spark = df.sparkSession
-    if num_parts is None:
-        num_parts = spark.sparkContext.defaultParallelism
+    in ascending key order, over ``defaultParallelism`` key ranges."""
+    num_parts = df.sparkSession.sparkContext.defaultParallelism
     parts = df.select(col).distinct().repartitionByRange(num_parts, col)
     pid = parts.withColumn("_pid", F.spark_partition_id())
     w = Window.partitionBy("_pid").orderBy(col)

@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Separator of every rolled-up sequence string (``role_seq``, ``tool_seq``,
+# ``rollup_sequence``'s ``{value_col}_seq``).
+SEQ_SEP = ">"
+
 
 def rollup_conversations(
     transcripts: DataFrame, tokens: bool = False
@@ -109,8 +113,8 @@ def rollup_conversations(
         "n_turns",
         F.array_join(texts, "\n").alias("full_text"),
         F.coalesce(first_user, F.lit("")).alias("first_user_text"),
-        F.array_join(roles, ">").alias("role_seq"),
-        F.array_join(tools, ">").alias("tool_seq"),
+        F.array_join(roles, SEQ_SEP).alias("role_seq"),
+        F.array_join(tools, SEQ_SEP).alias("tool_seq"),
         "ts_min",
         "turns",
     )
@@ -134,14 +138,13 @@ def rollup_sequence(
     key_col: str,
     order_cols: list[str],
     value_col: str,
-    sep: str = ">",
 ) -> DataFrame:
     """Generic key → ordered-value-sequence rollup.
 
     Same plan shape as :func:`rollup_conversations` (ONE groupBy shuffle,
     executor-side ``sort_array`` over structs — no window): for each key,
     the values of ``value_col`` ordered by ``order_cols`` joined with
-    ``sep``, plus item count and the minimum of the first order column.
+    ``SEQ_SEP``, plus item count and the minimum of the first order column.
     Usable for any event-stream table (sessionization-style rollup).
 
     Output: [key_col, {value_col}_seq, n_items, {order_cols[0]}_min].
@@ -151,7 +154,7 @@ def rollup_sequence(
     )
     seq = F.array_join(
         F.transform(F.sort_array(F.collect_list(item)), lambda t: t["_v"]),
-        sep,
+        SEQ_SEP,
     )
     return df.groupBy(key_col).agg(
         seq.alias(f"{value_col}_seq"),

@@ -471,7 +471,6 @@ def score_candidate_pairs(
     candidates: DataFrame,
     cfg: MatchConfig,
     *,
-    keep_column_scores: bool = False,
     uniqueness: Mapping[str, float] | None = None,
 ) -> DataFrame:
     """Score an explicit candidate-pair set (from operators.blocking)
@@ -504,4 +503,4 @@ def score_candidate_pairs(
         F.col("x_id").alias(XID), F.col("y_id").alias(YID)
     )
     pairs = cand.join(xp, XID).join(yp, YID)
-    return _apply_scoring(pairs, cfg, keep_column_scores)
+    return _apply_scoring(pairs, cfg)

@@ -46,6 +46,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_GAP_SECONDS = 12 * 3600
+# Event-table columns: the window tie-break in ``sessionize`` and the
+# two aggregated columns of ``session_stats``.
+EVENT_ID_COL = "event_id"
+EVENT_TYPE_COL = "event_type"
+VALUE_COL = "value"
 
 
 def _gap_us(gap_seconds: int) -> int:
@@ -58,7 +63,6 @@ def sessionize(
     ts_col: str = "ts",
     *,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
-    order_cols: tuple[str, ...] = ("event_id",),
     split_bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Per-event session labels → input columns + ``session_idx`` (0-based
@@ -68,10 +72,11 @@ def sessionize(
     per-user per-time by definition; blanks never form a session — same
     convention as blocking keys).
 
-    ``order_cols`` break timestamp ties deterministically for the window
-    sort; tied timestamps always land in the SAME session regardless of
-    order (their gap is 0 < gap), so the labels — like the session-window
-    path, which sorts by time alone — do not depend on the tie-break.
+    ``EVENT_ID_COL`` breaks timestamp ties deterministically for the
+    window sort; tied timestamps always land in the SAME session regardless
+    of order (their gap is 0 < gap), so the labels — like the
+    session-window path, which sorts by time alone — do not depend on the
+    tie-break.
 
     ``split_bucket_seconds`` — heavy-user skew split. The default path
     windows over ``partitionBy(user)``: one hyperactive user funnels all
@@ -101,7 +106,7 @@ def sessionize(
 
     def _label(pre: DataFrame, part_cols: list[str]) -> DataFrame:
         """new-session flags + running local count within the partition."""
-        w = Window.partitionBy(*part_cols).orderBy(ts_col, *order_cols)
+        w = Window.partitionBy(*part_cols).orderBy(ts_col, EVENT_ID_COL)
         prev = F.lag("_us").over(w)
         flag = F.when(
             prev.isNull() | ((F.col("_us") - prev) > F.lit(gap)), 1
@@ -165,14 +170,12 @@ def session_stats(
     ts_col: str = "ts",
     *,
     gap_seconds: int = DEFAULT_GAP_SECONDS,
-    type_col: str | None = "event_type",
-    value_col: str | None = "value",
 ) -> DataFrame:
     """Per-session aggregates via the native session window → one row per
     (user, session): ``session_start_epoch`` / ``session_end_epoch``
     (floor epoch seconds of the first/last event), ``n_events``,
-    ``n_event_types`` (distinct ``type_col``, if given) and
-    ``value_cents_sum`` (sum of round(value*100) as BIGINT, if given —
+    ``n_event_types`` (distinct ``EVENT_TYPE_COL``) and
+    ``value_cents_sum`` (sum of round(``VALUE_COL`` * 100) as BIGINT —
     an integer sum is associative, so partial aggregation order cannot
     produce cross-engine float drift the way ``SUM(double)`` can).
 
@@ -184,15 +187,11 @@ def session_stats(
         F.count(F.lit(1)).alias("n_events"),
         F.min(F.unix_timestamp(F.col(ts_col))).alias("session_start_epoch"),
         F.max(F.unix_timestamp(F.col(ts_col))).alias("session_end_epoch"),
+        F.countDistinct(F.col(EVENT_TYPE_COL)).alias("n_event_types"),
+        F.sum(F.round(F.col(VALUE_COL) * 100).cast("long")).alias(
+            "value_cents_sum"
+        ),
     ]
-    if type_col:
-        aggs.append(F.countDistinct(F.col(type_col)).alias("n_event_types"))
-    if value_col:
-        aggs.append(
-            F.sum(F.round(F.col(value_col) * 100).cast("long")).alias(
-                "value_cents_sum"
-            )
-        )
     return (
         df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
         .groupBy(

@@ -29,17 +29,6 @@ from pyspark.sql import functions as F
 from record_matcher_spark.functions import texthash as TH
 
 
-def _planes(num_planes: int, dim: int) -> list[list[float]]:
-    rng = random.Random(0x51AE)
-    # 3-dp literals: short SQL, exactly representable comparisons are not
-    # needed (sign of a dot product only), but identical literals in both
-    # engines ARE.
-    return [
-        [round(rng.uniform(-1.0, 1.0), 3) for _ in range(dim)]
-        for _ in range(num_planes)
-    ]
-
-
 def dot_expr(a: Column, b: Column) -> Column:
     """Index-ascending sequential dot product (FP-order pinned)."""
     return F.aggregate(
@@ -64,7 +53,6 @@ def cosine_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    query_id: str | None = None,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: -> [q_id, n_id, cosine, rank].
 
@@ -74,10 +62,9 @@ def cosine_topk(
     side stays partition-parallel with no shuffle until the final top-k,
     which AQE handles as a skewless window over q_id.
     """
-    query_id = query_id or id_col
     nrm = lambda v: F.sqrt(dot_expr(v, v))  # noqa: E731
     q = queries.select(
-        F.col(query_id).alias("q_id"),
+        F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("qv"),
         nrm(F.col(vec_col)).alias("qn"),
     ).where(F.col("qn") > 0)
@@ -103,14 +90,12 @@ def cosine_topk_oracle_sql(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    query_id: str | None = None,
 ) -> str:
-    query_id = query_id or id_col
     dot = dot_sql("q.qv", "c.cv")
     q6cos = TH.q6_sql(f"{dot} / (q.qn * c.cn)")
     return f"""
 WITH q AS (
-  SELECT {query_id} AS q_id, {vec_col} AS qv,
+  SELECT {id_col} AS q_id, {vec_col} AS qv,
          sqrt({dot_sql(vec_col, vec_col)}) AS qn
   FROM ({queries_sql})
 ), c AS (
@@ -167,13 +152,25 @@ def srp_bucket_sql(vec: str, planes: list[list[float]]) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _table_planes(
-    num_tables: int, planes_per_table: int, dim: int
-) -> list[list[list[float]]]:
-    all_planes = _planes(num_tables * planes_per_table, dim)
+# SRP-LSH shape shared by ``srp_lsh_topk``, ``srp_lsh_pairs`` and their
+# DuckDB twins: SRP_TABLES hash tables of SRP_PLANES_PER_TABLE planes over
+# SRP_DIM-dimensional vectors (the ``embeddings`` table's width).
+SRP_TABLES = 8
+SRP_PLANES_PER_TABLE = 3
+SRP_DIM = 64
+
+
+def _table_planes() -> list[list[list[float]]]:
+    """Per table, its seeded hyperplanes. 3-dp literals: short SQL;
+    exactly representable comparisons are not needed (sign of a dot
+    product only), but identical literals in both engines ARE."""
+    rng = random.Random(0x51AE)
     return [
-        all_planes[t * planes_per_table : (t + 1) * planes_per_table]
-        for t in range(num_tables)
+        [
+            [round(rng.uniform(-1.0, 1.0), 3) for _ in range(SRP_DIM)]
+            for _ in range(SRP_PLANES_PER_TABLE)
+        ]
+        for _ in range(SRP_TABLES)
     ]
 
 
@@ -183,18 +180,14 @@ def srp_lsh_topk(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    num_tables: int = 8,
-    planes_per_table: int = 3,
-    dim: int = 64,
-    query_id: str | None = None,
 ) -> DataFrame:
     """ANN top-k: multi-table SRP-LSH candidates + exact cosine rerank
     -> [q_id, n_id, cosine, rank].
 
-    ``num_tables`` independent hash tables of ``planes_per_table`` planes
-    each: a candidate collides with the query in >= 1 table. For neighbor
-    angle θ, P(candidate) = 1 - (1 - (1-θ/π)^p)^L — a single wide table
-    (p=8) has near-zero recall at θ ~ 60°, the 8x3 default ~0.9.
+    ``SRP_TABLES`` independent hash tables of ``SRP_PLANES_PER_TABLE``
+    planes each: a candidate collides with the query in >= 1 table. For
+    neighbor angle θ, P(candidate) = 1 - (1 - (1-θ/π)^p)^L — a single wide
+    table (p=8) has near-zero recall at θ ~ 60°, the 8x3 shape ~0.9.
 
     The cross join becomes an equi-join on (table, bucket) int keys: at
     100 TB the corpus is hash-partitioned by bucket, each bucket scans
@@ -202,23 +195,22 @@ def srp_lsh_topk(
     construction — recall vs ``cosine_topk`` is asserted in tests, and the
     oracle replicates the SAME tables/buckets so the driver check is exact.
     """
-    query_id = query_id or id_col
-    tables = _table_planes(num_tables, planes_per_table, dim)
+    tables = _table_planes()
     nrm = lambda v: F.sqrt(dot_expr(v, v))  # noqa: E731
 
-    def keyed(df: DataFrame, idc: str, out_id: str) -> DataFrame:
+    def keyed(df: DataFrame, out_id: str) -> DataFrame:
         buckets = F.array(
             *[srp_bucket_expr(F.col(vec_col), planes) for planes in tables]
         )
         base = df.select(
-            F.col(idc).alias(out_id),
+            F.col(id_col).alias(out_id),
             nrm(F.col(vec_col)).alias("_n"),
             F.posexplode(buckets).alias("tbl", "bucket"),
         ).where(F.col("_n") > 0)
         return base.select(out_id, "tbl", "bucket")
 
-    q = keyed(queries, query_id, "q_id")
-    c = keyed(corpus, id_col, "n_id")
+    q = keyed(queries, "q_id")
+    c = keyed(corpus, "n_id")
     cand = (
         c.join(F.broadcast(q), ["tbl", "bucket"])
         .where(F.col("q_id") != F.col("n_id"))
@@ -226,7 +218,7 @@ def srp_lsh_topk(
         .distinct()
     )
     qv = queries.select(
-        F.col(query_id).alias("q_id"),
+        F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("qv"),
         nrm(F.col(vec_col)).alias("qn"),
     )
@@ -254,13 +246,8 @@ def srp_lsh_topk_oracle_sql(
     id_col: str,
     vec_col: str,
     k: int = 5,
-    num_tables: int = 8,
-    planes_per_table: int = 3,
-    dim: int = 64,
-    query_id: str | None = None,
 ) -> str:
-    query_id = query_id or id_col
-    tables = _table_planes(num_tables, planes_per_table, dim)
+    tables = _table_planes()
     nrm = f"sqrt({dot_sql(vec_col, vec_col)})"
     qk = "\n  UNION ALL\n  ".join(
         f"SELECT q_id, {t} AS tbl, {srp_bucket_sql('qv0', planes)} AS bucket "
@@ -276,7 +263,7 @@ def srp_lsh_topk_oracle_sql(
     q6cos = TH.q6_sql(f"{dot} / (qv.qn * cv.cn)")
     return f"""
 WITH q0 AS (
-  SELECT {query_id} AS q_id, {vec_col} AS qv0, {nrm} AS qn0
+  SELECT {id_col} AS q_id, {vec_col} AS qv0, {nrm} AS qn0
   FROM ({queries_sql}) WHERE {nrm} > 0
 ), c0 AS (
   SELECT {id_col} AS n_id, {vec_col} AS cv0, {nrm} AS cn0
@@ -309,9 +296,6 @@ def srp_lsh_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    num_tables: int = 8,
-    planes_per_table: int = 3,
-    dim: int = 64,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs by SRP-LSH buckets + exact cosine verify
@@ -321,9 +305,9 @@ def srp_lsh_pairs(
     brute-force cross join baseline): candidates come from a self
     equi-join on (table, bucket) integer keys, so the n^2 product never
     materializes — at 100 TB the corpus hash-partitions by bucket and
-    each bucket compares independently. ``num_tables`` independent hash
+    each bucket compares independently. ``SRP_TABLES`` independent hash
     tables give recall 1-(1-(1-θ/π)^p)^L for neighbor angle θ (the 8x3
-    default ~0.99 at cosine 0.95); candidate dedup across tables is one
+    shape ~0.99 at cosine 0.95); candidate dedup across tables is one
     distinct on (id_a, id_b).
 
     ``max_bucket_size`` drops over-populated (table, bucket) blocks
@@ -335,7 +319,7 @@ def srp_lsh_pairs(
     oracle replicates the same planes/buckets/cap so the driver check is
     exact.
     """
-    tables = _table_planes(num_tables, planes_per_table, dim)
+    tables = _table_planes()
     nrm = F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col)))
     buckets = F.array(
         *[srp_bucket_expr(F.col(vec_col), planes) for planes in tables]
@@ -391,13 +375,10 @@ def srp_lsh_pairs_oracle_sql(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    num_tables: int = 8,
-    planes_per_table: int = 3,
-    dim: int = 64,
     max_bucket_size: int | None = None,
 ) -> str:
     """DuckDB twin of ``srp_lsh_pairs`` — same planes, buckets, cap."""
-    tables = _table_planes(num_tables, planes_per_table, dim)
+    tables = _table_planes()
     nrm = f"sqrt({dot_sql(vec_col, vec_col)})"
     keyed = "\n  UNION ALL\n  ".join(
         f"SELECT id, {t} AS tbl, {srp_bucket_sql('v0', planes)} AS bucket "
@@ -617,7 +598,6 @@ def ivf_topk(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    query_id: str | None = None,
     train_iters: int = 1,
 ) -> DataFrame:
     """IVF (inverted-file) ANN top-k -> [q_id, n_id, cosine, rank].
@@ -642,7 +622,6 @@ def ivf_topk(
     asc). Zero-norm vectors are excluded on both sides, as in
     ``cosine_topk``.
     """
-    query_id = query_id or id_col
     nrm = lambda v: F.sqrt(dot_expr(v, v))  # noqa: E731
 
     cents = ivf_seed_centroids(corpus, id_col, vec_col, n_centroids)
@@ -653,13 +632,13 @@ def ivf_topk(
 
     lists = ivf_assign(corpus, id_col, vec_col, cents, out_id="n_id")
     probes = ivf_assign(
-        queries, query_id, vec_col, cents, out_id="q_id", n_probe=n_probe
+        queries, id_col, vec_col, cents, out_id="q_id", n_probe=n_probe
     )
     cand = lists.join(F.broadcast(probes), "cent_id").where(
         F.col("q_id") != F.col("n_id")
     ).select("q_id", "n_id")
     qv = queries.select(
-        F.col(query_id).alias("q_id"),
+        F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("qv"),
         nrm(F.col(vec_col)).alias("qn"),
     ).where(F.col("qn") > 0)
@@ -689,7 +668,6 @@ def ivf_topk_oracle_sql(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    query_id: str | None = None,
     train_iters: int = 1,
 ) -> str:
     """DuckDB twin of ``ivf_topk`` — derives the SAME seed + k-means
@@ -697,7 +675,6 @@ def ivf_topk_oracle_sql(
     arithmetic so no fold-order pinning needed; q6 of (sum/1e6)/count per
     coordinate — the identical FP op sequence as ``ivf_train_centroids``),
     lists and probes, so the driver check is exact."""
-    query_id = query_id or id_col
     nrm = f"sqrt({dot_sql(vec_col, vec_col)})"
 
     def assign_sim(cents: str) -> str:
@@ -750,7 +727,7 @@ WITH cents0 AS (
   SELECT {id_col} AS n_id, {vec_col} AS _v, {nrm} AS _n
   FROM {corpus_table} WHERE {nrm} > 0
 ), qbase AS (
-  SELECT {query_id} AS q_id, {vec_col} AS _v, {nrm} AS _n
+  SELECT {id_col} AS q_id, {vec_col} AS _v, {nrm} AS _n
   FROM ({queries_sql}) WHERE {nrm} > 0
 ){train_sql}, lists AS (
   SELECT n_id, cent_id FROM (

@@ -215,22 +215,27 @@ FROM r
 """
 
 
+# Word-shingle length and fingerprint width shared by ``fingerprints`` and
+# its DuckDB twin.
+FINGERPRINT_SHINGLE_K = 3
+FINGERPRINT_KEEP = 4
+
+
 def fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 3,
-    keep: int = 4,
 ) -> DataFrame:
-    """Winnowing-style document fingerprint: the ``keep`` smallest distinct
-    word-shingle rolling hashes, ascending, plus a whole-document hash.
-    Near-identical documents share fingerprint elements (used as a cheap
-    pre-cluster key); the whole-doc hash is the exact-dup key."""
+    """Winnowing-style document fingerprint: the ``FINGERPRINT_KEEP``
+    smallest distinct word-shingle rolling hashes, ascending, plus a
+    whole-document hash. Near-identical documents share fingerprint
+    elements (used as a cheap pre-cluster key); the whole-doc hash is the
+    exact-dup key."""
     th = TH.token_hashes_expr(F.col(text_col))
-    sh = TH.shingle_hashes_expr(th, shingle_k)
+    sh = TH.shingle_hashes_expr(th, FINGERPRINT_SHINGLE_K)
     return df.select(
         F.col(id_col).alias("id"),
-        F.slice(F.array_sort(F.array_distinct(sh)), 1, keep).alias(
+        F.slice(F.array_sort(F.array_distinct(sh)), 1, FINGERPRINT_KEEP).alias(
             "fingerprint"
         ),
         TH.poly_hash_expr(th).alias("doc_hash"),
@@ -238,14 +243,14 @@ def fingerprints(
 
 
 def fingerprints_oracle_sql(
-    table: str, id_col: str, text_col: str, shingle_k: int = 3, keep: int = 4
+    table: str, id_col: str, text_col: str
 ) -> str:
     th = TH.token_hashes_sql(text_col)
-    sh = TH.shingle_hashes_sql("th", shingle_k)
+    sh = TH.shingle_hashes_sql("th", FINGERPRINT_SHINGLE_K)
     return f"""
 WITH t AS (SELECT {id_col} AS id, {th} AS th FROM {table})
 SELECT id,
-  list_sort(list_distinct({sh}))[1:{keep}] AS fingerprint,
+  list_sort(list_distinct({sh}))[1:{FINGERPRINT_KEEP}] AS fingerprint,
   {TH.poly_hash_sql('th')} AS doc_hash
 FROM t
 """

@@ -72,6 +72,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from record_matcher_spark.config import MatchConfig
+from record_matcher_spark.datagen import TRANSCRIPT_SCHEMA
 from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.incremental import apply_merges, match_increment
 from record_matcher_spark.operators.rollup import rollup_conversations
@@ -154,11 +155,8 @@ class TranscriptStreamMatcher:
         )
 
     def _empty_conversations(self) -> DataFrame:
-        empty_t = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, role string, text string, "
-                "tool string, ts timestamp",
-        )
-        return rollup_conversations(empty_t).drop("turns")
+        empty_t = self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
+        return rollup_conversations(empty_t, tokens=True).drop("turns")
 
     def conversations(self) -> DataFrame:
         """Slim conversation rollup of the resolved corpus (log union)."""
@@ -385,11 +383,11 @@ class TranscriptStreamMatcher:
         input_path: str,
         checkpoint_dir: str,
         *,
-        schema=None,
         max_files_per_trigger: int | None = None,
         rebind_checkpoint: bool = False,
     ):
-        """Launch the stream: parquet file source → foreachBatch sink.
+        """Launch the stream: parquet file source of turn rows
+        (``datagen.TRANSCRIPT_SCHEMA``) → foreachBatch sink.
 
         The query runs with the ``availableNow`` trigger: it drains
         everything currently in ``input_path`` and stops — the
@@ -409,11 +407,7 @@ class TranscriptStreamMatcher:
             if os.path.exists(stream_file):
                 os.remove(stream_file)
         offset = self._bind_checkpoint(checkpoint_dir)
-        if schema is None:
-            from record_matcher_spark.datagen import TRANSCRIPT_SCHEMA
-
-            schema = TRANSCRIPT_SCHEMA
-        reader = self.spark.readStream.schema(schema)
+        reader = self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
         if max_files_per_trigger is not None:
             reader = reader.option(
                 "maxFilesPerTrigger", int(max_files_per_trigger)

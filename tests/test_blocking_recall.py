@@ -64,12 +64,18 @@ def _case_noised_corpus(spark, n_entities=400, seed=7):
 
 
 def _recall(conv, tp, n_truth, keys):
-    cand = candidate_pairs(conv, conv, keys, x_id="conv_id", y_id="conv_id")
+    persisted = []
+    cand = candidate_pairs(
+        conv, conv, keys, x_id="conv_id", y_id="conv_id", persisted=persisted
+    )
     cu = cand.select(
         F.least("x_id", "y_id").alias("u"),
         F.greatest("x_id", "y_id").alias("v"),
     ).distinct()
-    return tp.join(cu, ["u", "v"], "left_semi").count() / n_truth
+    recall = tp.join(cu, ["u", "v"], "left_semi").count() / n_truth
+    for d in persisted:
+        d.unpersist()
+    return recall
 
 
 def test_default_keys_recall_under_heavy_case_noise(spark):

@@ -107,7 +107,7 @@ def test_ngram_jaccard_pairs(docs, duck):
     )
     want = duck.sql(
         dedup.ngram_jaccard_pairs_oracle_sql(
-            "documents", "doc_id", "text", 3, 0.55, "lang"
+            "documents", "doc_id", "text", 0.55, "lang"
         )
     ).df()
     assert_frames_equal(got, want, ["id_a", "id_b"])
@@ -158,7 +158,7 @@ def test_ngram_bucket_slop_catches_boundary_pairs(spark, duck):
     ))
     want = con.sql(
         dedup.ngram_jaccard_pairs_oracle_sql(
-            "boundary_docs", "doc_id", "text", 3, 0.5, "lang"
+            "boundary_docs", "doc_id", "text", 0.5, "lang"
         )
     ).df()
     assert_frames_equal(
@@ -189,7 +189,7 @@ def test_ngram_block_cap_drops_hot_group(spark, duck):
     con.register("cap_docs", pd.DataFrame(rows, columns=["doc_id", "text", "lang"]))
     want = con.sql(
         dedup.ngram_jaccard_pairs_oracle_sql(
-            "cap_docs", "doc_id", "text", 3, 0.3, "lang", max_block_size=10
+            "cap_docs", "doc_id", "text", 0.3, "lang", max_block_size=10
         )
     ).df()
     assert len(want) == len(got) == 1

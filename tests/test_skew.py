@@ -42,18 +42,21 @@ def _key(cap):
 
 def test_hot_block_dropped_cold_blocks_kept(spark):
     df = _skewed_df(spark)
-    pairs = candidate_pairs(
-        df, None, [_key(CAP)], cache=False
-    )
+    persisted = []
+    pairs = candidate_pairs(df, None, [_key(CAP)], persisted=persisted)
     # capped: only the cold blocks pair up — C(4,2)=6 unordered pairs each
     assert pairs.count() == N_COLD_KEYS * (COLD_SZ * (COLD_SZ - 1) // 2)
 
     # control: uncapped includes the hot block's quadratic blow-up
-    pairs_uncapped = candidate_pairs(df, None, [_key(None)], cache=False)
+    pairs_uncapped = candidate_pairs(
+        df, None, [_key(None)], persisted=persisted
+    )
     assert pairs_uncapped.count() == (
         N_COLD_KEYS * (COLD_SZ * (COLD_SZ - 1) // 2)
         + N_HOT * (N_HOT - 1) // 2
     )
+    for d in persisted:
+        d.unpersist()
 
 
 def test_cap_bounds_max_block_entering_join(spark):
@@ -90,10 +93,13 @@ def test_xy_mode_cap_applies_per_side(spark):
             "conv_id string, k string",
         )
     )
+    persisted = []
     pairs = candidate_pairs(
-        x, y, [_key(CAP)], x_id="conv_id", y_id="conv_id", cache=False
+        x, y, [_key(CAP)], x_id="conv_id", y_id="conv_id", persisted=persisted
     )
     # HOT contributes nothing (x side over cap); each cold key pairs
     # COLD_SZ x-rows with exactly 1 y-row
     assert pairs.count() == N_COLD_KEYS * COLD_SZ
     assert pairs.where(F.col("x_id").startswith("h")).count() == 0
+    for d in persisted:
+        d.unpersist()

@@ -59,6 +59,17 @@ def test_replay_is_idempotent(spark, tmp_path):
     assert m.state() == st0
 
 
+def test_empty_base_has_committed_segment_columns(spark, tmp_path):
+    """The seed fold's base (an empty store's ``conversations()``) carries
+    every column a committed segment does — the tokenize-once
+    ``tok_hashes``/``tok_hashes_lower`` included, so the first fold's
+    base ∪ batch keeps them and blocking/scoring re-tokenize nothing."""
+    m = TranscriptStreamMatcher(spark, os.path.join(str(tmp_path), "state"))
+    empty = m.conversations().dtypes
+    m.process_batch(_closed_corpus(spark, n=3), 0)
+    assert empty == m.conversations().dtypes
+
+
 def test_cross_batch_merge_then_compact(spark, tmp_path):
     """Batch 1 bridges two batch-0 clusters: the merge map relabels convB
     to convA on read; compaction folds the map into a single next-

@@ -196,9 +196,16 @@ def test_connected_components_null_endpoints_ignored(spark):
 def test_blocking_recall_and_determinism(spark):
     t, truth = _corpus(spark)
     conv = rollup_conversations(t)
-    cand = candidate_pairs(conv, conv, DEFAULT_TRANSCRIPT_KEYS)
+    persisted = []
+    cand = candidate_pairs(
+        conv, conv, DEFAULT_TRANSCRIPT_KEYS, persisted=persisted
+    )
     c1 = set(map(tuple, cand.collect()))
-    c2 = set(map(tuple, candidate_pairs(conv, conv, DEFAULT_TRANSCRIPT_KEYS).collect()))
+    c2 = set(map(tuple, candidate_pairs(
+        conv, conv, DEFAULT_TRANSCRIPT_KEYS, persisted=persisted
+    ).collect()))
+    for d in persisted:
+        d.unpersist()
     assert c1 == c2  # deterministic keys
     # blocking recall over same-entity unordered pairs
     tr = {r["conv_id"]: r["entity_id"] for r in truth.collect()}
@@ -285,7 +292,8 @@ def test_block_cap_bounds_hot_block(spark):
     ]
     df = spark.createDataFrame(rows, "conv_id string, shape string")
     key = BlockingKey("shape", lambda d: F.col("shape"), max_block_size=64)
-    cand = candidate_pairs(df, df, [key], dedup_mode=True, cache=False)
+    persisted = []
+    cand = candidate_pairs(df, df, [key], dedup_mode=True, persisted=persisted)
     pairs = cand.collect()
     # hot block (500 rows -> would be 124,750 pairs) must contribute none
     assert all(a.startswith("c") and b.startswith("c") for a, b in map(tuple, pairs))
@@ -294,7 +302,9 @@ def test_block_cap_bounds_hot_block(spark):
     # uncapped control: the same key without a cap explodes combinatorially
     uncapped = BlockingKey("shape", lambda d: F.col("shape"))
     n_uncapped = candidate_pairs(df, df, [uncapped], dedup_mode=True,
-                                 cache=False).count()
+                                 persisted=persisted).count()
+    for d in persisted:
+        d.unpersist()
     assert n_uncapped == 124_750 + 60
 
 
@@ -344,9 +354,12 @@ def test_scoring_stage_build_is_job_free_and_exact(spark):
     conv = rollup_conversations(t).drop("turns").cache()
     conv.count()  # materialize inputs; the assertion targets PLAN BUILDING
     cfg = default_transcript_match_config()
-    cand = candidate_pairs(conv, conv, cache=False).where("x_id <> y_id")
+    persisted = []
+    cand = candidate_pairs(conv, conv, persisted=persisted).where("x_id <> y_id")
     cand = cand.cache()
     cand.count()
+    for d in persisted:
+        d.unpersist()
 
     sc = spark.sparkContext
     sc.setJobGroup("rm-build-probe", "plan construction must run no jobs")
