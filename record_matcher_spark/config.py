@@ -46,14 +46,13 @@ class ColumnRule:
     cutoff: bool = DEFAULT_CUTOFF
     #: Optional name of a column that ALREADY holds this rule's scorer
     #: ``prep`` payload (e.g. the rollup's tokenize-once ``tok_hashes``
-    #: for ``token_set_jaccard``). When the column is present on a side,
-    #: scoring reads it directly instead of re-running the prep
-    #: expression on that side's strings — sides without the column fall
-    #: back to the prep expression, so the same config works on raw
-    #: tables. The caller guarantees the column's values equal
+    #: for ``token_set_jaccard``). Scoring then reads it on x, and on y
+    #: when ``x_column`` is one of ``y_columns``, instead of running the
+    #: prep expression; :meth:`MatchConfig.validate` requires it on those
+    #: sides. The caller guarantees the column's values equal
     #: ``scorer.prep(blank_coalesce(x_column))`` up to element order
-    #: (consumers are order-insensitive set operations). Only meaningful
-    #: for scorers with a prep phase; ignored otherwise.
+    #: (consumers are order-insensitive set operations). Only read for
+    #: scorers with a prep phase.
     prepped: str | None = None
 
     def __post_init__(self) -> None:
@@ -156,6 +155,15 @@ class MatchConfig:
                 raise InvalidConfigError(
                     f"scorer {r.scorer!r} not registered ({sorted(SCORERS)})"
                 )
+            if r.prepped is not None:
+                if r.prepped not in xs:
+                    raise InvalidConfigError(
+                        f"prepped column {r.prepped!r} not in x schema"
+                    )
+                if r.x_column in r.y_columns and r.prepped not in ys:
+                    raise InvalidConfigError(
+                        f"prepped column {r.prepped!r} not in y schema"
+                    )
         for yc, xc in self.columns_to_group.items():
             if yc not in ys:
                 raise InvalidConfigError(f"group y column {yc!r} not in y schema")

@@ -130,7 +130,9 @@ def match_increment(
     conv_ids must be disjoint from the base.
     ``base_conversations``: the slim conversation rollup of the base
     corpus (e.g. ``TranscriptMatchResult.conversations`` of the run that
-    produced ``base_clusters``); any extra columns are ignored.
+    produced ``base_clusters``). It must carry every column the slim
+    rollup has, ``tok_hashes``/``tok_hashes_lower`` included (ValueError
+    otherwise); any extra columns are ignored.
     ``base_clusters``: ``[conv_id, cluster_id]`` for every base conv.
 
     ``edge_mode``: as in :func:`pipeline.match_transcripts`
@@ -157,31 +159,21 @@ def match_increment(
         persisted.append(df)
         return df
 
-    newc = _persist(
-        rollup_conversations(new_transcripts, tokens=True).drop("turns")
-    )
-    # base slimmed to the shared schema; union is the y side. ONLY the
-    # tokenize-once columns are optional on the base side: a base from an
-    # older (token-less) rollup drops them from the union and
-    # scoring/blocking fall back to the prep expressions with identical
-    # results (ColumnRule.prepped and minhash hashes_column are
-    # presence-gated). Every other rollup column is REQUIRED — a base
-    # missing e.g. ts_min is malformed, and silently narrowing both
-    # sides would hide it (earlier behavior; flagged in round-4 review).
-    _OPTIONAL_Y = {"tok_hashes", "tok_hashes_lower"}
-    missing = [
-        c for c in newc.columns
-        if c not in base_conversations.columns and c not in _OPTIONAL_Y
-    ]
+    newc = rollup_conversations(new_transcripts).drop("turns")
+    # base slimmed to the batch rollup's schema; union is the y side.
+    # EVERY rollup column is required on the base, the tokenize-once
+    # tok_hashes/tok_hashes_lower included: blocking and scoring read
+    # them and re-tokenize nothing. A base missing any of them (e.g.
+    # ts_min) is malformed, and silently narrowing both sides would
+    # hide it.
+    missing = [c for c in newc.columns if c not in base_conversations.columns]
     if missing:
         raise ValueError(
-            f"base_conversations is missing required rollup columns "
-            f"{missing}; only tokenize-once columns {sorted(_OPTIONAL_Y)} "
-            f"may be absent"
+            f"base_conversations is missing required rollup columns {missing}"
         )
-    y_cols = [c for c in newc.columns if c in base_conversations.columns]
+    newc = _persist(newc)
     all_y = _persist(
-        base_conversations.select(*y_cols).unionByName(newc.select(*y_cols))
+        base_conversations.select(*newc.columns).unionByName(newc)
     )
 
     uniqueness = uniqueness_by_columns(all_y, cfg.x_match_columns)

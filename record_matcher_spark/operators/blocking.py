@@ -47,10 +47,12 @@ class BlockingKey:
     keyed: Callable[[DataFrame, str], DataFrame] | None = None
 
 
-def _tokens(col: Column, lowercase: bool = True) -> Column:
-    base = F.lower(col) if lowercase else col
+def _tokens(col: Column) -> Column:
+    """Distinct lowercase whitespace tokens, empty ones dropped."""
     return F.array_distinct(
-        F.filter(F.split(F.trim(base), r"\s+"), lambda t: t != F.lit(""))
+        F.filter(
+            F.split(F.trim(F.lower(col)), r"\s+"), lambda t: t != F.lit("")
+        )
     )
 
 
@@ -80,104 +82,73 @@ def token_prefix_key(column: str, k: int = 3) -> BlockingKey:
 
 
 def minhash_band_keys(
-    column: str,
     num_hashes: int = 16,
     bands: int = 4,
     max_block_size: int | None = None,
     hashes_column: str = "tok_hashes_lower",
-    lowercase: bool = True,
 ) -> BlockingKey:
-    """MinHash LSH band keys over the token set of ``column``.
+    """MinHash LSH band keys over the token-hash set in ``hashes_column``.
 
-    Signature: for hash i, min over tokens of xxhash64(i, token). Bands of
-    r = num_hashes/bands rows are folded into one xxhash64 integer key per
-    band. Two records with token-set Jaccard s collide in at least one
-    band with prob 1 - (1 - s^r)^b.
+    Signature: for hash i, min over tokens of xxhash64(i, token hash).
+    Bands of r = num_hashes/bands rows are folded into one xxhash64
+    integer key per band. Two records with token-set Jaccard s collide in
+    at least one band with prob 1 - (1 - s^r)^b.
 
-    Implemented as explode(token hashes) → groupBy(id).agg(min(hash_i)...):
-    map-side partial aggregation, no per-row signature-array
-    materialization (an expression-level ``transform`` building all
-    num_hashes × |tokens| draws per row was measured as a GC storm at
-    high thread counts), and the groupBy reuses the upstream conv_id
-    partitioning (no extra shuffle after the rollup). Each token is
-    string-hashed ONCE (``xxhash64(token)``) before the explode; the
-    num_hashes per-token draws are then xxhash64 over that fixed-width
-    long — at 16 hashes this replaces 16 string traversals per token row
-    with one, and the exploded relation carries an 8-byte long instead of
-    the token string (less shuffle-free but allocation-heavy row payload;
-    measured as the dominant CPU of the candidates stage at high thread
-    counts). Hashing the hash preserves the MinHash property: the draws
-    are still num_hashes independent uniform functions of the token
-    (collisions between distinct tokens remain ~2^-64). Duplicated tokens
-    don't change a min, so the signature equals the distinct-token-set
-    definition.
-
-    ``lowercase``: token normalization for this family — True (default)
-    tokenizes like the other blocking keys (case-folded), False uses raw
-    tokens. Case-folding matters for RECALL, not just consistency:
+    ``hashes_column`` is an ``array<long>`` of distinct xxhash64 token
+    hashes, one of the rollup's tokenize-once columns
+    (operators/rollup.py): ``tok_hashes_lower`` (the default, case-folded)
+    or ``tok_hashes`` (case-sensitive). No stage here tokenizes text. A
+    frame without the column is an error, and so is a wrongly typed one,
+    rather than a silent recall loss. Case-folding matters for RECALL:
     measured on a corpus whose variants flip word case with p=0.3,
     case-sensitive minhash-only candidate recall collapses to ~0.16 vs
     ~0.62 case-folded at the default 16x4 geometry (per-band collision
     probability is 1-(1-s^4)^4 and case flips crater the case-sensitive
     Jaccard s), and even with the other two families covering, the full
     default keyset loses ~8pp of pairs (tests/test_blocking_recall.py
-    pins this). Applies to both paths, so keys are identical with or without
-    the precomputed column.
+    pins this).
 
-    ``hashes_column``: when the input ALREADY carries the distinct token
-    hashes of THIS family's normalization as an ``array<long>`` column
-    of this name (the rollup's tokenize-once ``tok_hashes_lower`` /
-    ``tok_hashes``, operators/rollup.py), the explode consumes that
-    array directly — the signature pipeline is then pure whole-stage
-    codegen (explode, per-draw xxhash64, native min aggregate) with NO
-    re-tokenization. The column MUST hold xxhash64 hashes of this
-    family's own ``(column, lowercase)`` normalization — that pairing
-    cannot be checked at plan time, so it is part of the contract
-    (the rollup emits matching pairs: ``tok_hashes_lower`` ↔
-    ``lowercase=True``, ``tok_hashes`` ↔ ``lowercase=False``, both over
-    ``full_text``); a present-but-wrongly-TYPED column is a hard error
-    rather than a silent recall loss. A per-row expression form (array_min over
-    ``transform`` draws, no explode/aggregate) was tried and rejected:
-    higher-order functions are interpreted per element, and
-    num_hashes * |tokens| interpreted lambda evaluations per record cost
-    more than the codegen explode+aggregate they replaced. The keys are
-    BIT-IDENTICAL to the tokenizing path: ``min_i xxhash64(i, h)`` over
-    the same hash set — min is order-insensitive, so the unspecified
-    array element order cannot change a key. Records with an empty hash
-    array produce no exploded rows and therefore no keys, exactly like
-    the tokenizing path. Inputs without the column tokenize ``column``
-    themselves.
+    Implemented as explode(token hashes) → groupBy(id).agg(min(hash_i)...):
+    pure whole-stage codegen (explode, per-draw xxhash64, native min
+    aggregate) with map-side partial aggregation, no per-row
+    signature-array materialization, and the groupBy reuses the upstream
+    conv_id partitioning (no extra shuffle after the rollup). The
+    num_hashes per-token draws are xxhash64 over the token's fixed-width
+    long hash, which preserves the MinHash property: the draws are still
+    num_hashes independent uniform functions of the token (collisions
+    between distinct tokens remain ~2^-64). Min is order-insensitive, so
+    the unspecified array element order cannot change a key. Two per-row
+    forms were measured and rejected: an expression-level ``transform``
+    building all num_hashes × |tokens| draws per row was a GC storm at
+    high thread counts, and ``array_min`` over ``transform`` draws (no
+    explode/aggregate) interprets its lambda per element, which cost more
+    than the codegen explode+aggregate.
     """
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
 
     def keyed(df: DataFrame, id_col: str) -> DataFrame:
-        if hashes_column in df.columns:
+        try:
             dt = df.schema[hashes_column].dataType
-            if not (
-                isinstance(dt, ArrayType)
-                and isinstance(dt.elementType, LongType)
-            ):
-                raise TypeError(
-                    f"minhash hashes_column {hashes_column!r} must be "
-                    f"array<bigint> (distinct xxhash64 token hashes of "
-                    f"this family's normalization), got {dt.simpleString()}"
-                )
-            ex = df.select(
-                F.col(id_col).alias("_id"),
-                F.explode(F.col(hashes_column)).alias("_t"),
+        except KeyError:
+            raise ValueError(
+                f"minhash hashes_column {hashes_column!r} not in the input "
+                f"columns {df.columns}; roll the input up with "
+                f"operators.rollup.rollup_conversations"
+            ) from None
+        if not (
+            isinstance(dt, ArrayType) and isinstance(dt.elementType, LongType)
+        ):
+            raise TypeError(
+                f"minhash hashes_column {hashes_column!r} must be "
+                f"array<bigint> (distinct xxhash64 token hashes), got "
+                f"{dt.simpleString()}"
             )
-        else:
-            ex = df.select(
-                F.col(id_col).alias("_id"),
-                F.explode(
-                    F.transform(
-                        _tokens(F.col(column), lowercase=lowercase),
-                        lambda t: F.xxhash64(t),
-                    )
-                ).alias("_t"),
-            )
+        ex = df.select(
+            F.col(id_col).alias("_id"),
+            F.explode(F.col(hashes_column)).alias("_t"),
+        )
         aggs = [
             F.min(F.xxhash64(F.lit(i), F.col("_t"))).alias(f"_h{i}")
             for i in range(num_hashes)
@@ -192,7 +163,7 @@ def minhash_band_keys(
         return sig.select("_id", F.explode(F.array(*band_cols)).alias("_k"))
 
     return BlockingKey(
-        f"minhash_{column}_{num_hashes}x{bands}",
+        f"minhash_{hashes_column}_{num_hashes}x{bands}",
         keyed=keyed,
         max_block_size=max_block_size,
     )
@@ -209,8 +180,7 @@ DEFAULT_TRANSCRIPT_KEYS: tuple[BlockingKey, ...] = (
     # crater case-sensitive Jaccard and band collisions die with s^r.
     # The lower column keeps tokenization once-per-normalization in the
     # rollup projection; no stage here re-tokenizes.
-    minhash_band_keys("full_text", num_hashes=16, bands=4,
-                      max_block_size=256),
+    minhash_band_keys(num_hashes=16, bands=4, max_block_size=256),
 )
 
 

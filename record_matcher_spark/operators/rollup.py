@@ -15,17 +15,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from record_matcher_spark.functions.scorers import _token_hashes_prep
+
 # Separator of every rolled-up sequence string (``role_seq``, ``tool_seq``,
 # ``rollup_sequence``'s ``{value_col}_seq``).
 SEQ_SEP = ">"
 
 
-def rollup_conversations(
-    transcripts: DataFrame, tokens: bool = False
-) -> DataFrame:
+def rollup_conversations(transcripts: DataFrame) -> DataFrame:
     """One row per conv_id with ordered turns + derived match columns.
 
-    ``tokens=True`` adds the tokenize-ONCE columns (both ``array<long>``):
+    This is the one place conversation text is tokenized. Two columns
+    (both ``array<long>``) carry the result to every consumer:
 
     - ``tok_hashes`` — xxhash64 over the conversation's DISTINCT
       whitespace-split ``full_text`` tokens, case-sensitive. Built with
@@ -45,8 +46,10 @@ def rollup_conversations(
 
     Both are plain projections over ``full_text`` — no extra aggregation,
     no join, the rollup's plan shape is unchanged. Each NORMALIZATION of
-    the corpus is tokenized exactly once, here; scoring and blocking
-    stages re-tokenize nothing (pinned in tests/test_tokenize_once.py).
+    the corpus is tokenized exactly once, here. MinHash blocking
+    (``hashes_column``), Jaccard scoring (``ColumnRule.prepped``) and
+    ``match_increment``'s base require these columns and have no
+    re-tokenizing fallback (pinned in tests/test_tokenize_once.py).
 
     One shuffle (groupBy conv_id) — and ZERO shuffles when the input is
     already clustered by conv_id (Iceberg bucket layout): the aggregate's
@@ -118,19 +121,13 @@ def rollup_conversations(
         "ts_min",
         "turns",
     )
-    if tokens:
-        from record_matcher_spark.functions.scorers import (
-            _token_hashes_prep,
-        )
-
-        out = out.select(
-            "*",
-            _token_hashes_prep(F.col("full_text")).alias("tok_hashes"),
-            _token_hashes_prep(F.lower(F.col("full_text"))).alias(
-                "tok_hashes_lower"
-            ),
-        )
-    return out
+    return out.select(
+        "*",
+        _token_hashes_prep(F.col("full_text")).alias("tok_hashes"),
+        _token_hashes_prep(F.lower(F.col("full_text"))).alias(
+            "tok_hashes_lower"
+        ),
+    )
 
 
 def rollup_sequence(

@@ -230,15 +230,11 @@ def _y_side(y_df: DataFrame, cfg: MatchConfig, extra: Iterable[str] = ()) -> Dat
                 name = f"__rm_yp_{r.scorer}_{yc}"
                 if name not in seen:
                     seen.add(name)
-                    # tokenize-once fast path (see prepare_x): a prepped
-                    # column present on the y side replaces the prep
-                    # expression for the rule's SELF column only (y_columns
-                    # other than x_column still prep from their strings)
-                    if (
-                        r.prepped is not None
-                        and yc == r.x_column
-                        and r.prepped in y_df.columns
-                    ):
+                    # tokenize-once (see prepare_x): the prepped column
+                    # replaces the prep expression for the rule's SELF
+                    # column only (y_columns other than x_column still
+                    # prep from their strings)
+                    if r.prepped is not None and yc == r.x_column:
                         val = F.col(r.prepped)
                     else:
                         val = scorer.prep(blank_coalesce(F.col(yc)))
@@ -318,11 +314,11 @@ def prepare_x(
         out = out.withColumn(f"__rm_xs_{rule.x_column}", xs)
         scorer = SCORERS[rule.scorer]
         if scorer.prep is not None:
-            # tokenize-once fast path: a caller-provided prepped column
+            # tokenize-once: a caller-provided prepped column
             # (ColumnRule.prepped, e.g. the rollup's tok_hashes) replaces
             # the prep expression — same values as sets, no per-consumer
             # re-tokenization of the heaviest strings
-            if rule.prepped is not None and rule.prepped in x_df.columns:
+            if rule.prepped is not None:
                 prep_val = F.col(rule.prepped)
             else:
                 prep_val = scorer.prep(xs)

@@ -204,14 +204,13 @@ def match_transcripts(
     # pipeline stage reads it (blocking/scoring consume only the derived
     # match columns) — drop it before the persist so the conversations
     # cache and every downstream shuffle carry a slim payload. Callers
-    # needing the full rollup use operators.rollup directly.
-    # tokens=True: the cache carries the tokenize-once `tok_hashes` set,
-    # consumed by MinHash blocking AND Jaccard scoring (both sides) —
-    # the conversation text is tokenized exactly once per corpus.
+    # needing the full rollup use operators.rollup directly. The cache
+    # carries the tokenize-once `tok_hashes`/`tok_hashes_lower` sets,
+    # consumed by Jaccard scoring (both sides) and MinHash blocking.
     conv = _stage(
         "conversations",
         lambda: _obs(
-            rollup_conversations(transcripts, tokens=True).drop("turns"),
+            rollup_conversations(transcripts).drop("turns"),
             "conversations",
             F.count(F.lit(1)).alias("n_conversations"),
             F.avg("n_turns").alias("avg_turns"),

@@ -79,6 +79,11 @@ from record_matcher_spark.operators.rollup import rollup_conversations
 
 _DIR_RE = re.compile(r"^g(\d{4})_b(\d{8})$")
 _COMMIT = "_COMMIT"
+# Schemas of the assignments and merges logs. Reads pass them (and the
+# conversations log its rollup schema) so Spark runs no schema-inference
+# job over the segments the store itself wrote.
+_ASSIGNMENTS_SCHEMA = "conv_id string, cluster_id string"
+_MERGES_SCHEMA = "old_cluster_id string, cluster_id string"
 
 
 @dataclass(frozen=True)
@@ -156,7 +161,7 @@ class TranscriptStreamMatcher:
 
     def _empty_conversations(self) -> DataFrame:
         empty_t = self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
-        return rollup_conversations(empty_t, tokens=True).drop("turns")
+        return rollup_conversations(empty_t).drop("turns")
 
     def conversations(self) -> DataFrame:
         """Slim conversation rollup of the resolved corpus (log union)."""
@@ -164,9 +169,10 @@ class TranscriptStreamMatcher:
             os.path.join(self._dir(g, b), "conversations")
             for g, b in self._live()
         ]
+        empty = self._empty_conversations()
         if not paths:
-            return self._empty_conversations()
-        return self.spark.read.parquet(*paths)
+            return empty
+        return self.spark.read.schema(empty.schema).parquet(*paths)
 
     def _merge_map(self) -> dict[str, str]:
         """Transitively-composed merge chain, path-compressed.
@@ -184,7 +190,8 @@ class TranscriptStreamMatcher:
             # re-appears as a later merge's old_cluster_id (it is no
             # longer a label in the composed view), so each key occurs
             # once across the whole log and read order is irrelevant
-            for r in self.spark.read.parquet(*paths).collect():
+            merges = self.spark.read.schema(_MERGES_SCHEMA).parquet(*paths)
+            for r in merges.collect():
                 m[r["old_cluster_id"]] = r["cluster_id"]
 
         def resolve(label: str) -> str:
@@ -206,15 +213,13 @@ class TranscriptStreamMatcher:
             for g, b in self._live()
         ]
         if not paths:
-            return self.spark.createDataFrame(
-                [], "conv_id string, cluster_id string"
-            )
-        assigns = self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], _ASSIGNMENTS_SCHEMA)
+        assigns = self.spark.read.schema(_ASSIGNMENTS_SCHEMA).parquet(*paths)
         mm = self._merge_map()
         if not mm:
             return assigns
         merges_df = self.spark.createDataFrame(
-            list(mm.items()), "old_cluster_id string, cluster_id string"
+            list(mm.items()), _MERGES_SCHEMA
         )
         # mm is already transitively composed, so one apply_merges hop
         # (broadcast relabel join) lands every row on its final survivor
@@ -319,9 +324,7 @@ class TranscriptStreamMatcher:
             cur.batch_id,
             self.conversations(),
             self.clusters(),
-            self.spark.createDataFrame(
-                [], "old_cluster_id string, cluster_id string"
-            ),
+            self.spark.createDataFrame([], _MERGES_SCHEMA),
         )
         # drop EVERY other segment dir below or at the new generation —
         # committed older generations, and torn (marker-less) leftovers

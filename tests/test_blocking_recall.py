@@ -49,7 +49,7 @@ def _case_noised_corpus(spark, n_entities=400, seed=7):
             yield pdf
 
     t2 = t.mapInPandas(flip, schema=t.schema)
-    conv = rollup_conversations(t2, tokens=True).drop("turns").cache()
+    conv = rollup_conversations(t2).drop("turns").cache()
     conv.count()
     tp = (
         truth.alias("a")
@@ -86,10 +86,9 @@ def test_default_keys_recall_under_heavy_case_noise(spark):
         # ~0.84 here; the case-folded default must hold the higher bar
         assert r_default >= 0.88, r_default
 
-        cs = (minhash_band_keys("full_text", 16, 4, max_block_size=256,
-                                hashes_column="tok_hashes",
-                                lowercase=False),)
-        lc = (minhash_band_keys("full_text", 16, 4, max_block_size=256),)
+        cs = (minhash_band_keys(16, 4, max_block_size=256,
+                                hashes_column="tok_hashes"),)
+        lc = (minhash_band_keys(16, 4, max_block_size=256),)
         r_cs = _recall(conv, tp, n_truth, cs)
         r_lc = _recall(conv, tp, n_truth, lc)
         # the ordering that motivated the fix: case-folded minhash alone

@@ -62,8 +62,8 @@ def test_replay_is_idempotent(spark, tmp_path):
 def test_empty_base_has_committed_segment_columns(spark, tmp_path):
     """The seed fold's base (an empty store's ``conversations()``) carries
     every column a committed segment does — the tokenize-once
-    ``tok_hashes``/``tok_hashes_lower`` included, so the first fold's
-    base ∪ batch keeps them and blocking/scoring re-tokenize nothing."""
+    ``tok_hashes``/``tok_hashes_lower`` included, which match_increment
+    requires on its base."""
     m = TranscriptStreamMatcher(spark, os.path.join(str(tmp_path), "state"))
     empty = m.conversations().dtypes
     m.process_batch(_closed_corpus(spark, n=3), 0)

@@ -1,6 +1,6 @@
-"""Tokenize-once fast paths: the rollup's tok_hashes columns must be
-bit-equal (as sets) to the per-consumer tokenizations they replace, the
-MinHash expression path must emit identical keys to the explode path, the
+"""Tokenize once: the rollup's tok_hashes columns must be bit-equal (as
+sets) to the tokenizations they replace, MinHash blocking and prepped
+scoring must read them (and refuse inputs without them), the
 prepped-column scoring override must score identically, and the CC
 canonicalization must not change components.
 
@@ -11,15 +11,19 @@ aggregation per corpus — these tests pin that the motion is semantics-free.
 
 from __future__ import annotations
 
+import datetime as dt
+
+import pytest
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import ColumnRule, MatchConfig
-from record_matcher_spark.datagen import generate_transcripts
-from record_matcher_spark.functions.scorers import _token_hashes_prep
-from record_matcher_spark.operators.blocking import (
-    minhash_band_keys,
-    _tokens,
+from record_matcher_spark.datagen import (
+    TRANSCRIPT_SCHEMA,
+    generate_transcripts,
 )
+from record_matcher_spark.errors import InvalidConfigError
+from record_matcher_spark.functions.scorers import _token_hashes_prep
+from record_matcher_spark.operators.blocking import minhash_band_keys
 from record_matcher_spark.operators.cluster import connected_components
 from record_matcher_spark.operators.rollup import rollup_conversations
 from record_matcher_spark.operators.scoring import score_candidate_pairs
@@ -34,7 +38,15 @@ def assert_df_equal(a, b):
 
 def _conv(spark, n=60, seed=11):
     t, _ = generate_transcripts(spark, n, seed=seed, num_partitions=4)
-    return rollup_conversations(t, tokens=True).drop("turns").cache()
+    return rollup_conversations(t).drop("turns").cache()
+
+
+def _one_turn_convs(spark, texts):
+    """Rolled-up conversations of one user turn each: {conv_id: text}."""
+    ts = dt.datetime(2024, 1, 1)
+    rows = [(c, 0, "user", text, "", ts) for c, text in texts.items()]
+    t = spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
+    return rollup_conversations(t).drop("turns")
 
 
 def test_tok_hashes_match_full_text_tokenization(spark):
@@ -49,7 +61,12 @@ def test_tok_hashes_match_full_text_tokenization(spark):
         F.array_sort(_token_hashes_prep(F.col("full_text"))).alias("want"),
         F.array_sort(
             F.transform(
-                _tokens(F.col("full_text"), lowercase=False),
+                F.array_distinct(
+                    F.filter(
+                        F.split(F.trim(F.col("full_text")), r"\s+"),
+                        lambda t: t != F.lit(""),
+                    )
+                ),
                 lambda t: F.xxhash64(t),
             )
         ).alias("want_raw"),
@@ -60,26 +77,18 @@ def test_tok_hashes_match_full_text_tokenization(spark):
     assert bad.count() == 0, bad.limit(3).collect()
 
 
-def test_minhash_precomputed_hashes_keys_identical(spark):
-    """The precomputed-hashes path (tok_hashes) and the tokenizing path
-    (full_text) produce the identical (_id, _k) key set — the transcript
-    family is case-sensitive on both paths."""
-    conv = _conv(spark)
-    key = minhash_band_keys("full_text", num_hashes=16, bands=4,
-                            hashes_column="tok_hashes", lowercase=False)
-    fast = key.keyed(conv, "conv_id")
-    slow = key.keyed(conv.drop("tok_hashes"), "conv_id")
-    assert_df_equal(fast, slow)
-
-
 def test_minhash_lowercase_family_distinct_from_raw(spark):
-    """lowercase=True (generic default) and lowercase=False (transcript
-    family) give the same keys on case-clean text and different keys when
-    case differs — pinning that the normalization knob is real."""
-    rows = [("a", "alpha beta gamma"), ("b", "Alpha beta gamma")]
-    df = spark.createDataFrame(rows, ["id", "full_text"])
-    lo = minhash_band_keys("full_text", 8, 2).keyed(df, "id")
-    raw = minhash_band_keys("full_text", 8, 2, lowercase=False).keyed(df, "id")
+    """The case-folded family (tok_hashes_lower, the default) gives two
+    conversations that differ only in case the same keys; the
+    case-sensitive family (tok_hashes) gives them different keys —
+    pinning that the two hashes_columns are different normalizations."""
+    df = _one_turn_convs(
+        spark, {"a": "alpha beta gamma", "b": "Alpha beta gamma"}
+    )
+    lo = minhash_band_keys(8, 2).keyed(df, "conv_id")
+    raw = minhash_band_keys(8, 2, hashes_column="tok_hashes").keyed(
+        df, "conv_id"
+    )
     lo_keys = {(r["_id"], r["_k"]) for r in lo.collect()}
     raw_keys = {(r["_id"], r["_k"]) for r in raw.collect()}
     lo_a = {k for i, k in lo_keys if i == "a"}
@@ -162,41 +171,34 @@ def test_exact_hash_prep_vs_string_equality(spark):
         SCORERS.pop(name, None)
 
 
-def test_minhash_lower_precomputed_keys_identical(spark):
-    """The tok_hashes_lower fast path (the DEFAULT transcript family) and
-    the lowercase-retokenizing path produce the identical (_id, _k) key
-    set — same pin as the case-sensitive twin above, for the case-folded
-    normalization the default keys actually use."""
-    conv = _conv(spark)
-    key = minhash_band_keys("full_text", num_hashes=16, bands=4)
-    fast = key.keyed(conv, "conv_id")
-    slow = key.keyed(conv.drop("tok_hashes_lower"), "conv_id")
-    assert_df_equal(fast, slow)
-
-
 def test_minhash_hashes_column_type_validated(spark):
     """A present-but-wrongly-typed hashes_column is a hard error, not a
-    silent recall loss (round-4 review: the fast path engaged on column
-    NAME alone)."""
-    import pytest
-
+    silent recall loss (the column is matched by NAME)."""
     rows = [("a", "alpha beta", ["alpha", "beta"])]
     df = spark.createDataFrame(
         rows, ["id", "full_text", "tok_hashes_lower"]
     )  # array<string>, not array<long>
-    key = minhash_band_keys("full_text", 8, 2)
+    key = minhash_band_keys(8, 2)
     with pytest.raises(TypeError, match="array<bigint>"):
         key.keyed(df, "id")
 
 
-def test_prepped_column_absent_falls_back(spark):
-    """A config naming a prepped column works unchanged on inputs that
-    don't carry it (presence-based fallback)."""
+def test_minhash_hashes_column_missing_raises(spark):
+    """A frame without the family's hashes_column is refused: blocking
+    never tokenizes text itself."""
+    df = spark.createDataFrame([("a", "alpha beta")], ["id", "full_text"])
+    with pytest.raises(ValueError, match="tok_hashes_lower"):
+        minhash_band_keys(8, 2).keyed(df, "id")
+
+
+def test_prepped_column_absent_raises(spark):
+    """A config naming a prepped column is refused on an x or y side that
+    does not carry it: scoring has no re-tokenizing fallback."""
     conv = _conv(spark)
     plain = conv.drop("tok_hashes", "tok_hashes_lower")
-    cand = plain.select(F.col("conv_id").alias("x_id")).crossJoin(
-        plain.select(F.col("conv_id").alias("y_id"))
-    ).limit(200)
+    cand = conv.select(
+        F.col("conv_id").alias("x_id"), F.col("conv_id").alias("y_id")
+    )
     cfg = MatchConfig(
         rules=(
             ColumnRule("full_text", ("full_text",),
@@ -206,8 +208,10 @@ def test_prepped_column_absent_falls_back(spark):
         required_threshold=45.0, duplicate_threshold=0.0,
         x_id="conv_id", y_id="conv_id",
     )
-    out = score_candidate_pairs(plain, plain, cand, cfg)
-    assert out.count() > 0
+    with pytest.raises(InvalidConfigError, match="not in x schema"):
+        score_candidate_pairs(plain, conv, cand, cfg)
+    with pytest.raises(InvalidConfigError, match="not in y schema"):
+        score_candidate_pairs(conv, plain, cand, cfg)
 
 
 def test_cc_directed_vs_canonical_components_identical(spark):
@@ -249,16 +253,16 @@ def test_prepped_scoring_plan_has_no_tokenization(spark):
 
 
 def test_rollup_tokens_plan_exchange_free_on_clustered_input(spark):
-    """tokens=True must not add a shuffle on a CACHED conv_id-clustered
-    input (the bench/production layout): both aggregates read the cache's
-    hash(conv_id) partitioning and the join reuses it — zero
-    'Exchange hashpartitioning' in the whole plan."""
+    """The token-hash columns must not add a shuffle on a CACHED
+    conv_id-clustered input (the bench/production layout): both
+    aggregates read the cache's hash(conv_id) partitioning and the join
+    reuses it — zero 'Exchange hashpartitioning' in the whole plan."""
     t, _ = generate_transcripts(spark, 40, seed=7, num_partitions=4)
     clustered = t.repartition(8, "conv_id").cache()
     clustered.count()
     try:
         plan = (
-            rollup_conversations(clustered, tokens=True)
+            rollup_conversations(clustered)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
