@@ -58,13 +58,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
+from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.operators.blocking import candidate_pairs
 from record_matcher_spark.operators.cluster import connected_components
 from record_matcher_spark.operators.resolve import resolve_matches
 from record_matcher_spark.operators.rollup import rollup_conversations
 from record_matcher_spark.operators.scoring import (
+    _uniqueness_counts,
+    _uniqueness_ratios,
     score_candidate_pairs,
-    uniqueness_by_columns,
 )
 from record_matcher_spark.pipeline import (
     EDGE_MODES,
@@ -127,7 +129,11 @@ def match_increment(
     """Match a batch of transcripts against a clustered base corpus.
 
     ``new_transcripts``: turn-level rows (rollup schema) for the batch;
-    conv_ids must be disjoint from the base.
+    conv_ids must be disjoint from the base: a conversation's turns
+    arrive whole within one batch. The guard rides on the uniqueness
+    aggregate below (a distinct count of base ∪ batch conv_ids), so it
+    costs no extra pass over the corpus, and a batch that re-delivers a
+    base conv_id raises InvalidConfigError before anything is matched.
     ``base_conversations``: the slim conversation rollup of the base
     corpus (e.g. ``TranscriptMatchResult.conversations`` of the run that
     produced ``base_clusters``). It must carry every column the slim
@@ -176,7 +182,30 @@ def match_increment(
         base_conversations.select(*newc.columns).unionByName(newc)
     )
 
-    uniqueness = uniqueness_by_columns(all_y, cfg.x_match_columns)
+    # one aggregate over base ∪ batch: the uniqueness counts plus the
+    # conv_id counts that check the ingest contract (the rollup makes
+    # batch ids unique, so a repeat means a base id re-delivered)
+    columns = list(dict.fromkeys(cfg.x_match_columns))
+    counts = all_y.agg(
+        *_uniqueness_counts(columns),
+        F.count("conv_id").alias("__rm_ids"),
+        F.count_distinct("conv_id").alias("__rm_distinct_ids"),
+    ).first()
+    if counts["__rm_distinct_ids"] < counts["__rm_ids"]:
+        dup = (
+            all_y.groupBy("conv_id").count().where(F.col("count") > 1)
+            .limit(5).collect()
+        )
+        for df in persisted:
+            df.unpersist()
+        ids = ", ".join(str(r["conv_id"]) for r in dup)
+        raise InvalidConfigError(
+            "batch re-delivers conversation(s) already in the corpus "
+            f"({ids}, ...): a conversation's turns must arrive whole within "
+            "one batch. Fix the upstream batching (files partitioned by "
+            "conversation)."
+        )
+    uniqueness = _uniqueness_ratios(counts, columns)
 
     # Lineage policy: the batch-sized frames (candidates, scored pairs,
     # the contracted edge set below) are EAGER localCheckpoints, not mere
@@ -208,38 +237,39 @@ def match_increment(
     # connectivity is fully represented by the labels, so CC below runs on
     # O(|batch| + touched clusters) nodes. src is always a batch conv (the
     # x side); only dst can be a base conv.
+    #
+    # Nodes are struct(b, id), b = 0 for a base label and 1 for a batch
+    # conv, and CC labels a component with its minimum node. So the label
+    # is the component's representative with no further pass: the
+    # smallest BASE label when it touches the base (cluster stability —
+    # base members never relabel except on a merge), else the smallest
+    # batch conv_id (identical to the batch pipeline's min-id labeling).
+    def node(b: int, col: str):
+        return F.struct(F.lit(b).alias("b"), F.col(col).alias("id"))
+
     bc = base_clusters.select(
         F.col("conv_id").alias("dst"), F.col("cluster_id").alias("__rm_dcl")
     )
     cedges = (
         edges.join(bc, "dst", "left")
-        .select("src", F.coalesce("__rm_dcl", "dst").alias("dst"))
+        .select(
+            node(1, "src").alias("src"),
+            # a NULL dst stays NULL, so CC drops the edge
+            F.when(F.col("__rm_dcl").isNotNull(), node(0, "__rm_dcl"))
+            .when(F.col("dst").isNotNull(), node(1, "dst"))
+            .alias("dst"),
+        )
         .localCheckpoint(eager=True)  # see lineage policy above
     )
-
-    cc = connected_components(cedges, "src", "dst")
-
-    # Component representative: the smallest BASE label when the component
-    # touches the base (cluster stability — base members never relabel
-    # except on a merge), else the smallest batch conv_id (identical to
-    # the batch pipeline's min-id labeling).
-    base_ids = base_clusters.select(
-        F.col("cluster_id").alias("node")
-    ).distinct().withColumn("_is_base", F.lit(True))
-    nodes = cc.join(base_ids, "node", "left")
-    rep = nodes.groupBy("component").agg(
-        F.min(F.when(F.col("_is_base"), F.col("node"))).alias("_base_rep"),
-        F.min("node").alias("_any_rep"),
-    ).select(
-        "component",
-        F.coalesce("_base_rep", "_any_rep").alias("_label"),
-    )
-    labeled = _persist(nodes.join(rep, "component"))
+    cc = _persist(connected_components(cedges, "src", "dst"))
 
     assignments = (
         newc.select("conv_id")
         .join(
-            labeled.select(F.col("node").alias("conv_id"), "_label"),
+            cc.where(F.col("node.b") == 1).select(
+                F.col("node.id").alias("conv_id"),
+                F.col("component.id").alias("_label"),
+            ),
             "conv_id",
             "left",
         )
@@ -248,11 +278,11 @@ def match_increment(
             F.coalesce("_label", F.col("conv_id")).alias("cluster_id"),
         )
     )
-    merges = labeled.where(
-        F.col("_is_base") & (F.col("node") != F.col("_label"))
+    merges = cc.where(
+        (F.col("node.b") == 0) & (F.col("node.id") != F.col("component.id"))
     ).select(
-        F.col("node").alias("old_cluster_id"),
-        F.col("_label").alias("cluster_id"),
+        F.col("node.id").alias("old_cluster_id"),
+        F.col("component.id").alias("cluster_id"),
     )
 
     return IncrementResult(newc, cand, pairs, assignments, merges, persisted)

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from typing import Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import MatchConfig
@@ -108,11 +108,18 @@ def uniqueness_by_columns(
     rows at records.py:66 — documented divergence).
     """
     columns = list(dict.fromkeys(columns))
-    row = df.agg(*_uniqueness_counts(columns)).first()
-    total = row["__rm_total"]
+    counts = df.agg(*_uniqueness_counts(columns)).first()
+    return _uniqueness_ratios(counts, columns)
+
+
+def _uniqueness_ratios(counts: Row, columns: list[str]) -> dict[str, float]:
+    """The ratios of :func:`uniqueness_by_columns` from a collected row of
+    :func:`_uniqueness_counts` (a caller may aggregate more columns in the
+    same pass): exact integer counts divided on the driver."""
+    total = counts["__rm_total"]
     if total == 0:
         return {c: 0.0 for c in columns}
-    return {c: row[f"__rm_ucnt_{c}"] / total for c in columns}
+    return {c: counts[f"__rm_ucnt_{c}"] / total for c in columns}
 
 
 def _rule_score_expr(

@@ -51,8 +51,9 @@ Ingest contract: a conversation's turns must arrive WHOLE within one
 micro-batch, and a conv_id never re-appears in a later batch (the
 upstream writer emits complete conversations — e.g. files partitioned by
 conversation; this is the same contract match_increment states).
-``process_batch`` enforces it by anti-joining the batch's conv_ids
-against the corpus and raising on overlap.
+``match_increment`` enforces it on every fold: the distinct conv_id count
+rides on its uniqueness aggregate over base ∪ batch, and a re-delivered
+conv_id raises before the fold commits anything.
 
 This parquet store addresses the state through the DRIVER's filesystem
 (markers + listings are plain ``os`` calls) — the sandbox stand-in. In
@@ -68,6 +69,7 @@ import os
 import re
 import shutil
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -159,7 +161,11 @@ class TranscriptStreamMatcher:
             n_batches=len(live),
         )
 
+    @cached_property
     def _empty_conversations(self) -> DataFrame:
+        """Typed empty slim rollup: the seed fold's base, and the read
+        schema of the conversations log. Built once per matcher: every
+        fold reads it, and building it plans a rollup."""
         empty_t = self.spark.createDataFrame([], TRANSCRIPT_SCHEMA)
         return rollup_conversations(empty_t).drop("turns")
 
@@ -169,7 +175,7 @@ class TranscriptStreamMatcher:
             os.path.join(self._dir(g, b), "conversations")
             for g, b in self._live()
         ]
-        empty = self._empty_conversations()
+        empty = self._empty_conversations
         if not paths:
             return empty
         return self.spark.read.schema(empty.schema).parquet(*paths)
@@ -258,9 +264,11 @@ class TranscriptStreamMatcher:
         The ingest contract (module docstring) is enforced on every batch:
         a conv_id already in the corpus means this batch carries a
         PARTIAL conversation (its turns straddled a batch boundary) and
-        folding it would commit a second, conflicting rollup; refuse
-        loudly instead. The check is one semi-join of the batch's ids
-        against the slim conversation log.
+        folding it would commit a second, conflicting rollup, so
+        ``match_increment`` raises InvalidConfigError before the segment
+        is written. The check adds no pass over the corpus: it is a
+        distinct count inside the uniqueness aggregate the fold runs
+        anyway.
         """
         batch_id = int(batch_id)
         cur = self.state()
@@ -270,27 +278,9 @@ class TranscriptStreamMatcher:
         if batch_df.isEmpty():
             return  # nothing to fold; replays of an empty batch re-skip
 
-        base_conv = self.conversations()
-        base_cl = self.clusters()
-        if cur is not None:
-            # no broadcast hint: the batch id-set is usually small but not
-            # bounded; AQE picks broadcast when it fits (cf. the blocking
-            # cap's anti-join, operators/blocking.py)
-            dup = (
-                base_conv.select("conv_id")
-                .join(batch_df.select("conv_id").distinct(), "conv_id")
-                .limit(5)
-                .collect()
-            )
-            if dup:
-                ids = ", ".join(r["conv_id"] for r in dup)
-                raise InvalidConfigError(
-                    f"batch {batch_id} re-delivers conversation(s) already "
-                    f"in the corpus ({ids}, ...): a conversation's turns "
-                    "must arrive whole within one micro-batch. Fix the "
-                    "upstream batching (files partitioned by conversation)."
-                )
-        inc = match_increment(batch_df, base_conv, base_cl, self.cfg)
+        inc = match_increment(
+            batch_df, self.conversations(), self.clusters(), self.cfg
+        )
         self._commit_segment(
             gen, batch_id, inc.conversations, inc.assignments, inc.merges
         )

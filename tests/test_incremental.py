@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import ColumnRule, MatchConfig
+from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.incremental import apply_merges, match_increment
 from record_matcher_spark.operators.rollup import rollup_conversations
 from record_matcher_spark.pipeline import match_transcripts
@@ -113,35 +114,39 @@ def _turn_rows(conv_id, texts):
 def test_increment_merges_base_clusters(spark):
     """A batch conv matching two previously-separate base clusters merges
     them: survivor = smallest base label, remap reported in `merges` and
-    applied by apply_merges."""
+    applied by apply_merges. The bridge takes the base label even when
+    its own id sorts before every base label ("conv0")."""
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
     # token-set Jaccard: J(N,A)=J(N,B)=2/4=50 >= 50, J(A,B)=0
     base_t = spark.createDataFrame(
         _turn_rows("convA", ["alpha aleph"]) + _turn_rows("convB", ["beta bet"]),
         cols,
     )
-    new_t = spark.createDataFrame(
-        _turn_rows("convN", ["alpha aleph beta bet"]), cols
-    )
-
     base = match_transcripts(base_t, cfg=_BRIDGE_CFG, edge_mode="threshold")
     assert _partition(base.clusters) == frozenset(
         {frozenset({"convA"}), frozenset({"convB"})}
     )
 
-    inc = match_increment(
-        new_t, base.conversations, base.clusters,
-        cfg=_BRIDGE_CFG, edge_mode="threshold",
-    )
-    assert {tuple(r) for r in inc.merges.collect()} == {("convB", "convA")}
-    assert {tuple(r) for r in inc.assignments.collect()} == {
-        ("convN", "convA")
-    }
-    merged = apply_merges(base.clusters, inc.merges)
-    assert {tuple(r) for r in merged.collect()} == {
-        ("convA", "convA"), ("convB", "convA")
-    }
-    base.unpersist(); inc.unpersist()
+    for bridge in ("convN", "conv0"):
+        new_t = spark.createDataFrame(
+            _turn_rows(bridge, ["alpha aleph beta bet"]), cols
+        )
+        inc = match_increment(
+            new_t, base.conversations, base.clusters,
+            cfg=_BRIDGE_CFG, edge_mode="threshold",
+        )
+        assert {tuple(r) for r in inc.merges.collect()} == {
+            ("convB", "convA")
+        }
+        assert {tuple(r) for r in inc.assignments.collect()} == {
+            (bridge, "convA")
+        }
+        merged = apply_merges(base.clusters, inc.merges)
+        assert {tuple(r) for r in merged.collect()} == {
+            ("convA", "convA"), ("convB", "convA")
+        }
+        inc.unpersist()
+    base.unpersist()
 
 
 def test_increment_via_foreach_batch_stream(spark, tmp_path):
@@ -186,7 +191,9 @@ def test_increment_via_foreach_batch_stream(spark, tmp_path):
 def test_increment_base_column_guard(spark):
     """A base table missing a rollup column is malformed and raises:
     ts_min, and the tokenize-once tok_hashes that blocking and scoring
-    read (there is no re-tokenizing fallback)."""
+    read (there is no re-tokenizing fallback). A batch that re-delivers a
+    base conv_id breaks the ingest contract and raises too, on a direct
+    call as well as through the stream sink."""
     t = _closed_corpus(spark, n=8)
     in_base = F.regexp_extract("conv_id", r"_v(\d+)$", 1).cast("long") < 1
     base_conv = rollup_conversations(t.where(in_base)).drop("turns")
@@ -198,6 +205,10 @@ def test_increment_base_column_guard(spark):
     for col in ("ts_min", "tok_hashes"):
         with pytest.raises(ValueError, match=col):
             match_increment(new_t, base_conv.drop(col), base_clusters)
+    redelivered = t.where(F.col("conv_id") == "c1_v0").unionByName(new_t)
+    with pytest.raises(InvalidConfigError, match="whole within one") as e:
+        match_increment(redelivered, base_conv, base_clusters)
+    assert "c1_v0" in str(e.value)
     t.unpersist()
 
 

@@ -125,6 +125,28 @@ def test_partial_conversation_rejected(spark, tmp_path):
     assert st is not None and st.n_batches == 1  # nothing was committed
 
 
+def test_folds_reuse_generated_code(spark, tmp_path):
+    """Spark's generated classes survive from one fold to the next: the
+    session's codegen cache holds a fold's working set, so warm folds
+    compile few new classes (with Spark's default 100-entry cache every
+    fold recompiled ~150)."""
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    t = _closed_corpus(spark, n=30)
+    k = F.regexp_extract("conv_id", r"c(\d+)_v", 1).cast("long")
+    m = TranscriptStreamMatcher(spark, os.path.join(str(tmp_path), "state"))
+    per_fold = []
+    for i in range(4):
+        before = compiled.getCount()
+        m.process_batch(t.where(k % 4 == i), i)
+        per_fold.append(compiled.getCount() - before)
+    assert m.state().n_batches == 4
+    assert max(per_fold[2:]) <= 50, per_fold
+    t.unpersist()
+
+
 def test_compact_empty_store_refused(tmp_path):
     """Compacting a store with no committed batch raises instead of
     writing an empty snapshot generation."""
