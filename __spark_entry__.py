@@ -23,6 +23,7 @@ from record_matcher_spark.config import ColumnRule, MatchConfig
 from record_matcher_spark.functions.scorers import blank_coalesce
 from record_matcher_spark.operators.resolve import resolve_matches
 from record_matcher_spark.operators.scoring import score_pairs
+from record_matcher_spark.operators.sessions import GAP_SECONDS
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
@@ -364,9 +365,7 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.dedup import minhash_lsh_pairs
 
     _register_views(spark, sf_dir, ["documents"])
-    return minhash_lsh_pairs(
-        spark.table("documents"), "doc_id", "text", threshold=0.3
-    )
+    return minhash_lsh_pairs(spark.table("documents"), "doc_id", "text")
 
 
 def _q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,7 +376,7 @@ def _q_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_views(spark, sf_dir, ["documents"])
     docs = spark.table("documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text")
     return near_dup_clusters(docs, "doc_id", pairs)
 
 
@@ -385,26 +384,21 @@ def _q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.dedup import simhash_pairs
 
     _register_views(spark, sf_dir, ["documents"])
-    return simhash_pairs(spark.table("documents"), "doc_id", "text", 3)
+    return simhash_pairs(spark.table("documents"), "doc_id", "text")
 
 
 def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.dedup import ngram_jaccard_pairs
 
     _register_views(spark, sf_dir, ["documents"])
-    return ngram_jaccard_pairs(
-        spark.table("documents"), "doc_id", "text",
-        threshold=0.55, block_col="lang", max_block_size=200,
-    )
+    return ngram_jaccard_pairs(spark.table("documents"), "doc_id", "text")
 
 
 def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.dedup import embedding_near_dup
 
     _register_views(spark, sf_dir, ["embeddings"])
-    return embedding_near_dup(
-        spark.table("embeddings"), "vec_id", "embedding", threshold=0.35
-    )
+    return embedding_near_dup(spark.table("embeddings"), "vec_id", "embedding")
 
 
 _SQL_EMBEDDING_NEAR_DUP_TMPL = """
@@ -414,18 +408,19 @@ WITH base AS (
 ), nz AS (SELECT * FROM base WHERE nrm > 0)
 SELECT a.id AS id_a, b.id AS id_b, {q6cos} AS cosine
 FROM nz a, nz b
-WHERE a.id < b.id AND {q6cos} >= 0.35
+WHERE a.id < b.id AND {q6cos} >= {threshold}
 """
 
 
 def _sql_embedding_near_dup() -> str:
     from record_matcher_spark.functions.texthash import q6_sql
-    from record_matcher_spark.operators.similarity import dot_sql
+    from record_matcher_spark.operators.similarity import NEAR_DUP_COSINE, dot_sql
 
     dot_ab = dot_sql("a.v", "b.v")
     return _SQL_EMBEDDING_NEAR_DUP_TMPL.format(
         dot_vv=dot_sql("embedding", "embedding"),
         q6cos=q6_sql(f"{dot_ab} / (a.nrm * b.nrm)"),
+        threshold=NEAR_DUP_COSINE,
     )
 
 
@@ -433,10 +428,7 @@ def _q_embedding_srp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.similarity import srp_lsh_pairs
 
     _register_views(spark, sf_dir, ["embeddings"])
-    return srp_lsh_pairs(
-        spark.table("embeddings"), "vec_id", "embedding",
-        threshold=0.35, max_bucket_size=400,
-    )
+    return srp_lsh_pairs(spark.table("embeddings"), "vec_id", "embedding")
 
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,7 +436,7 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_views(spark, sf_dir, ["embeddings"])
     e = spark.table("embeddings")
-    return cosine_topk(e, e.where("vec_id < 10"), "vec_id", "embedding", 5)
+    return cosine_topk(e, e.where("vec_id < 10"), "vec_id", "embedding")
 
 
 def _q_srp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,19 +444,18 @@ def _q_srp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register_views(spark, sf_dir, ["embeddings"])
     e = spark.table("embeddings")
-    return srp_lsh_topk(e, e.where("vec_id < 10"), "vec_id", "embedding", 5)
+    return srp_lsh_topk(e, e.where("vec_id < 10"), "vec_id", "embedding")
 
 
 def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # train_iters=2: pins the ITERATIVE k-means loop cross-engine (the
-    # multi-step fixed-point coordinate sums + the oracle's iterative
-    # CTEs), not just one refinement step
+    # similarity.IVF_TRAIN_ITERS = 2 pins the ITERATIVE k-means loop
+    # cross-engine (the multi-step fixed-point coordinate sums + the
+    # oracle's iterative CTEs), not just one refinement step
     from record_matcher_spark.operators.similarity import ivf_topk
 
     _register_views(spark, sf_dir, ["embeddings"])
     e = spark.table("embeddings")
-    return ivf_topk(e, e.where("vec_id < 10"), "vec_id", "embedding", 5,
-                    train_iters=2)
+    return ivf_topk(e, e.where("vec_id < 10"), "vec_id", "embedding")
 
 
 def _q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,7 +537,9 @@ GROUP BY user_id
 """
 
 
-_SESSION_GAP_S = 12 * 3600  # sessions: same-user events < 12h apart
+# The oracles' session gap in microseconds: sessions.GAP_SECONDS, the
+# gap both session operators apply.
+_SESSION_GAP_US = GAP_SECONDS * 1000000
 
 
 def _q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -558,16 +551,14 @@ def _q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.sessions import session_stats
 
     _register_views(spark, sf_dir, ["events"])
-    return session_stats(
-        spark.table("events"), "user_id", "ts", gap_seconds=_SESSION_GAP_S
-    )
+    return session_stats(spark.table("events"))
 
 
 _SQL_EVENT_SESSIONS = f"""
 WITH e AS (
   SELECT user_id, event_id, ts, event_type, value,
     CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_SESSION_GAP_S * 1000000}
+         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_SESSION_GAP_US}
          THEN 1 ELSE 0 END AS new_s
   FROM events
   WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -596,9 +587,7 @@ def _q_event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.sessions import sessionize
 
     _register_views(spark, sf_dir, ["events"])
-    out = sessionize(
-        spark.table("events"), "user_id", "ts", gap_seconds=_SESSION_GAP_S
-    )
+    out = sessionize(spark.table("events"))
     return out.select("event_id", "user_id", "session_idx", "session_id")
 
 
@@ -606,7 +595,7 @@ _SQL_EVENT_SESSIONIZE = f"""
 WITH e AS (
   SELECT event_id, user_id, ts,
     CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_SESSION_GAP_S * 1000000}
+         OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > {_SESSION_GAP_US}
          THEN 1 ELSE 0 END AS new_s
   FROM events
   WHERE user_id IS NOT NULL AND ts IS NOT NULL
@@ -636,10 +625,7 @@ def _q_event_sessionize_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from record_matcher_spark.operators.sessions import sessionize
 
     _register_views(spark, sf_dir, ["events"])
-    out = sessionize(
-        spark.table("events"), "user_id", "ts", gap_seconds=_SESSION_GAP_S,
-        split_bucket_seconds=6 * 3600,
-    )
+    out = sessionize(spark.table("events"), split_bucket_seconds=6 * 3600)
     return out.select("event_id", "user_id", "session_idx", "session_id")
 
 
@@ -1002,36 +988,31 @@ def _dataops_oracles() -> dict[str, str]:
 
     return {
         "dedup_minhash_lsh": dedup.minhash_lsh_pairs_oracle_sql(
-            "documents", "doc_id", "text", threshold=0.3
+            "documents", "doc_id", "text"
         ),
         "dedup_minhash_clusters": dedup.near_dup_clusters_oracle_sql(
             "documents",
             "doc_id",
-            dedup.minhash_lsh_pairs_oracle_sql(
-                "documents", "doc_id", "text", threshold=0.3
-            ),
+            dedup.minhash_lsh_pairs_oracle_sql("documents", "doc_id", "text"),
         ),
         "dedup_simhash": dedup.simhash_pairs_oracle_sql(
-            "documents", "doc_id", "text", 3
+            "documents", "doc_id", "text"
         ),
         "dedup_ngram_jaccard": dedup.ngram_jaccard_pairs_oracle_sql(
-            "documents", "doc_id", "text", 0.55, "lang",
-            max_block_size=200,
+            "documents", "doc_id", "text"
         ),
         "dedup_embedding_cosine": _sql_embedding_near_dup(),
         "dedup_embedding_srp": similarity.srp_lsh_pairs_oracle_sql(
-            "embeddings", "vec_id", "embedding",
-            threshold=0.35, max_bucket_size=400,
+            "embeddings", "vec_id", "embedding"
         ),
         "ann_cosine_topk": similarity.cosine_topk_oracle_sql(
-            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding", 5
+            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding"
         ),
         "ann_srp_lsh_topk": similarity.srp_lsh_topk_oracle_sql(
-            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding", 5
+            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding"
         ),
         "ann_ivf_topk": similarity.ivf_topk_oracle_sql(
-            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding", 5,
-            train_iters=2,
+            "embeddings", _EMB_QUERIES_SQL, "vec_id", "embedding"
         ),
         "doc_language_id": text_ops.language_id_oracle_sql(
             "documents", "doc_id", "text"

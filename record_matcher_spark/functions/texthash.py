@@ -188,7 +188,7 @@ def simhash60_expr(th: Column) -> Column:
     sig = F.lit(0).cast("long")
     for k, (a, b) in enumerate(_SIMHASH_REHASH):
         g = F.transform(th, lambda h: (F.lit(a) * h + F.lit(b)) % P)
-        band = simhash_expr(g, SIMHASH_BAND_BITS)
+        band = simhash_expr(g)
         sig = sig + band * F.lit(1 << (SIMHASH_BAND_BITS * k)).cast("long")
     return sig
 
@@ -197,22 +197,22 @@ def simhash60_sql(th: str) -> str:
     terms = []
     for k, (a, b) in enumerate(_SIMHASH_REHASH):
         g = f"list_transform({th}, h -> ({a} * h + {b}) % {P})"
-        band = simhash_sql(g, SIMHASH_BAND_BITS)
+        band = simhash_sql(g)
         terms.append(f"({band}) * {1 << (SIMHASH_BAND_BITS * k)}")
     return "(" + " + ".join(terms) + ")"
 
 
-def simhash_expr(th: Column, bits: int = 32) -> Column:
-    """SimHash over token-hash array (frequency-weighted: every occurrence
-    votes). Bit b of the signature is 1 iff sum over tokens of
-    (((h >> b) & 1) * 2 - 1) > 0."""
+def simhash_expr(th: Column) -> Column:
+    """``SIMHASH_BAND_BITS``-bit SimHash over token-hash array
+    (frequency-weighted: every occurrence votes). Bit b of the signature
+    is 1 iff sum over tokens of (((h >> b) & 1) * 2 - 1) > 0."""
     def _vote_fn(b: int):
         return lambda acc, h: acc + (
             F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1
         )
 
     parts = []
-    for b in range(bits):
+    for b in range(SIMHASH_BAND_BITS):
         vote = F.aggregate(th, F.lit(0).cast("long"), _vote_fn(b))
         parts.append(F.when(vote > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long")))
     out = parts[0]
@@ -221,9 +221,9 @@ def simhash_expr(th: Column, bits: int = 32) -> Column:
     return out
 
 
-def simhash_sql(th: str, bits: int = 32) -> str:
+def simhash_sql(th: str) -> str:
     terms = []
-    for b in range(bits):
+    for b in range(SIMHASH_BAND_BITS):
         vote = (
             f"list_sum(list_transform({th}, "
             f"h -> ((h >> {b}) & 1) * 2 - 1))"

@@ -11,15 +11,25 @@ already decided is summarized losslessly by its cluster labels. So the
 increment:
 
 1. rolls up only the batch's transcripts;
-2. blocks batch conversations against (base ∪ batch) — a plain equi-join
-   against the base's keyed relation, which a production deployment keeps
-   materialized (bucketed by key) and only APPENDS to per batch;
+2. blocks batch conversations against (base ∪ batch) — one equi-join of
+   the batch's keys with the keys of base ∪ batch;
 3. scores only those candidate pairs (same vectorized scorers, with the
    uniqueness weights of base ∪ batch so a small batch's skewed column
    statistics cannot shift row weights);
 4. contracts every base endpoint to its cluster label and runs connected
    components on the contracted graph — node count is O(|batch| + touched
-   clusters), NOT O(corpus); the base graph is never revisited.
+   clusters); the base graph is never revisited.
+
+What a fold costs today. O(batch): the batch rollup, scoring the
+candidate pairs, the contracted connected components, and the appended
+log segments. O(corpus): step 2 derives every blocking family's keys
+(MinHash signatures included) for every base conversation and counts
+every block for the caps, and the uniqueness aggregate (which also
+carries the disjointness guard) reads all of base ∪ batch. So shuffle
+and executor CPU per fold grow with the corpus; ROADMAP item I measured
+shuffle write per fold rising 26× while the base grew 18×, and plans a
+stored key index that makes steps 2 and 3 read only the keys and values
+a batch touches.
 
 A component that captures two or more base labels is a MERGE discovered by
 new evidence; the survivor is the smallest base label and the remap is

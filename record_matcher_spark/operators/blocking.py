@@ -56,23 +56,31 @@ def _tokens(col: Column) -> Column:
     )
 
 
-def role_seq_key(
-    max_block_size: int | None = 64
-) -> BlockingKey:
-    """Conversation-shape block: the rollup's exact ``role_seq``.
+# Block caps and key geometry of the transcript blocking families.
+# Role sequences are heavy-tailed (the synthetic corpus plants one hot
+# 6-turn pattern on ~20% of conversations; real agent traffic behaves the
+# same) and an uncapped hot block of B rows costs B² pairs, so the shape
+# family is capped; recall for hot-shaped conversations comes from the
+# content-based keys (token prefix / MinHash bands).
+ROLE_SEQ_MAX_BLOCK = 64
+TOKEN_PREFIX_K = 3
+MINHASH_HASHES = 16
+MINHASH_BANDS = 4
+MINHASH_MAX_BLOCK = 256
 
-    Capped by default: role sequences are heavy-tailed (the synthetic
-    corpus plants one hot 6-turn pattern on ~20% of conversations; real
-    agent traffic behaves the same) and an uncapped hot block of B rows
-    costs B² pairs. Recall for hot-shaped conversations comes from the
-    content-based keys (token prefix / MinHash bands)."""
+
+def role_seq_key() -> BlockingKey:
+    """Conversation-shape block: the rollup's exact ``role_seq``, capped
+    at ``ROLE_SEQ_MAX_BLOCK``."""
     return BlockingKey("role_seq", lambda df: F.col("role_seq"),
-                       max_block_size=max_block_size)
+                       max_block_size=ROLE_SEQ_MAX_BLOCK)
 
 
-def token_prefix_key(column: str, k: int = 3) -> BlockingKey:
-    """Normalized-token key: first k distinct lowercase tokens in sorted
-    order — robust to word order / duplication, cheap to compute."""
+def token_prefix_key(column: str) -> BlockingKey:
+    """Normalized-token key: first ``TOKEN_PREFIX_K`` distinct lowercase
+    tokens in sorted order — robust to word order / duplication, cheap to
+    compute."""
+    k = TOKEN_PREFIX_K
 
     def expr(df: DataFrame) -> Column:
         toks = F.slice(F.sort_array(_tokens(F.col(column))), 1, k)
@@ -81,18 +89,15 @@ def token_prefix_key(column: str, k: int = 3) -> BlockingKey:
     return BlockingKey(f"tokpfx_{column}_{k}", expr)
 
 
-def minhash_band_keys(
-    num_hashes: int = 16,
-    bands: int = 4,
-    max_block_size: int | None = None,
-    hashes_column: str = "tok_hashes_lower",
-) -> BlockingKey:
-    """MinHash LSH band keys over the token-hash set in ``hashes_column``.
+def minhash_band_keys(hashes_column: str = "tok_hashes_lower") -> BlockingKey:
+    """MinHash LSH band keys over the token-hash set in ``hashes_column``,
+    blocks capped at ``MINHASH_MAX_BLOCK``.
 
-    Signature: for hash i, min over tokens of xxhash64(i, token hash).
-    Bands of r = num_hashes/bands rows are folded into one xxhash64
-    integer key per band. Two records with token-set Jaccard s collide in
-    at least one band with prob 1 - (1 - s^r)^b.
+    Signature: for hash i < ``MINHASH_HASHES``, min over tokens of
+    xxhash64(i, token hash). Bands of r = MINHASH_HASHES / MINHASH_BANDS
+    rows are folded into one xxhash64 integer key per band. Two records
+    with token-set Jaccard s collide in at least one band with prob
+    1 - (1 - s^r)^b.
 
     ``hashes_column`` is an ``array<long>`` of distinct xxhash64 token
     hashes, one of the rollup's tokenize-once columns
@@ -124,8 +129,7 @@ def minhash_band_keys(
     explode/aggregate) interprets its lambda per element, which cost more
     than the codegen explode+aggregate.
     """
-    if num_hashes % bands != 0:
-        raise ValueError("num_hashes must be divisible by bands")
+    num_hashes, bands = MINHASH_HASHES, MINHASH_BANDS
     r = num_hashes // bands
 
     def keyed(df: DataFrame, id_col: str) -> DataFrame:
@@ -165,13 +169,13 @@ def minhash_band_keys(
     return BlockingKey(
         f"minhash_{hashes_column}_{num_hashes}x{bands}",
         keyed=keyed,
-        max_block_size=max_block_size,
+        max_block_size=MINHASH_MAX_BLOCK,
     )
 
 
 DEFAULT_TRANSCRIPT_KEYS: tuple[BlockingKey, ...] = (
-    role_seq_key(max_block_size=64),
-    token_prefix_key("first_user_text", 3),
+    role_seq_key(),
+    token_prefix_key("first_user_text"),
     # Case-FOLDED minhash (hashes_column="tok_hashes_lower", the rollup's
     # second tokenize-once column): a case-sensitive family sharing the
     # scorer's tok_hashes was tried in an earlier round and measured to
@@ -180,7 +184,7 @@ DEFAULT_TRANSCRIPT_KEYS: tuple[BlockingKey, ...] = (
     # crater case-sensitive Jaccard and band collisions die with s^r.
     # The lower column keeps tokenization once-per-normalization in the
     # rollup projection; no stage here re-tokenizes.
-    minhash_band_keys(num_hashes=16, bands=4, max_block_size=256),
+    minhash_band_keys(),
 )
 
 
@@ -274,12 +278,11 @@ def _cap_blocks(
 
 def candidate_pairs(
     x_df: DataFrame,
-    y_df: DataFrame | None,
+    y_df: DataFrame,
     keys: Sequence[BlockingKey] = DEFAULT_TRANSCRIPT_KEYS,
     *,
     x_id: str = "conv_id",
     y_id: str = "conv_id",
-    dedup_mode: bool = False,
     persisted: list,
 ) -> DataFrame:
     """Blocked candidate generation, deduped → [x_id, y_id].
@@ -289,20 +292,16 @@ def candidate_pairs(
     anti-join probe branch, and the join side(s) all read the cached
     relation, so key derivation (notably the MinHash explode+agg) runs
     once per side, not once per consumer. When both sides are the same
-    DataFrame (dedup/self-match mode) a single keyed relation is joined
-    with itself.
+    DataFrame (self-match) a single keyed relation is joined with itself,
+    and the output holds both orientations of each pair plus the identity
+    pairs, which callers drop.
 
-    ``dedup_mode`` (y_df=None or y_df is x_df with dedup_mode=True):
-    keep x_id < y_id — no identity pairs, each unordered pair once.
     ``persisted``: caller-supplied list that receives the persisted keyed
     relation(s) — unpersist them once the output is materialized
     (repeated invocations in one session would otherwise accumulate
     storage). :func:`record_matcher_spark.pipeline.match_transcripts`
     threads this through to ``TranscriptMatchResult.unpersist()``.
     """
-    if y_df is None:
-        y_df = x_df
-        dedup_mode = True
     same_side = y_df is x_df and x_id == y_id
 
     def _keyed_side(df: DataFrame, id_col: str) -> DataFrame:
@@ -315,7 +314,4 @@ def candidate_pairs(
 
     left = kx.select("_kk", F.col("_id").alias("x_id"))
     right = ky.select("_kk", F.col("_id").alias("y_id"))
-    out = left.join(right, "_kk").select("x_id", "y_id")
-    if dedup_mode:
-        out = out.where(F.col("x_id") < F.col("y_id"))
-    return out.distinct()
+    return left.join(right, "_kk").select("x_id", "y_id").distinct()

@@ -280,7 +280,7 @@ def connected_components(
     elif encoded and _approx_nodes(canon) >= DENSE_ID_NODE_THRESHOLD:
         from record_matcher_spark.operators.ids import dense_ids
 
-        mapping = dense_ids(originals, "_orig", out="node")
+        mapping = dense_ids(originals, "_orig")
         labeled = _star_rounds(
             ends.join(
                 mapping.select(F.col("_orig").alias("_a"), F.col("node").alias("u")),

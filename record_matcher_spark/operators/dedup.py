@@ -35,18 +35,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from record_matcher_spark.functions import texthash as TH
-from record_matcher_spark.operators.similarity import dot_expr
+from record_matcher_spark.operators.similarity import NEAR_DUP_COSINE, dot_expr
 
 
 # --------------------------------------------------------------------------
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-# Word-shingle length, signature width and LSH banding shared by
-# ``minhash_lsh_pairs`` and its DuckDB twin: 16 hashes in 4 bands of 4.
+# Word-shingle length, signature width, LSH banding and verify threshold
+# shared by ``minhash_lsh_pairs`` and its DuckDB twin: 16 hashes in 4
+# bands of 4, pairs kept at exact shingle Jaccard >= 0.3.
 MINHASH_SHINGLE_K = 3
 MINHASH_HASHES = 16
 MINHASH_BANDS = 4
+MINHASH_THRESHOLD = 0.3
 
 
 def _shingled(
@@ -64,16 +66,12 @@ def _shingled(
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Near-duplicate pairs via banded MinHash LSH + exact-Jaccard verify.
 
     -> [id_a, id_b, jaccard] with id_a < id_b, jaccard = exact word-shingle
-    Jaccard >= threshold, restricted to pairs colliding in >= 1 band.
+    Jaccard >= ``MINHASH_THRESHOLD``, restricted to pairs colliding in
+    >= 1 band.
 
     Plan shape: signatures (1 narrow scan) -> explode bands (xB) ->
     self equi-join on (band, key) int keys -> distinct pairs -> verify join
@@ -111,16 +109,11 @@ def minhash_lsh_pairs(
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .select("id_a", "id_b", TH.q6_expr(inter / union).alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= MINHASH_THRESHOLD)
     )
 
 
-def minhash_lsh_pairs_oracle_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.5,
-) -> str:
+def minhash_lsh_pairs_oracle_sql(table: str, id_col: str, text_col: str) -> str:
     """DuckDB twin of ``minhash_lsh_pairs`` — same hashes, same bands."""
     r = MINHASH_HASHES // MINHASH_BANDS
     th = TH.token_hashes_sql(text_col)
@@ -156,7 +149,7 @@ FROM cand
 JOIN shn sa ON sa.id = cand.id_a
 JOIN shn sb ON sb.id = cand.id_b
 WHERE (floor((CAST(len(list_intersect(sa.shset, sb.shset)) AS DOUBLE)
-      / len(list_distinct(list_concat(sa.shset, sb.shset)))) * 1e6 + 0.5) / 1e6) >= {threshold}
+      / len(list_distinct(list_concat(sa.shset, sb.shset)))) * 1e6 + 0.5) / 1e6) >= {MINHASH_THRESHOLD}
 """
 
 
@@ -167,6 +160,9 @@ WHERE (floor((CAST(len(list_intersect(sa.shset, sb.shset)) AS DOUBLE)
 
 # 4 disjoint 15-bit bands of the 60-bit banded signature (texthash):
 # (shift, mask). 2^15 keys per band keep band blocks ~n/32768.
+# SIMHASH_MAX_HAMMING is the pair bound shared by ``simhash_pairs`` and
+# its twin; 4 bands make the band join exact for any bound <= 3.
+SIMHASH_MAX_HAMMING = 3
 _SIMHASH_BANDS = tuple(
     (TH.SIMHASH_BAND_BITS * k, (1 << TH.SIMHASH_BAND_BITS) - 1)
     for k in range(TH.SIMHASH_NBANDS)
@@ -184,13 +180,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return base.select("id", TH.simhash60_expr(F.col("_th")).alias("simhash"))
 
 
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-duplicate pairs with hamming(simhash) <= max_hamming (<= 3).
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Near-duplicate pairs with hamming(simhash) <= ``SIMHASH_MAX_HAMMING``.
 
     Exact under banding: 4 disjoint 15-bit bands of the 60-bit signature;
     <= 3 differing bits cannot touch all 4 bands, so candidates from the
@@ -199,8 +190,6 @@ def simhash_pairs(
     per band keep band blocks ~n/32768 (scale-safe candidate counts; the
     previous 8-bit byte bands forced blocks of ~n/256).
     """
-    if max_hamming > 3:
-        raise ValueError("4-band pigeonhole only covers max_hamming <= 3")
     sig = simhash_signatures(df, id_col, text_col)
     bands = F.array(
         *[
@@ -224,13 +213,11 @@ def simhash_pairs(
             ham.alias("hamming"),
         )
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
-def simhash_pairs_oracle_sql(
-    table: str, id_col: str, text_col: str, max_hamming: int = 3
-) -> str:
+def simhash_pairs_oracle_sql(table: str, id_col: str, text_col: str) -> str:
     th = TH.token_hashes_sql(text_col)
     sim = TH.simhash60_sql("th")
     return f"""
@@ -242,7 +229,7 @@ WITH th AS (
 SELECT a.id AS id_a, b.id AS id_b,
        bit_count(xor(a.simhash, b.simhash)) AS hamming
 FROM sig a JOIN sig b ON a.id < b.id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_MAX_HAMMING}
 """
 
 
@@ -250,8 +237,12 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 # character n-gram Jaccard
 # --------------------------------------------------------------------------
 
-# Character n-gram length shared by ``ngram_jaccard_pairs`` and its twin.
+# Character n-gram length, verify threshold, block column and block cap
+# shared by ``ngram_jaccard_pairs`` and its twin.
 NGRAM_N = 3
+NGRAM_THRESHOLD = 0.55
+NGRAM_BLOCK_COL = "lang"
+NGRAM_MAX_BLOCK = 200
 
 
 def _char_ngrams_expr(text):
@@ -269,26 +260,17 @@ def _char_ngrams_expr(text):
     ).otherwise(F.array().cast("array<bigint>"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.6,
-    block_col: str | None = None,
-    max_block_size: int | None = 10000,
-) -> DataFrame:
-    """Char n-gram Jaccard >= threshold over blocked pairs.
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Char n-gram Jaccard >= ``NGRAM_THRESHOLD`` over blocked pairs.
 
     Candidate semantics (replicated exactly by the oracle): two docs pair
-    iff (a) ``block_col`` values are equal (when given), AND (b) their
+    iff (a) their ``NGRAM_BLOCK_COL`` values are equal, AND (b) their
     length buckets ``floor(log2(trimmed_len))`` differ by at most 1 (the
     slop is realized by exploding one side to buckets {b-1, b, b+1}), AND
     (c) neither doc sits in a (block, bucket) group larger than
-    ``max_block_size`` (over-cap groups are dropped from BOTH sides —
-    a pathological group of B rows would otherwise cost B^2 pairs; the
-    default cap of 10,000 bounds any single block to ~10^8 comparisons,
-    so one hot (block, bucket) cell can never go quadratic in the corpus;
-    pass ``None`` to disable explicitly).
+    ``NGRAM_MAX_BLOCK`` (over-cap groups are dropped from BOTH sides —
+    a pathological group of B rows would otherwise cost B^2 pairs, so one
+    hot (block, bucket) cell can never go quadratic in the corpus).
 
     The bucket constraint is a deliberate recall bound, not a free
     optimization: n-gram Jaccard is over DISTINCT grams, so a highly
@@ -309,21 +291,19 @@ def ngram_jaccard_pairs(
         )
         - 1
     ).cast("long")
-    blk = F.col(block_col).cast("string") if block_col else F.lit("")
     grams = df.select(
         F.col(id_col).alias("id"),
         _char_ngrams_expr(F.col(text_col)).alias("g"),
-        blk.alias("blk"),
+        F.col(NGRAM_BLOCK_COL).cast("string").alias("blk"),
         bucket.alias("bkt"),
     ).where(F.size("g") > 0)
-    if max_block_size:
-        over = (
-            grams.groupBy("blk", "bkt")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > max_block_size)
-            .select("blk", "bkt")
-        )
-        grams = grams.join(over, ["blk", "bkt"], "left_anti")
+    over = (
+        grams.groupBy("blk", "bkt")
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .where(F.col("_n") > NGRAM_MAX_BLOCK)
+        .select("blk", "bkt")
+    )
+    grams = grams.join(over, ["blk", "bkt"], "left_anti")
     a = grams.select(
         F.col("id").alias("id_a"),
         F.col("g").alias("ga"),
@@ -343,18 +323,11 @@ def ngram_jaccard_pairs(
         .select(
             "id_a", "id_b", TH.q6_expr(inter / union).alias("jaccard")
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= NGRAM_THRESHOLD)
     )
 
 
-def ngram_jaccard_pairs_oracle_sql(
-    table: str,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.6,
-    block_col: str | None = None,
-    max_block_size: int | None = 10000,
-) -> str:
+def ngram_jaccard_pairs_oracle_sql(table: str, id_col: str, text_col: str) -> str:
     """DuckDB twin of ``ngram_jaccard_pairs`` — same block/bucket/cap."""
     n = NGRAM_N
     codes = (
@@ -362,19 +335,9 @@ def ngram_jaccard_pairs_oracle_sql(
         "c -> CAST(ord(c) AS BIGINT))"
     )
     gram = TH.poly_hash_sql(f"codes[j:j+{n}-1]")
-    blk = f"CAST({block_col} AS VARCHAR)" if block_col else "''"
+    blk = f"CAST({NGRAM_BLOCK_COL} AS VARCHAR)"
     bucket = (
         f"CAST(length(bin(greatest(length(trim({text_col})), 1))) - 1 AS BIGINT)"
-    )
-    cap_cte = (
-        f""", capped AS (
-  SELECT gn.* FROM gn
-  JOIN (SELECT blk, bkt, count(*) AS _n FROM gn GROUP BY blk, bkt) s
-    ON gn.blk = s.blk AND gn.bkt = s.bkt
-  WHERE s._n <= {max_block_size}
-)"""
-        if max_block_size
-        else ", capped AS (SELECT * FROM gn)"
     )
     return f"""
 WITH c AS (
@@ -387,14 +350,19 @@ WITH c AS (
                                         j -> {gram}))
       ELSE [] END AS g
   FROM c
-), gn AS (SELECT * FROM g WHERE len(g) > 0){cap_cte}
+), gn AS (SELECT * FROM g WHERE len(g) > 0), capped AS (
+  SELECT gn.* FROM gn
+  JOIN (SELECT blk, bkt, count(*) AS _n FROM gn GROUP BY blk, bkt) s
+    ON gn.blk = s.blk AND gn.bkt = s.bkt
+  WHERE s._n <= {NGRAM_MAX_BLOCK}
+)
 SELECT a.id AS id_a, b.id AS id_b,
   (floor((CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
       / len(list_distinct(list_concat(a.g, b.g)))) * 1e6 + 0.5) / 1e6) AS jaccard
 FROM capped a JOIN capped b
   ON a.blk = b.blk AND abs(a.bkt - b.bkt) <= 1 AND a.id < b.id
 WHERE (floor((CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-      / len(list_distinct(list_concat(a.g, b.g)))) * 1e6 + 0.5) / 1e6) >= {threshold}
+      / len(list_distinct(list_concat(a.g, b.g)))) * 1e6 + 0.5) / 1e6) >= {NGRAM_THRESHOLD}
 """
 
 
@@ -403,14 +371,10 @@ WHERE (floor((CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
 # --------------------------------------------------------------------------
 
 
-def embedding_near_dup(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Pairs with cosine >= threshold by brute-force cross join — the
-    small-scale baseline; the scale path is similarity.srp_lsh_pairs."""
+def embedding_near_dup(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Pairs with cosine >= ``similarity.NEAR_DUP_COSINE`` by brute-force
+    cross join — the small-scale baseline; the scale path is
+    similarity.srp_lsh_pairs, which keeps pairs at the same bound."""
     norm = F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col)))
     base = df.select(
         F.col(id_col).alias("id"),
@@ -430,7 +394,7 @@ def embedding_near_dup(
         a.crossJoin(b)
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", TH.q6_expr(cos).alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEAR_DUP_COSINE)
     )
 
 

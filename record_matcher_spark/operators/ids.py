@@ -20,10 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dense_ids(
-    df: DataFrame, col: str, out: str = "idx"
-) -> DataFrame:
-    """-> DataFrame[col, out]: distinct keys mapped to dense longs [0, n)
+def dense_ids(df: DataFrame, col: str) -> DataFrame:
+    """-> DataFrame[col, node]: distinct keys mapped to dense longs [0, n)
     in ascending key order, over ``defaultParallelism`` key ranges."""
     num_parts = df.sparkSession.sparkContext.defaultParallelism
     parts = df.select(col).distinct().repartitionByRange(num_parts, col)
@@ -44,5 +42,5 @@ def dense_ids(
     )
     return local.select(
         F.col(col),
-        (F.col("_rn") - 1 + omap[F.col("_pid")]).cast("long").alias(out),
+        (F.col("_rn") - 1 + omap[F.col("_pid")]).cast("long").alias("node"),
     )

@@ -8,7 +8,8 @@ building behavioral / agent-trajectory training corpora.
 
 Two operators over one semantics (a *session* is a maximal run of
 events of one user where consecutive event times differ by AT MOST
-``gap``; a difference strictly greater than gap starts a new session):
+``gap`` = ``GAP_SECONDS``; a difference strictly greater than gap starts a
+new session):
 
 - :func:`sessionize`       per-event session assignment (lag + running
                            count over a per-user window)
@@ -45,25 +46,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_GAP_SECONDS = 12 * 3600
-# Event-table columns: the window tie-break in ``sessionize`` and the
-# two aggregated columns of ``session_stats``.
+# Same-user events at most GAP_SECONDS apart share a session.
+GAP_SECONDS = 12 * 3600
+# Event-table columns: the user and event-time keys of both operators,
+# the window tie-break in ``sessionize`` and the two aggregated columns
+# of ``session_stats``.
+USER_COL = "user_id"
+TS_COL = "ts"
 EVENT_ID_COL = "event_id"
 EVENT_TYPE_COL = "event_type"
 VALUE_COL = "value"
 
 
-def _gap_us(gap_seconds: int) -> int:
-    return int(gap_seconds) * 1_000_000
-
-
 def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-    split_bucket_seconds: int | None = None,
+    df: DataFrame, *, split_bucket_seconds: int | None = None
 ) -> DataFrame:
     """Per-event session labels → input columns + ``session_idx`` (0-based
     per user, in time order) and ``session_id`` (``"<user>#<idx>"``).
@@ -86,13 +82,14 @@ def sessionize(
     rows (one row per non-empty user-bucket, negligible next to events)
     stitches the boundaries exactly: a bucket's first event continues the
     previous non-empty bucket's run iff their true adjacent-event gap is
-    within ``gap_seconds``, and each bucket's label offset is the running
+    within ``GAP_SECONDS``, and each bucket's label offset is the running
     sum of boundary-corrected session starts before it. Labels are
     IDENTICAL to the unsplit path for every bucket width (equivalence is
     property-tested, boundary-straddling sessions included); tied
     timestamps share a bucket by construction, so the tie-break argument
     above still holds.
     """
+    user_col, ts_col = USER_COL, TS_COL
     ts = F.col(ts_col)
     if dict(df.dtypes).get(ts_col) == "timestamp_ntz":
         # unix_micros needs TIMESTAMP; interpreting NTZ wall time in the
@@ -101,7 +98,7 @@ def sessionize(
         # so the session_stats path needs no cast.
         ts = ts.cast("timestamp")
     us = F.unix_micros(ts)
-    gap = _gap_us(gap_seconds)
+    gap = GAP_SECONDS * 1_000_000
     base = df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
 
     def _label(pre: DataFrame, part_cols: list[str]) -> DataFrame:
@@ -164,13 +161,7 @@ def sessionize(
     )
 
 
-def session_stats(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    *,
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-) -> DataFrame:
+def session_stats(df: DataFrame) -> DataFrame:
     """Per-session aggregates via the native session window → one row per
     (user, session): ``session_start_epoch`` / ``session_end_epoch``
     (floor epoch seconds of the first/last event), ``n_events``,
@@ -179,10 +170,11 @@ def session_stats(
     an integer sum is associative, so partial aggregation order cannot
     produce cross-engine float drift the way ``SUM(double)`` can).
 
-    One shuffle on ``user_col``; sessions are merged by Spark's
+    One shuffle on ``USER_COL``; sessions are merged by Spark's
     session-window aggregation (sort-merge of gap-runs inside each
     partition, partial merge map-side). No window functions, no Python.
     """
+    user_col, ts_col = USER_COL, TS_COL
     aggs = [
         F.count(F.lit(1)).alias("n_events"),
         F.min(F.unix_timestamp(F.col(ts_col))).alias("session_start_epoch"),
@@ -196,7 +188,7 @@ def session_stats(
         df.where(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
         .groupBy(
             F.col(user_col),
-            F.session_window(F.col(ts_col), f"{int(gap_seconds)} seconds"),
+            F.session_window(F.col(ts_col), f"{GAP_SECONDS} seconds"),
         )
         .agg(*aggs)
         .drop("session_window")

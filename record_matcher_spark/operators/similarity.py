@@ -29,6 +29,14 @@ from pyspark.sql import functions as F
 from record_matcher_spark.functions import texthash as TH
 
 
+# Neighbours kept per query by every top-k operator here and its twin.
+TOPK_K = 5
+# Cosine bound of the embedding near-dup pair operators:
+# ``srp_lsh_pairs`` (LSH + verify) and ``dedup.embedding_near_dup``
+# (brute force) keep the same pairs above it.
+NEAR_DUP_COSINE = 0.35
+
+
 def dot_expr(a: Column, b: Column) -> Column:
     """Index-ascending sequential dot product (FP-order pinned)."""
     return F.aggregate(
@@ -52,9 +60,8 @@ def cosine_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
 ) -> DataFrame:
-    """Exact brute-force cosine top-k: -> [q_id, n_id, cosine, rank].
+    """Exact brute-force cosine top-``TOPK_K``: -> [q_id, n_id, cosine, rank].
 
     Plan: the (small) query side is broadcast; the corpus streams through
     one scan; per-query top-k is a window over (q_id) ordered by
@@ -80,7 +87,7 @@ def cosine_topk(
         .where(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", cos.alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK_K)
     )
 
 
@@ -89,7 +96,6 @@ def cosine_topk_oracle_sql(
     queries_sql: str,
     id_col: str,
     vec_col: str,
-    k: int = 5,
 ) -> str:
     dot = dot_sql("q.qv", "c.cv")
     q6cos = TH.q6_sql(f"{dot} / (q.qn * c.cn)")
@@ -112,7 +118,7 @@ SELECT q_id, n_id, cosine, rank FROM (
          ) AS rank
   FROM c, q
   WHERE q.qn > 0 AND c.cn > 0 AND q.q_id <> c.n_id
-) WHERE rank <= {k}
+) WHERE rank <= {TOPK_K}
 """
 
 
@@ -158,6 +164,8 @@ def srp_bucket_sql(vec: str, planes: list[list[float]]) -> str:
 SRP_TABLES = 8
 SRP_PLANES_PER_TABLE = 3
 SRP_DIM = 64
+# (table, bucket) block cap of ``srp_lsh_pairs`` and its twin.
+SRP_MAX_BUCKET = 400
 
 
 def _table_planes() -> list[list[list[float]]]:
@@ -179,9 +187,8 @@ def srp_lsh_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
 ) -> DataFrame:
-    """ANN top-k: multi-table SRP-LSH candidates + exact cosine rerank
+    """ANN top-``TOPK_K``: multi-table SRP-LSH candidates + exact cosine rerank
     -> [q_id, n_id, cosine, rank].
 
     ``SRP_TABLES`` independent hash tables of ``SRP_PLANES_PER_TABLE``
@@ -236,7 +243,7 @@ def srp_lsh_topk(
         .join(cv, "n_id")
         .select("q_id", "n_id", cos.alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK_K)
     )
 
 
@@ -245,7 +252,6 @@ def srp_lsh_topk_oracle_sql(
     queries_sql: str,
     id_col: str,
     vec_col: str,
-    k: int = 5,
 ) -> str:
     tables = _table_planes()
     nrm = f"sqrt({dot_sql(vec_col, vec_col)})"
@@ -287,22 +293,17 @@ SELECT q_id, n_id, cosine, rank FROM (
          ) AS rank
   FROM cand JOIN qv ON qv.q_id = cand.q_id
             JOIN cv ON cv.n_id = cand.n_id
-) WHERE rank <= {k}
+) WHERE rank <= {TOPK_K}
 """
 
 
-def srp_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def srp_lsh_pairs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Near-duplicate pairs by SRP-LSH buckets + exact cosine verify
-    -> [id_a, id_b, cosine] with cosine >= threshold and id_a < id_b.
+    -> [id_a, id_b, cosine] with cosine >= ``NEAR_DUP_COSINE`` and
+    id_a < id_b.
 
-    The scale path for ``dedup.embedding_near_dup`` (whose default is the
-    brute-force cross join baseline): candidates come from a self
+    The scale path for ``dedup.embedding_near_dup`` (the brute-force
+    cross join baseline): candidates come from a self
     equi-join on (table, bucket) integer keys, so the n^2 product never
     materializes — at 100 TB the corpus hash-partitions by bucket and
     each bucket compares independently. ``SRP_TABLES`` independent hash
@@ -310,7 +311,7 @@ def srp_lsh_pairs(
     shape ~0.99 at cosine 0.95); candidate dedup across tables is one
     distinct on (id_a, id_b).
 
-    ``max_bucket_size`` drops over-populated (table, bucket) blocks
+    ``SRP_MAX_BUCKET`` drops over-populated (table, bucket) blocks
     (hub/degenerate vectors) the way blocking.candidate_pairs caps hot
     blocks: pairs lost in a dropped bucket can still surface through the
     other L-1 tables, so the cap bounds fan-out with a graceful recall
@@ -333,14 +334,13 @@ def srp_lsh_pairs(
         .where(F.col("_n") > 0)
         .select("id", "tbl", "bucket")
     )
-    if max_bucket_size:
-        over = (
-            keyed.groupBy("tbl", "bucket")
-            .agg(F.count(F.lit(1)).alias("_c"))
-            .where(F.col("_c") > max_bucket_size)
-            .select("tbl", "bucket")
-        )
-        keyed = keyed.join(over, ["tbl", "bucket"], "left_anti")
+    over = (
+        keyed.groupBy("tbl", "bucket")
+        .agg(F.count(F.lit(1)).alias("_c"))
+        .where(F.col("_c") > SRP_MAX_BUCKET)
+        .select("tbl", "bucket")
+    )
+    keyed = keyed.join(over, ["tbl", "bucket"], "left_anti")
     a = keyed.select(F.col("id").alias("id_a"), "tbl", "bucket")
     b = keyed.select(F.col("id").alias("id_b"), "tbl", "bucket")
     cand = (
@@ -366,17 +366,11 @@ def srp_lsh_pairs(
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= threshold)
+        .where(F.col("cosine") >= NEAR_DUP_COSINE)
     )
 
 
-def srp_lsh_pairs_oracle_sql(
-    table: str,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    max_bucket_size: int | None = None,
-) -> str:
+def srp_lsh_pairs_oracle_sql(table: str, id_col: str, vec_col: str) -> str:
     """DuckDB twin of ``srp_lsh_pairs`` — same planes, buckets, cap."""
     tables = _table_planes()
     nrm = f"sqrt({dot_sql(vec_col, vec_col)})"
@@ -384,17 +378,6 @@ def srp_lsh_pairs_oracle_sql(
         f"SELECT id, {t} AS tbl, {srp_bucket_sql('v0', planes)} AS bucket "
         "FROM base"
         for t, planes in enumerate(tables)
-    )
-    cap_cte = (
-        f""", keyed AS (
-  SELECT k.* FROM keyed0 k
-  JOIN (SELECT tbl, bucket, count(*) AS _c
-        FROM keyed0 GROUP BY tbl, bucket) s
-    ON k.tbl = s.tbl AND k.bucket = s.bucket
-  WHERE s._c <= {max_bucket_size}
-)"""
-        if max_bucket_size
-        else ", keyed AS (SELECT * FROM keyed0)"
     )
     dot = dot_sql("va.v0", "vb.v0")
     q6cos = TH.q6_sql(f"{dot} / (va.n0 * vb.n0)")
@@ -404,7 +387,13 @@ WITH base AS (
   FROM {table} WHERE {nrm} > 0
 ), keyed0 AS (
   {keyed}
-){cap_cte}, cand AS (
+), keyed AS (
+  SELECT k.* FROM keyed0 k
+  JOIN (SELECT tbl, bucket, count(*) AS _c
+        FROM keyed0 GROUP BY tbl, bucket) s
+    ON k.tbl = s.tbl AND k.bucket = s.bucket
+  WHERE s._c <= {SRP_MAX_BUCKET}
+), cand AS (
   SELECT DISTINCT a.id AS id_a, b.id AS id_b
   FROM keyed a JOIN keyed b
     ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.id < b.id
@@ -412,7 +401,7 @@ WITH base AS (
 SELECT cand.id_a, cand.id_b, {q6cos} AS cosine
 FROM cand JOIN base va ON va.id = cand.id_a
           JOIN base vb ON vb.id = cand.id_b
-WHERE {q6cos} >= {threshold}
+WHERE {q6cos} >= {NEAR_DUP_COSINE}
 """
 
 
@@ -498,6 +487,14 @@ def ivf_assign(
     )
 
 
+# IVF shape shared by ``ivf_topk`` and its twin: seed IVF_CENTROIDS
+# lists, refine them with IVF_TRAIN_ITERS k-means steps (two, so the
+# driver row pins the iterative loop cross-engine, not one step), and
+# probe IVF_PROBE lists per query.
+IVF_CENTROIDS = 16
+IVF_PROBE = 4
+IVF_TRAIN_ITERS = 2
+
 # Fixed-point scale for k-means coordinate sums: each coordinate is
 # quantized to 1e-6 BEFORE summing, making the per-list sum an exact
 # int64 — order-independent (so both engines agree bit-for-bit with no
@@ -541,9 +538,8 @@ def ivf_train_centroids(
     id_col: str,
     vec_col: str,
     cents: list[tuple],
-    iters: int = 1,
 ) -> list[tuple]:
-    """``iters`` deterministic k-means (Lloyd) steps from ``cents``.
+    """``IVF_TRAIN_ITERS`` deterministic k-means (Lloyd) steps from ``cents``.
 
     Each step: map-side argmax assignment against the current literal
     centroids (no shuffle), then ONE n_centroids-key hash aggregate of
@@ -561,7 +557,7 @@ def ivf_train_centroids(
         F.col(vec_col).alias("_v"),
         F.sqrt(dot_expr(F.col(vec_col), F.col(vec_col))).alias("_n"),
     ).where(F.col("_n") > 0)
-    for _ in range(iters):
+    for _ in range(IVF_TRAIN_ITERS):
         asg = ivf_assign(corpus, id_col, vec_col, cents, out_id="n_id")
         joined = asg.join(base.select("n_id", "_v"), "n_id")
         agg = _ivf_sum_agg(joined, dim)
@@ -595,23 +591,20 @@ def ivf_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_iters: int = 1,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN top-k -> [q_id, n_id, cosine, rank].
+    """IVF (inverted-file) ANN top-``TOPK_K`` -> [q_id, n_id, cosine, rank].
 
     The coarse-quantizer scale path: every corpus vector is assigned to
     its nearest centroid once (the inverted lists), and a query scans
-    only its ``n_probe`` nearest lists — expected work per query is
-    n_probe/n_centroids of the corpus instead of all of it.
+    only its ``IVF_PROBE`` nearest lists — expected work per query is
+    IVF_PROBE/IVF_CENTROIDS of the corpus instead of all of it.
 
-    Centroids: deterministic smallest-id seeds refined by ``train_iters``
-    k-means steps (``ivf_train_centroids``; FP order pinned so the DuckDB
-    oracle derives bit-identical centroids and the driver check stays
-    exact). The trained set is embedded as plan LITERALS, so list
-    assignment is one genuinely map-side projection over the corpus scan
+    Centroids: deterministic smallest-id seeds refined by
+    ``IVF_TRAIN_ITERS`` k-means steps (``ivf_train_centroids``; FP order
+    pinned so the DuckDB oracle derives bit-identical centroids and the
+    driver check stays exact). The trained set is embedded as plan
+    LITERALS, so list assignment is one genuinely map-side projection
+    over the corpus scan
     (``ivf_assign``: per-row ``array_max`` over (sim, -idx, cent_id)
     structs — no shuffle, no window; the same shape language_id uses,
     operators/text.py). Probing joins the small probe side broadcast, so
@@ -624,15 +617,12 @@ def ivf_topk(
     """
     nrm = lambda v: F.sqrt(dot_expr(v, v))  # noqa: E731
 
-    cents = ivf_seed_centroids(corpus, id_col, vec_col, n_centroids)
-    if train_iters:
-        cents = ivf_train_centroids(
-            corpus, id_col, vec_col, cents, iters=train_iters
-        )
+    cents = ivf_seed_centroids(corpus, id_col, vec_col, IVF_CENTROIDS)
+    cents = ivf_train_centroids(corpus, id_col, vec_col, cents)
 
     lists = ivf_assign(corpus, id_col, vec_col, cents, out_id="n_id")
     probes = ivf_assign(
-        queries, id_col, vec_col, cents, out_id="q_id", n_probe=n_probe
+        queries, id_col, vec_col, cents, out_id="q_id", n_probe=IVF_PROBE
     )
     cand = lists.join(F.broadcast(probes), "cent_id").where(
         F.col("q_id") != F.col("n_id")
@@ -656,7 +646,7 @@ def ivf_topk(
         .join(cv, "n_id")
         .select("q_id", "n_id", cos.alias("cosine"))
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOPK_K)
     )
 
 
@@ -665,10 +655,6 @@ def ivf_topk_oracle_sql(
     queries_sql: str,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    train_iters: int = 1,
 ) -> str:
     """DuckDB twin of ``ivf_topk`` — derives the SAME seed + k-means
     trained centroids (fixed-point int64 coordinate sums, exact integer
@@ -690,7 +676,7 @@ def ivf_topk_oracle_sql(
         f"(a, b) -> a + b) AS DOUBLE) / {float(IVF_COORD_SCALE)}) / m.cnt"
     )
     train_ctes = []
-    for i in range(train_iters):
+    for i in range(IVF_TRAIN_ITERS):
         cur = f"cents{i}"
         train_ctes.append(f"""asg{i} AS (
   SELECT n_id, cent_id FROM (
@@ -711,8 +697,8 @@ def ivf_topk_oracle_sql(
 ), cents{i + 1} AS (
   SELECT cent_id, cv, sqrt({dot_sql('cv', 'cv')}) AS cn FROM craw{i + 1}
 )""")
-    train_sql = (", " + ", ".join(train_ctes)) if train_ctes else ""
-    final = f"cents{train_iters}"
+    train_sql = ", " + ", ".join(train_ctes)
+    final = f"cents{IVF_TRAIN_ITERS}"
     sim = assign_sim(final)
     dot = dot_sql("qv.qv", "cv.cv")
     q6cos = TH.q6_sql(f"{dot} / (qv.qn * cv.cn)")
@@ -722,7 +708,7 @@ WITH cents0 AS (
          list_transform({vec_col}, x -> CAST(x AS DOUBLE)) AS cv,
          {nrm} AS cn
   FROM {corpus_table} WHERE {nrm} > 0
-  ORDER BY cent_id LIMIT {n_centroids}
+  ORDER BY cent_id LIMIT {IVF_CENTROIDS}
 ), cbase AS (
   SELECT {id_col} AS n_id, {vec_col} AS _v, {nrm} AS _n
   FROM {corpus_table} WHERE {nrm} > 0
@@ -742,7 +728,7 @@ WITH cents0 AS (
       row_number() OVER (PARTITION BY b.q_id
         ORDER BY {sim} DESC, c.cent_id ASC) AS _r
     FROM qbase b, {final} c
-  ) WHERE _r <= {n_probe}
+  ) WHERE _r <= {IVF_PROBE}
 ), cand AS (
   SELECT p.q_id, l.n_id FROM probes p JOIN lists l USING (cent_id)
   WHERE p.q_id <> l.n_id
@@ -754,5 +740,5 @@ SELECT q_id, n_id, cosine, rank FROM (
       ORDER BY {q6cos} DESC, cand.n_id ASC) AS rank
   FROM cand JOIN qv ON qv.q_id = cand.q_id
             JOIN cv ON cv.n_id = cand.n_id
-) WHERE rank <= {k}
+) WHERE rank <= {TOPK_K}
 """

@@ -13,12 +13,16 @@ sandbox ships no Iceberg jar, so the default backend is a Parquet
 directory per stage plus a ``_MANIFEST.json`` standing in for snapshot
 metadata. The pipeline code is backend-agnostic: one ``StageStore`` API.
 
-Resume semantics: a stage is *committed* iff its manifest exists AND its
-``config_hash`` matches the current run's. ``run_stage(name, build)``
-skips the build entirely for committed stages and returns a scan of the
-stored output — so a restarted driver replays only uncommitted stages,
-and a config change invalidates downstream stages automatically (the
-hash covers the stage config + all upstream stage hashes = lineage).
+Resume semantics: a stage is *committed* iff its manifest exists, parses,
+AND its ``config_hash`` matches the current run's. The manifest is
+written atomically (:func:`write_atomic`), so a crash mid-write leaves
+the previous manifest or none, never a torn one; a manifest that still
+does not parse counts as absent and the stage is rebuilt.
+``run_stage(name, build)`` skips the build entirely for committed stages
+and returns a scan of the stored output — so a restarted driver replays
+only uncommitted stages, and a config change invalidates downstream
+stages automatically (the hash covers the stage config + all upstream
+stage hashes = lineage).
 
 Per-partition progress: the manifest records per-Spark-partition row
 counts (``partitions``), captured with ``spark_partition_id()`` in the
@@ -39,6 +43,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "_MANIFEST.json"
+
+
+def write_atomic(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` so readers see the old file or the whole
+    new one: write a temp file in the same directory, then ``os.replace``
+    (atomic within one filesystem)."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def _config_hash(payload) -> str:
@@ -100,11 +114,15 @@ class StageStore:
     # -- manifest ----------------------------------------------------------
 
     def manifest(self, stage: str) -> dict | None:
+        """The stage's manifest, or None if it is absent or unparseable."""
         path = self._manifest_path(stage)
-        if os.path.exists(path):
-            with open(path) as f:
+        if not os.path.exists(path):
+            return None
+        with open(path) as f:
+            try:
                 return json.load(f)
-        return None
+            except json.JSONDecodeError:
+                return None
 
     def is_committed(self, stage: str, config_hash: str) -> bool:
         m = self.manifest(stage)
@@ -140,8 +158,10 @@ class StageStore:
             "written_at_epoch_s": round(t0, 3),
             "write_seconds": round(time.time() - t0, 3),
         }
-        with open(self._manifest_path(stage), "w") as f:
-            json.dump(manifest, f, indent=1, sort_keys=True)
+        write_atomic(
+            self._manifest_path(stage),
+            json.dumps(manifest, indent=1, sort_keys=True),
+        )
         return out
 
     def read(self, stage: str) -> DataFrame:

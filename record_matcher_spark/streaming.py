@@ -78,6 +78,7 @@ from record_matcher_spark.datagen import TRANSCRIPT_SCHEMA
 from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.incremental import apply_merges, match_increment
 from record_matcher_spark.operators.rollup import rollup_conversations
+from record_matcher_spark.sources.checkpoints import write_atomic
 
 _DIR_RE = re.compile(r"^g(\d{4})_b(\d{8})$")
 _COMMIT = "_COMMIT"
@@ -245,8 +246,9 @@ class TranscriptStreamMatcher:
         conversations.write.parquet(os.path.join(d, "conversations"))
         assignments.write.parquet(os.path.join(d, "assignments"))
         merges.write.parquet(os.path.join(d, "merges"))
-        with open(os.path.join(d, _COMMIT), "w") as f:
-            json.dump({"batch_id": batch_id}, f)
+        write_atomic(
+            os.path.join(d, _COMMIT), json.dumps({"batch_id": batch_id})
+        )
 
     # -- lifecycle ------------------------------------------------------
 
@@ -367,8 +369,10 @@ class TranscriptStreamMatcher:
             )
         cur = self.state()
         offset = cur.batch_id + 1 if cur is not None else 0
-        with open(path, "w") as f:
-            json.dump({"checkpoint_dir": norm, "batch_id_offset": offset}, f)
+        write_atomic(
+            path,
+            json.dumps({"checkpoint_dir": norm, "batch_id_offset": offset}),
+        )
         return offset
 
     def start(
@@ -376,17 +380,18 @@ class TranscriptStreamMatcher:
         input_path: str,
         checkpoint_dir: str,
         *,
-        max_files_per_trigger: int | None = None,
         rebind_checkpoint: bool = False,
     ):
         """Launch the stream: parquet file source of turn rows
         (``datagen.TRANSCRIPT_SCHEMA``) → foreachBatch sink.
 
         The query runs with the ``availableNow`` trigger: it drains
-        everything currently in ``input_path`` and stops — the
-        incremental-backfill mode. Any other trigger or source (Kafka,
-        Iceberg CDC) works by building the reader and writer yourself and
-        handing :meth:`process_batch` to ``foreachBatch``.
+        everything currently in ``input_path`` as one micro-batch and
+        stops — the incremental-backfill mode. A later ``start`` on the
+        same checkpoint folds only the files added since. Any other
+        trigger or source (Kafka, Iceberg CDC) works by building the
+        reader and writer yourself and handing :meth:`process_batch` to
+        ``foreachBatch``.
 
         ``rebind_checkpoint``: allow a NEW checkpoint dir against existing
         state (see :meth:`_bind_checkpoint` — batch numbering continues,
@@ -400,12 +405,9 @@ class TranscriptStreamMatcher:
             if os.path.exists(stream_file):
                 os.remove(stream_file)
         offset = self._bind_checkpoint(checkpoint_dir)
-        reader = self.spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option(
-                "maxFilesPerTrigger", int(max_files_per_trigger)
-            )
-        stream = reader.parquet(input_path)
+        stream = self.spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(
+            input_path
+        )
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             self.process_batch(batch_df, int(batch_id) + offset)

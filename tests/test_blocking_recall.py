@@ -86,9 +86,8 @@ def test_default_keys_recall_under_heavy_case_noise(spark):
         # ~0.84 here; the case-folded default must hold the higher bar
         assert r_default >= 0.88, r_default
 
-        cs = (minhash_band_keys(16, 4, max_block_size=256,
-                                hashes_column="tok_hashes"),)
-        lc = (minhash_band_keys(16, 4, max_block_size=256),)
+        cs = (minhash_band_keys(hashes_column="tok_hashes"),)
+        lc = (minhash_band_keys(),)
         r_cs = _recall(conv, tp, n_truth, cs)
         r_lc = _recall(conv, tp, n_truth, lc)
         # the ordering that motivated the fix: case-folded minhash alone

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from record_matcher_spark.datagen import generate_transcripts
@@ -82,3 +84,29 @@ def test_pipeline_resume_identical_clusters(spark, tmp_path):
 
     f1 = pairwise_f1(res2.clusters, truth, res2.candidates)
     assert f1["f1"] >= 0.99
+
+
+def test_truncated_manifest_rebuilds(spark, tmp_path):
+    """A manifest cut short (a crash mid-write on a store that did not
+    write it atomically) counts as no manifest: the stage is rebuilt
+    instead of failing to parse on resume."""
+    store = StageStore(spark, str(tmp_path), run_id="r4")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(4)
+
+    store.run_stage("s", build, config={"k": 1})
+    path = store._manifest_path("s")
+    with open(path) as f:
+        text = f.read()
+    with open(path, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert store.manifest("s") is None
+
+    store2 = StageStore(spark, str(tmp_path), run_id="r4")
+    assert store2.run_stage("s", build, config={"k": 1}).count() == 4
+    assert calls == [1, 1]
+    assert store2.manifest("s")["row_count"] == 4
+    assert sorted(os.listdir(store2._dir("s"))) == ["_MANIFEST.json", "data"]

@@ -68,25 +68,22 @@ def assert_frames_equal(sdf, duck_df, sort_cols):
 
 
 def test_minhash_lsh_pairs(docs, duck):
-    got = dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3)
+    got = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
     want = duck.sql(
-        dedup.minhash_lsh_pairs_oracle_sql(
-            "documents", "doc_id", "text", threshold=0.3
-        )
+        dedup.minhash_lsh_pairs_oracle_sql("documents", "doc_id", "text")
     ).df()
     assert_frames_equal(got, want, ["id_a", "id_b"])
     assert len(want) > 0, "fixture should contain near-dup candidates"
 
 
-def test_minhash_recall_on_planted_dups(spark, docs):
+def test_minhash_recall_on_planted_dups(spark, docs, monkeypatch):
     """Exact duplicates (jaccard 1.0) must always collide in every band."""
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(dedup, "MINHASH_THRESHOLD", 0.999)
     dup = docs.select((F.col("doc_id") + 10000).alias("doc_id"), "text")
     both = docs.select("doc_id", "text").unionByName(dup)
-    pairs = dedup.minhash_lsh_pairs(
-        both, "doc_id", "text", threshold=0.999
-    )
+    pairs = dedup.minhash_lsh_pairs(both, "doc_id", "text")
     planted = pairs.where(
         F.col("id_b") - F.col("id_a") == 10000
     ).count()
@@ -94,21 +91,17 @@ def test_minhash_recall_on_planted_dups(spark, docs):
 
 
 def test_simhash_pairs(docs, duck):
-    got = dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
+    got = dedup.simhash_pairs(docs, "doc_id", "text")
     want = duck.sql(
-        dedup.simhash_pairs_oracle_sql("documents", "doc_id", "text", 3)
+        dedup.simhash_pairs_oracle_sql("documents", "doc_id", "text")
     ).df()
     assert_frames_equal(got, want, ["id_a", "id_b"])
 
 
 def test_ngram_jaccard_pairs(docs, duck):
-    got = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.55, block_col="lang"
-    )
+    got = dedup.ngram_jaccard_pairs(docs, "doc_id", "text")
     want = duck.sql(
-        dedup.ngram_jaccard_pairs_oracle_sql(
-            "documents", "doc_id", "text", 0.55, "lang"
-        )
+        dedup.ngram_jaccard_pairs_oracle_sql("documents", "doc_id", "text")
     ).df()
     assert_frames_equal(got, want, ["id_a", "id_b"])
 
@@ -139,27 +132,24 @@ def test_simhash_band_blocks_bounded(spark, docs):
     assert max_block <= max(8, n_docs // 8), (max_block, n_docs)
 
 
-def test_ngram_bucket_slop_catches_boundary_pairs(spark, duck):
+def test_ngram_bucket_slop_catches_boundary_pairs(spark, duck, monkeypatch):
     """A near-dup pair straddling a power-of-2 length boundary (len 63 vs
     66) must be found — pinned against the pre-slop plan which silently
     missed it — and Spark must agree with the oracle exactly."""
+    monkeypatch.setattr(dedup, "NGRAM_THRESHOLD", 0.5)
     base = "abcdefghij klmnopqrst uvwxyz0123 ABCDEFGHIJ KLMNOPQRST uvw"
     assert len(base) == 58  # bucket 5
     longer = base + " tailcoda"  # 67 chars -> bucket 6
     rows = [(1, base, "en"), (2, longer, "en"), (3, "zz 99 xx", "en")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.5, block_col="lang"
-    ).toPandas()
+    got = dedup.ngram_jaccard_pairs(df, "doc_id", "text").toPandas()
     assert set(zip(got.id_a, got.id_b)) == {(1, 2)}
     con = duckdb.connect()
     con.register("boundary_docs", pd.DataFrame(
         rows, columns=["doc_id", "text", "lang"]
     ))
     want = con.sql(
-        dedup.ngram_jaccard_pairs_oracle_sql(
-            "boundary_docs", "doc_id", "text", 0.5, "lang"
-        )
+        dedup.ngram_jaccard_pairs_oracle_sql("boundary_docs", "doc_id", "text")
     ).df()
     assert_frames_equal(
         spark.createDataFrame(got) if len(got) else spark.createDataFrame(
@@ -170,34 +160,31 @@ def test_ngram_bucket_slop_catches_boundary_pairs(spark, duck):
     )
 
 
-def test_ngram_block_cap_drops_hot_group(spark, duck):
-    """max_block_size drops over-cap (block, bucket) groups from both
+def test_ngram_block_cap_drops_hot_group(spark, duck, monkeypatch):
+    """NGRAM_MAX_BLOCK drops over-cap (block, bucket) groups from both
     sides — engine and oracle replicate the same cap rule."""
+    monkeypatch.setattr(dedup, "NGRAM_THRESHOLD", 0.3)
+    monkeypatch.setattr(dedup, "NGRAM_MAX_BLOCK", 10)
     hot = [(i, f"hot text variant {i % 4} padding words", "en")
            for i in range(30)]
     cold = [(100, "cold pair text one two three", "de"),
             (101, "cold pair text one two four", "de")]
     rows = hot + cold
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    got = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.3, block_col="lang",
-        max_block_size=10,
-    ).toPandas()
+    got = dedup.ngram_jaccard_pairs(df, "doc_id", "text").toPandas()
     # the 30-doc hot (en, bucket) group exceeds the cap: no hot pairs
     assert (got.id_a >= 100).all() and set(zip(got.id_a, got.id_b)) == {(100, 101)}
     con = duckdb.connect()
     con.register("cap_docs", pd.DataFrame(rows, columns=["doc_id", "text", "lang"]))
     want = con.sql(
-        dedup.ngram_jaccard_pairs_oracle_sql(
-            "cap_docs", "doc_id", "text", 0.3, "lang", max_block_size=10
-        )
+        dedup.ngram_jaccard_pairs_oracle_sql("cap_docs", "doc_id", "text")
     ).df()
     assert len(want) == len(got) == 1
 
 
 def test_cosine_topk(embs, duck):
     got = similarity.cosine_topk(
-        embs, embs.where("vec_id < 10"), "vec_id", "embedding", k=5
+        embs, embs.where("vec_id < 10"), "vec_id", "embedding"
     )
     want = duck.sql(
         similarity.cosine_topk_oracle_sql(
@@ -205,7 +192,6 @@ def test_cosine_topk(embs, duck):
             "SELECT * FROM embeddings WHERE vec_id < 10",
             "vec_id",
             "embedding",
-            k=5,
         )
     ).df()
     assert_frames_equal(got, want, ["q_id", "rank"])
@@ -213,7 +199,7 @@ def test_cosine_topk(embs, duck):
 
 def test_srp_lsh_topk_and_recall(embs, duck):
     got = similarity.srp_lsh_topk(
-        embs, embs.where("vec_id < 10"), "vec_id", "embedding", k=5
+        embs, embs.where("vec_id < 10"), "vec_id", "embedding"
     )
     want = duck.sql(
         similarity.srp_lsh_topk_oracle_sql(
@@ -221,15 +207,14 @@ def test_srp_lsh_topk_and_recall(embs, duck):
             "SELECT * FROM embeddings WHERE vec_id < 10",
             "vec_id",
             "embedding",
-            k=5,
         )
     ).df()
     assert_frames_equal(got, want, ["q_id", "rank"])
     # ANN sanity: bucketed top-1 should agree with exact top-1 for most
     # queries (SRP with 8 planes on clustered vectors).
     exact = similarity.cosine_topk(
-        embs, embs.where("vec_id < 10"), "vec_id", "embedding", k=1
-    ).toPandas()
+        embs, embs.where("vec_id < 10"), "vec_id", "embedding"
+    ).where("rank = 1").toPandas()
     ann = got.toPandas()
     ann1 = ann[ann["rank"] == 1][["q_id", "n_id"]]
     merged = exact[["q_id", "n_id"]].merge(
@@ -240,23 +225,15 @@ def test_srp_lsh_topk_and_recall(embs, duck):
 
 
 def test_srp_lsh_pairs_parity_and_recall(embs, duck):
-    got = similarity.srp_lsh_pairs(
-        embs, "vec_id", "embedding", threshold=0.35, max_bucket_size=200
-    )
+    got = similarity.srp_lsh_pairs(embs, "vec_id", "embedding")
     want = duck.sql(
-        similarity.srp_lsh_pairs_oracle_sql(
-            "embeddings",
-            "vec_id",
-            "embedding",
-            threshold=0.35,
-            max_bucket_size=200,
-        )
+        similarity.srp_lsh_pairs_oracle_sql("embeddings", "vec_id", "embedding")
     ).df()
     assert_frames_equal(got, want, ["id_a", "id_b"])
     # Recall vs the exact (brute-force) pair set: multi-table SRP on the
     # clustered test vectors should surface most true pairs.
     exact = (
-        dedup.embedding_near_dup(embs, "vec_id", "embedding", threshold=0.35)
+        dedup.embedding_near_dup(embs, "vec_id", "embedding")
         .select("id_a", "id_b")
         .toPandas()
     )
@@ -271,8 +248,7 @@ def test_srp_lsh_pairs_parity_and_recall(embs, duck):
 
 def test_ivf_topk_parity_and_recall(embs, duck):
     got = similarity.ivf_topk(
-        embs, embs.where("vec_id < 10"), "vec_id", "embedding",
-        k=5, n_centroids=16, n_probe=4,
+        embs, embs.where("vec_id < 10"), "vec_id", "embedding"
     )
     want = duck.sql(
         similarity.ivf_topk_oracle_sql(
@@ -280,15 +256,14 @@ def test_ivf_topk_parity_and_recall(embs, duck):
             "SELECT * FROM embeddings WHERE vec_id < 10",
             "vec_id",
             "embedding",
-            k=5, n_centroids=16, n_probe=4,
         )
     ).df()
     assert_frames_equal(got, want, ["q_id", "rank"])
     # probing 4/16 lists on clustered vectors should still find the exact
     # top-1 for most queries
     exact = similarity.cosine_topk(
-        embs, embs.where("vec_id < 10"), "vec_id", "embedding", k=1
-    ).toPandas()
+        embs, embs.where("vec_id < 10"), "vec_id", "embedding"
+    ).where("rank = 1").toPandas()
     ivf1 = got.where("rank = 1").toPandas()[["q_id", "n_id"]]
     merged = exact[["q_id", "n_id"]].merge(
         ivf1, on="q_id", suffixes=("_exact", "_ivf")
@@ -297,12 +272,16 @@ def test_ivf_topk_parity_and_recall(embs, duck):
     assert agree >= 0.5, f"IVF top-1 agreement too low: {agree}"
 
 
-def test_ivf_topk_parity_two_train_iters(embs, duck):
-    """Exercises the iterative k-means CTE chain (train_iters=2): both
-    engines must derive bit-identical second-generation centroids."""
+def test_ivf_topk_parity_two_train_iters(embs, duck, monkeypatch):
+    """Exercises the iterative k-means CTE chain (IVF_TRAIN_ITERS = 2) at
+    a second geometry (top-3, 8 lists, 3 probes): both engines must
+    derive bit-identical second-generation centroids."""
+    monkeypatch.setattr(similarity, "TOPK_K", 3)
+    monkeypatch.setattr(similarity, "IVF_CENTROIDS", 8)
+    monkeypatch.setattr(similarity, "IVF_PROBE", 3)
+    assert similarity.IVF_TRAIN_ITERS == 2
     got = similarity.ivf_topk(
-        embs, embs.where("vec_id < 5"), "vec_id", "embedding",
-        k=3, n_centroids=8, n_probe=3, train_iters=2,
+        embs, embs.where("vec_id < 5"), "vec_id", "embedding"
     )
     want = duck.sql(
         similarity.ivf_topk_oracle_sql(
@@ -310,22 +289,19 @@ def test_ivf_topk_parity_two_train_iters(embs, duck):
             "SELECT * FROM embeddings WHERE vec_id < 5",
             "vec_id",
             "embedding",
-            k=3, n_centroids=8, n_probe=3, train_iters=2,
         )
     ).df()
     assert_frames_equal(got, want, ["q_id", "rank"])
 
 
 def test_near_dup_clusters_parity(docs, duck):
-    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.3)
+    pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
     got = dedup.near_dup_clusters(docs, "doc_id", pairs)
     want = duck.sql(
         dedup.near_dup_clusters_oracle_sql(
             "documents",
             "doc_id",
-            dedup.minhash_lsh_pairs_oracle_sql(
-                "documents", "doc_id", "text", threshold=0.3
-            ),
+            dedup.minhash_lsh_pairs_oracle_sql("documents", "doc_id", "text"),
         )
     ).df()
     assert_frames_equal(got, want, ["id"])

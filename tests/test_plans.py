@@ -52,7 +52,7 @@ def test_session_stats_single_shuffle_no_window(spark):
     from record_matcher_spark.operators.sessions import session_stats
 
     ev = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
-    plan = _plan(session_stats(ev, "user_id", "ts"))
+    plan = _plan(session_stats(ev))
     assert plan.count("Exchange hashpartitioning") <= 2, plan
     assert "Window" not in plan
 

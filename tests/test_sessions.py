@@ -7,11 +7,21 @@ import datetime
 import os
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from record_matcher_spark.operators import sessions
 from record_matcher_spark.operators.sessions import session_stats, sessionize
 
 GAP_S = 3600  # 1h sessions for the hand-built fixtures
+
+
+@pytest.fixture
+def gap_1h(monkeypatch):
+    """Both operators read sessions.GAP_SECONDS at call time."""
+    monkeypatch.setattr(sessions, "GAP_SECONDS", GAP_S)
+    return monkeypatch
+
 
 _SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double"
 
@@ -45,8 +55,8 @@ def _events(spark):
     return spark.createDataFrame(rows, _SCHEMA)
 
 
-def test_sessionize_labels(spark):
-    out = sessionize(_events(spark), gap_seconds=GAP_S)
+def test_sessionize_labels(spark, gap_1h):
+    out = sessionize(_events(spark))
     got = {
         r["event_id"]: (r["user_id"], r["session_idx"], r["session_id"])
         for r in out.collect()
@@ -62,16 +72,16 @@ def test_sessionize_labels(spark):
     }
 
 
-def test_session_stats_matches_sessionize(spark):
+def test_session_stats_matches_sessionize(spark, gap_1h):
     """The native session_window path groups events identically to the
     lag-formulation labels, and the aggregates are right."""
     ev = _events(spark)
     stats = {
         (r["user_id"], r["session_start_epoch"]): r
-        for r in session_stats(ev, gap_seconds=GAP_S).collect()
+        for r in session_stats(ev).collect()
     }
     lab = (
-        sessionize(ev, gap_seconds=GAP_S)
+        sessionize(ev)
         .groupBy("user_id", "session_idx")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -120,26 +130,25 @@ def test_session_stats_duckdb_differential(spark):
     assert s_rows == d_rows and len(s_rows) > 0
 
 
-def test_sessionize_split_matches_unsplit(spark):
+def test_sessionize_split_matches_unsplit(spark, gap_1h):
     """Heavy-user split (split_bucket_seconds) must produce IDENTICAL
     labels to the single-window path — on the hand-built boundary
     fixtures for several bucket widths (including widths smaller than
-    the gap and widths that slice sessions mid-run) and on the real
-    events table."""
+    the gap and widths that slice sessions mid-run, with a 1h gap) and
+    on the real events table (the 12h gap)."""
     ev = _events(spark)
     want = {
         r["event_id"]: (r["session_idx"], r["session_id"])
-        for r in sessionize(ev, gap_seconds=GAP_S).collect()
+        for r in sessionize(ev).collect()
     }
     for bucket_s in (60, 1800, GAP_S, 2 * GAP_S, 86400):
         got = {
             r["event_id"]: (r["session_idx"], r["session_id"])
-            for r in sessionize(
-                ev, gap_seconds=GAP_S, split_bucket_seconds=bucket_s
-            ).collect()
+            for r in sessionize(ev, split_bucket_seconds=bucket_s).collect()
         }
         assert got == want, (bucket_s, got, want)
 
+    gap_1h.undo()
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     a = sessionize(events).select("event_id", "session_id")
     b = sessionize(events, split_bucket_seconds=86400).select(
@@ -148,7 +157,7 @@ def test_sessionize_split_matches_unsplit(spark):
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
-def test_sessionize_split_bounds_heavy_user_partitions(spark):
+def test_sessionize_split_bounds_heavy_user_partitions(spark, gap_1h):
     """One user owning ~50% of all events: with the split, no
     (user, bucket) window partition holds more than one bucket's worth
     of that user's events — the skew bound the 100 TB design needs."""
@@ -165,7 +174,7 @@ def test_sessionize_split_bounds_heavy_user_partitions(spark):
         )
     ev = spark.createDataFrame(rows, _SCHEMA)
     bucket_s = 6 * 3600  # 6h buckets -> 360 events per bucket for u1
-    out = sessionize(ev, gap_seconds=GAP_S, split_bucket_seconds=bucket_s)
+    out = sessionize(ev, split_bucket_seconds=bucket_s)
     # labels: user 1 events are 1 min apart -> one giant session
     u1 = out.where("user_id = 1")
     assert u1.select("session_idx").distinct().count() == 1

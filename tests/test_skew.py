@@ -43,14 +43,16 @@ def _key(cap):
 def test_hot_block_dropped_cold_blocks_kept(spark):
     df = _skewed_df(spark)
     persisted = []
-    pairs = candidate_pairs(df, None, [_key(CAP)], persisted=persisted)
+    pairs = candidate_pairs(
+        df, df, [_key(CAP)], persisted=persisted
+    ).where("x_id < y_id")
     # capped: only the cold blocks pair up — C(4,2)=6 unordered pairs each
     assert pairs.count() == N_COLD_KEYS * (COLD_SZ * (COLD_SZ - 1) // 2)
 
     # control: uncapped includes the hot block's quadratic blow-up
     pairs_uncapped = candidate_pairs(
-        df, None, [_key(None)], persisted=persisted
-    )
+        df, df, [_key(None)], persisted=persisted
+    ).where("x_id < y_id")
     assert pairs_uncapped.count() == (
         N_COLD_KEYS * (COLD_SZ * (COLD_SZ - 1) // 2)
         + N_HOT * (N_HOT - 1) // 2

@@ -17,22 +17,20 @@ _COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
 def test_stream_drain_equals_batch_pipeline(spark, tmp_path):
-    """Drain a 3-file parquet stream (one micro-batch per file) and check
+    """Stream 3 parquet files into one source, one file per ``start()``
+    run on the same checkpoint (so one micro-batch per file), and check
     the final clusters equal one full-batch run, as a partition of
     conv_ids — on the wide-margin corpus the fold order cannot matter."""
     t = _closed_corpus(spark, n=15)
     v = F.regexp_extract("conv_id", r"_v(\d+)$", 1).cast("long")
     src = os.path.join(str(tmp_path), "incoming")
-    for i in range(3):
-        t.where(v % 3 == i).coalesce(1).write.mode("append").parquet(src)
+    ckpt = os.path.join(str(tmp_path), "ckpt")
 
     m = TranscriptStreamMatcher(spark, os.path.join(str(tmp_path), "state"))
-    q = m.start(
-        src,
-        os.path.join(str(tmp_path), "ckpt"),
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(300)
+    for i in range(3):
+        t.where(v % 3 == i).coalesce(1).write.mode("append").parquet(src)
+        m.start(src, ckpt).awaitTermination(300)
+        assert m.state().batch_id == i
 
     st = m.state()
     assert st is not None and st.n_batches == 3 and st.generation == 0

@@ -23,6 +23,7 @@ from record_matcher_spark.datagen import (
 )
 from record_matcher_spark.errors import InvalidConfigError
 from record_matcher_spark.functions.scorers import _token_hashes_prep
+from record_matcher_spark.operators import blocking
 from record_matcher_spark.operators.blocking import minhash_band_keys
 from record_matcher_spark.operators.cluster import connected_components
 from record_matcher_spark.operators.rollup import rollup_conversations
@@ -77,16 +78,19 @@ def test_tok_hashes_match_full_text_tokenization(spark):
     assert bad.count() == 0, bad.limit(3).collect()
 
 
-def test_minhash_lowercase_family_distinct_from_raw(spark):
+def test_minhash_lowercase_family_distinct_from_raw(spark, monkeypatch):
     """The case-folded family (tok_hashes_lower, the default) gives two
     conversations that differ only in case the same keys; the
     case-sensitive family (tok_hashes) gives them different keys —
-    pinning that the two hashes_columns are different normalizations."""
+    pinning that the two hashes_columns are different normalizations.
+    Run at an 8x2 geometry: two wide bands."""
+    monkeypatch.setattr(blocking, "MINHASH_HASHES", 8)
+    monkeypatch.setattr(blocking, "MINHASH_BANDS", 2)
     df = _one_turn_convs(
         spark, {"a": "alpha beta gamma", "b": "Alpha beta gamma"}
     )
-    lo = minhash_band_keys(8, 2).keyed(df, "conv_id")
-    raw = minhash_band_keys(8, 2, hashes_column="tok_hashes").keyed(
+    lo = minhash_band_keys().keyed(df, "conv_id")
+    raw = minhash_band_keys(hashes_column="tok_hashes").keyed(
         df, "conv_id"
     )
     lo_keys = {(r["_id"], r["_k"]) for r in lo.collect()}
@@ -178,7 +182,7 @@ def test_minhash_hashes_column_type_validated(spark):
     df = spark.createDataFrame(
         rows, ["id", "full_text", "tok_hashes_lower"]
     )  # array<string>, not array<long>
-    key = minhash_band_keys(8, 2)
+    key = minhash_band_keys()
     with pytest.raises(TypeError, match="array<bigint>"):
         key.keyed(df, "id")
 
@@ -188,7 +192,7 @@ def test_minhash_hashes_column_missing_raises(spark):
     never tokenizes text itself."""
     df = spark.createDataFrame([("a", "alpha beta")], ["id", "full_text"])
     with pytest.raises(ValueError, match="tok_hashes_lower"):
-        minhash_band_keys(8, 2).keyed(df, "id")
+        minhash_band_keys().keyed(df, "id")
 
 
 def test_prepped_column_absent_raises(spark):

@@ -293,16 +293,17 @@ def test_block_cap_bounds_hot_block(spark):
     df = spark.createDataFrame(rows, "conv_id string, shape string")
     key = BlockingKey("shape", lambda d: F.col("shape"), max_block_size=64)
     persisted = []
-    cand = candidate_pairs(df, df, [key], dedup_mode=True, persisted=persisted)
-    pairs = cand.collect()
+    cand = candidate_pairs(df, df, [key], persisted=persisted)
+    pairs = cand.where("x_id < y_id").collect()
     # hot block (500 rows -> would be 124,750 pairs) must contribute none
     assert all(a.startswith("c") and b.startswith("c") for a, b in map(tuple, pairs))
     # cold blocks of 3 -> 3 unordered pairs each
     assert len(pairs) == 60
     # uncapped control: the same key without a cap explodes combinatorially
     uncapped = BlockingKey("shape", lambda d: F.col("shape"))
-    n_uncapped = candidate_pairs(df, df, [uncapped], dedup_mode=True,
-                                 persisted=persisted).count()
+    n_uncapped = candidate_pairs(
+        df, df, [uncapped], persisted=persisted
+    ).where("x_id < y_id").count()
     for d in persisted:
         d.unpersist()
     assert n_uncapped == 124_750 + 60
